@@ -71,24 +71,6 @@ def _wrap(fn: QueryFn) -> QueryFn:
 
 
 _QUERIES: dict[str, QueryFn] = {
-    # ROTATION CONTRACT (registration order = driver-budget priority;
-    # the driver's correctness budget covers a ~50-slot prefix per
-    # round). Round-13 order, per VERDICT r12 ask #1 ("lead the
-    # prefix with the 35 r08-stale rows, cap new registrations
-    # <=10"):
-    # 1. slots 1-35: the 35 queries whose newest driver row is r08
-    #    (five rounds old — the staleness floor), in
-    #    tools/staleness.py --target 13 --order sequence order.
-    # 2. the r13 NEW/CHANGED block is inserted immediately after
-    #    (cap <=10): see the "r13 NEW/CHANGED" marker below.
-    # 3. remaining prefix slots: the oldest r09-banked rows (49
-    #    total; ~10 fit this round, the rest lead the r14 rotation
-    #    per VERDICT r12 ask #7).
-    # 4. then r10-, r11-, r12-banked blocks oldest-first, prior
-    #    relative order preserved, so next round's --order is close
-    #    to the identity on this layout.
-    # Validated by tools/check_oracles.py (driver-exact) at sf0.001 +
-    # sf0.01 and tools/staleness.py --target 13 --check 25.
     # NOTE (declared contract caveat, ADVICE r04/r06): q_ann_lsh runs
     # one bounded 1-row Spark job at plan-BUILD time (query-vector
     # fetch that plans its literal bucket predicate), q_bucketed_join
@@ -104,9 +86,6 @@ _QUERIES: dict[str, QueryFn] = {
     # contract queries, order_stat, and bloom_semi_join are
     # intercepted by the lazy plan twins in plans/analysis.py for the
     # analysis tools).
-
-    # --- 1. newest driver row is r08 (staleness-floor refresh:
-    # these 35 lead the prefix, VERDICT r12 ask #1) ---
     "tpch_q14": TQ.q_tpch_q14,
     "tpch_q18": TQ.q_tpch_q18,
     "tpch_q7": TQ.q_tpch_q7,
@@ -142,33 +121,27 @@ _QUERIES: dict[str, QueryFn] = {
     "tpch_q2": TQ.q_tpch_q2,
     "tpch_q9": TQ.q_tpch_q9,
     "tpch_q20": TQ.q_tpch_q20,
-
-    # --- r13 NEW/CHANGED block (cap <=10) ---
-    # NEW quality_classifier (VERDICT r12 ask #3): fastText-style
-    # linear quality scorer — hashed unigram+bigram features (4096
-    # shared buckets, md5-prefix convention), closed-form multinomial-
-    # NB log-count-ratio weights fit on the deterministic md5-bucket
-    # labeled slice, decimal-routed scoring.
+    # quality_classifier: fastText-style linear quality scorer —
+    # hashed unigram+bigram features (4096 shared buckets, md5-prefix
+    # convention), closed-form multinomial-NB log-count-ratio weights
+    # fit on the deterministic md5-bucket labeled slice, decimal-routed
+    # scoring.
     "quality_classifier": TX.q_quality_classifier,
-    # NEW decontaminate_semantic (VERDICT r12 ask #4): the embedding
-    # tier of decontamination — train vectors probing the broadcast
-    # eval sign-LSH band index, candidates exact-cosine verified.
+    # decontaminate_semantic: the embedding tier of decontamination —
+    # train vectors probing the broadcast eval sign-LSH band index,
+    # candidates exact-cosine verified.
     "decontaminate_semantic": S.q_decontaminate_semantic,
-    # NEW quality_classifier_report: the learned model's train-vs-
+    # quality_classifier_report: the learned model's train-vs-
     # heldout confusion matrix + rates as a driver-verified artifact
     # (the ann_recall_report pattern applied to the curation model).
     "quality_classifier_report": TX.q_quality_classifier_report,
-    # NEW stream_quality_gate: the fitted model deployed at crawl-
+    # stream_quality_gate: the fitted model deployed at crawl-
     # ingest — staged-file document stream scored against the static
     # weight table, calibrated-threshold admission. Build-time jobs:
     # the model fit + two bounded 1-row collects (bias, threshold),
     # the q_ann_lsh contract-caveat class; the analysis tools use its
     # lazy batch twin (plans/analysis.py).
     "stream_quality_gate": q_stream_quality_gate,
-
-    # --- 2. newest driver row is r09 (oldest-banked fill; the
-    # first ~10 complete the ~50-slot prefix, the rest lead the
-    # r14 rotation) ---
     "stream_event_tumbling": q_stream_event_tumbling,
     "stream_event_session": q_stream_event_session,
     "dedup_clusters_exact": D.q_dedup_clusters_exact,
@@ -218,8 +191,6 @@ _QUERIES: dict[str, QueryFn] = {
     "stream_dedup": q_stream_dedup,
     "stream_interval_join": q_stream_interval_join,
     "stream_profile": q_stream_profile,
-
-    # --- newest driver row is r10 ---
     "skew_join": R.q_skew_join,
     "embedding_quantize": S.q_embedding_quantize,
     "compaction_plan": MT.q_compaction_plan,
@@ -268,8 +239,6 @@ _QUERIES: dict[str, QueryFn] = {
     "order_stat": R.q_order_stat,
     "resample_ohlc": EV.q_resample_ohlc,
     "pps_sample": TX.q_pps_sample,
-
-    # --- newest driver row is r11 ---
     "png_meta": MM.q_png_meta,
     "jpeg_meta": MM.q_jpeg_meta,
     "stream_foreach_upsert": q_stream_foreach_upsert,
@@ -318,8 +287,6 @@ _QUERIES: dict[str, QueryFn] = {
     "ann_pq": S.q_ann_pq,
     "text_roundtrip": MT.q_text_roundtrip,
     "pagerank": GR.q_pagerank,
-
-    # --- newest driver row is r12 ---
     "dedup_substring_apply": D.q_dedup_substring_apply,
     "kmeans_clusters": S.q_kmeans_clusters,
     "linreg_ols": R.q_linreg_ols,

@@ -1055,7 +1055,8 @@ def q_dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this memo q_dedup_keep re-ran the full LSH chain + connected
 # components inside its own plan — correct, but ~2× the composed cost
 # (VERDICT r04 "What's wrong" #1). Benchmark isolation evicts this
-# alongside the IVF memo (bench.py) so cold timings stay honest.
+# alongside the IVF memo (perfbench/harness.py) so cold timings stay
+# honest.
 import weakref
 
 _CLUSTER_CACHE: dict[int, dict] = {}

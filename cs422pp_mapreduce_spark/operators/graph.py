@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..session import scoped_conf
 from ..sources.catalog import load_table
 
 DAMPING = 0.85
@@ -43,12 +44,9 @@ SUPP_OFFSET = 1_000_000
 # fixed cost (8 iterations × 2 exchanges × 32 tasks of ~20k rows;
 # measured interleaved at sf0.1: pagerank 10.5 → 6.7 s at 4
 # partitions). Production corpora should raise it toward ~4-8M rows
-# (≈100-200 MB with sort overhead) via the env knob; the count still
-# scales linearly with data either way, independent of core count, so
-# the driver's 8-vs-32-core bench points stay comparable.
-GRAPH_SHUFFLE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_GRAPH_SHUFFLE_ROWS", "150000")
-)
+# (≈100-200 MB with sort overhead); the count scales linearly with
+# data either way, independent of core count.
+GRAPH_SHUFFLE_ROWS = 150_000
 
 
 def _lineitem_row_count(sf_dir: str) -> int | None:
@@ -77,22 +75,17 @@ def graph_build_conf(spark: SparkSession, sf_dir: str):
     for the duration of an iterative graph loop's plan construction
     (lazy checkpoints compile their RDD at call time, so every
     per-round exchange is planned inside this context), restoring the
-    batch value after — the stream_drain_conf pattern. AQE stays ON
+    batch value after (``session.scoped_conf``). AQE stays ON
     (its runtime broadcast of the shrinking frontier/rank side is the
     join strategy these loops rely on; AQE-off was tested and rejected
     — sort-merge fallback cost more than the stage-job savings)."""
     rows = _lineitem_row_count(sf_dir)
-    if rows is None:
+    confs = {}
+    if rows is not None:
+        parts = max(2, rows // GRAPH_SHUFFLE_ROWS)
+        confs["spark.sql.shuffle.partitions"] = str(parts)
+    with scoped_conf(spark, confs):
         yield
-        return
-    parts = max(2, rows // GRAPH_SHUFFLE_ROWS)
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(parts))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def transaction_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

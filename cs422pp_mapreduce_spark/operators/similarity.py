@@ -25,6 +25,8 @@ bounded 1-row query fetch and the K×dim centroid table.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd  # module-level: pandas_udf type hints resolve by name
 
@@ -32,7 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..session import scratch_persist
+from ..session import driver_paced_build_conf, scratch_persist
 from ..sources.catalog import load_table
 
 TOP_K = 10
@@ -337,8 +339,14 @@ def _vec_sql(c: list[float]) -> str:
     """SQL fragment for a literal double array. ``repr(float)`` is the
     shortest round-trip decimal and Spark's parser reads the ``D``
     literal with Double.parseDouble — the identical IEEE bits the old
-    per-element ``F.lit(float(x))`` produced."""
-    return "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
+    per-element ``F.lit(float(x))`` produced. Non-finite values have no
+    ``D`` literal (``repr(inf)`` gives ``infD``), so they raise here
+    instead of as an unrelated parse error."""
+    vals = [float(x) for x in c]
+    for i, x in enumerate(vals):
+        if not math.isfinite(x):
+            raise ValueError(f"non-finite vector element [{i}] = {x!r}")
+    return "array(" + ",".join(f"{x!r}D" for x in vals) + ")"
 
 
 def _lit_vec(c: list[float]) -> Column:
@@ -409,8 +417,6 @@ def build_ivf_index(
     per_session = _ivf_session_cache(spark)
     if sf_dir in per_session:
         return per_session[sf_dir]
-
-    from ..session import driver_paced_build_conf
 
     with driver_paced_build_conf(spark):
         return _build_ivf_index_jobs(spark, sf_dir, k, iters, per_session)
@@ -493,8 +499,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side work on already-collected index metadata), and the
     re-rank follows the proven topk_similarity cosine/ROUND-4
     convention; the DuckDB oracle replays fit → probe → re-rank."""
-    import math
-
     centroids, assigned = build_ivf_index(spark, sf_dir)
 
     qrow = assigned.where(F.col("vec_id") == QUERY_VEC_ID).select(
@@ -936,8 +940,6 @@ def build_pq_index(
     if key in per_session:
         return per_session[key]
 
-    from ..session import driver_paced_build_conf
-
     with driver_paced_build_conf(spark):
         return _build_pq_index_jobs(spark, sf_dir, per_session, key, _pq_argmin)
 
@@ -1062,8 +1064,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in SQL): each entry is Σ_pos floor((q−c)²·1e15) over the
     # subspace's PQ_DSUB dims — plain Python float ops, bit-identical
     # to the oracle's per-element FLOOR pipeline.
-    import math
-
     lut = [
         [
             sum(
@@ -1414,8 +1414,6 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast literal table) — index METADATA, not data. One
     corpus×queries scored pass is shared by all five top-K branches
     (scratch-persisted; evicted via evict_scratch)."""
-    import math
-
     from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -46,7 +46,6 @@ ships; state is 3-long rows, no strings after rank_0.
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,7 +53,11 @@ from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel as PySparkStorageLevel
 
 from ..functions.text import nonempty_tokens
-from ..session import default_parallelism, scratch_persist
+from ..session import (
+    default_parallelism,
+    driver_paced_build_conf,
+    scratch_persist,
+)
 from ..sources.catalog import load_table
 
 # Minimum repeated-substring length (tokens) for a position to count
@@ -84,31 +87,6 @@ VOCAB_BCAST_MAX = 32_000_000
 
 def _rank_partitions(n_rows: int) -> int:
     return max(1, (int(n_rows) + RANK_PART_ROWS - 1) // RANK_PART_ROWS)
-
-
-@contextmanager
-def suffix_build_conf(spark: SparkSession):
-    """Disable AQE for the duration of the driver-paced ladder build,
-    restoring the session value after (the stream_drain_conf pattern).
-
-    Rationale (r14, guide §1.2 step 3 after steps 1-2 were done): the
-    ladder materializes K/2+2 eager localCheckpoints, and under AQE
-    EVERY exchange of every checkpoint becomes its own stage-
-    materialization job so the plan can be re-optimized from map
-    stats — 66 driver-paced jobs per build at sf0.1 (99 before the r14
-    descent removal). But the ladder's exchanges carry no re-planning
-    information AQE can use: range partition counts derive from
-    n_positions (``_rank_partitions``), the pairing self-joins are
-    n-row-by-n-row with no skew (positions are unique keys), and the
-    broadcast offsets are explicit hints. With AQE off the same build
-    is 16 jobs (measured interleaved, same values) and the wall drops
-    ~25→18 s. The conf is restored before the returned lazy report
-    plan is forced, so the FINAL aggregation still plans under AQE
-    like every other query."""
-    from ..session import driver_paced_build_conf
-
-    with driver_paced_build_conf(spark):
-        yield
 
 
 def _global_rank(
@@ -406,8 +384,14 @@ def suffix_report(
 
     from contextlib import nullcontext
 
+    # AQE off for the eager ladder: its exchanges carry nothing AQE can
+    # re-plan (range partition counts derive from n_positions, the
+    # pairing self-joins are unique-keyed, the offsets are explicit
+    # broadcasts) — 66 → 16 jobs per build at sf0.1.
     build_conf = (
-        suffix_build_conf(pos.sparkSession) if checkpoint else nullcontext()
+        driver_paced_build_conf(pos.sparkSession)
+        if checkpoint
+        else nullcontext()
     )
     with build_conf:
         ranks = suffix_rank_tables(pos, levels, n_positions, checkpoint)
@@ -476,7 +460,7 @@ def suffix_report(
     # the join+fold runs once (inside the build conf: this eager cut
     # is the last driver-paced materialization of the build)
     if checkpoint:
-        with suffix_build_conf(pos.sparkSession):
+        with driver_paced_build_conf(pos.sparkSession):
             pairs = pairs.localCheckpoint(
                 eager=True, storageLevel=PySparkStorageLevel.DISK_ONLY
             )

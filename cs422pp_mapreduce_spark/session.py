@@ -14,6 +14,9 @@ cluster because nothing here assumes a single JVM.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -74,6 +77,9 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+STREAM_STATE_PARTITIONS = 8
+
+
 def stream_state_partitions() -> int:
     """Shuffle-partition count for STREAMING micro-batch drains — i.e.
     the state-store instance count (it is pinned into the checkpoint at
@@ -87,13 +93,12 @@ def stream_state_partitions() -> int:
     — task launch + one state-store commit (delta file + fsync) per
     instance per batch — without any parallelism the data can use
     (guide §2: fewer, larger partitions; §6: small files hurt twice).
-    Production streams size this to throughput × state volume via the
-    env knob; the checkpoint pins whatever value the job started with.
+    The checkpoint pins whatever value the job started with.
     """
-    return int(os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"))
+    return STREAM_STATE_PARTITIONS
 
 
-_CONFS_APPLIED: "weakref.WeakSet" = None  # type: ignore[assignment]
+_CONFS_APPLIED: "weakref.WeakSet" = weakref.WeakSet()
 
 
 def apply_runtime_confs(spark: SparkSession, force: bool = False) -> SparkSession:
@@ -102,19 +107,14 @@ def apply_runtime_confs(spark: SparkSession, force: bool = False) -> SparkSessio
     Idempotent per session and memoized (weak set): the driver contract
     wraps EVERY query builder with this call, so a bench/gate run pays
     len(RUNTIME_CONFS) py4j round-trips per query build otherwise.
-    Nothing in the engine mutates these confs after application (the
-    streaming drain helper overrides only shuffle.partitions and
-    restores it), so first-application semantics are identical.
+    The engine changes these confs after application only inside
+    ``scoped_conf``, which restores them, so first-application
+    semantics are identical.
 
     CONTRACT CHANGE vs pre-r13 (ADVICE r13 #4): the memo means an
     external caller that mutates a RUNTIME_CONFS key mid-session is no
     longer self-healed on the next query build. Callers that need the
     old always-reapply behavior pass ``force=True``."""
-    global _CONFS_APPLIED
-    if _CONFS_APPLIED is None:
-        import weakref
-
-        _CONFS_APPLIED = weakref.WeakSet()
     if not force and spark in _CONFS_APPLIED:
         return spark
     for k, v in RUNTIME_CONFS.items():
@@ -150,14 +150,55 @@ def get_spark(app_name: str = "cs422pp_mapreduce_spark") -> SparkSession:
     return builder.getOrCreate()
 
 
-from contextlib import contextmanager
+# session → {key: (value, saved value, depth)} for the open scopes
+_SCOPES: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SCOPES_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the duration of a block, restoring them
+    after — safe when scopes of one session overlap across threads
+    (``ann_recall_report`` fits its IVF and PQ indexes concurrently,
+    each AQE-off).
+
+    A depth count per (session, key) makes only the outermost scope
+    save the old value and restore it, so the last thread out never
+    "restores" a sibling's value. A scope that asks for a different
+    value of a key an open scope already holds raises instead of
+    changing it under the holder."""
+    with _SCOPES_LOCK:
+        held = _SCOPES.setdefault(spark, {})
+        for k, v in confs.items():
+            if k in held and held[k][0] != v:
+                raise RuntimeError(
+                    f"{k} is held at {held[k][0]!r} by an open scope; "
+                    f"cannot scope it to {v!r}"
+                )
+        for k, v in confs.items():
+            if k in held:
+                value, saved, depth = held[k]
+                held[k] = (value, saved, depth + 1)
+            else:
+                held[k] = (v, spark.conf.get(k), 1)
+                spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        with _SCOPES_LOCK:
+            for k in confs:
+                value, saved, depth = held.pop(k)
+                if depth > 1:
+                    held[k] = (value, saved, depth - 1)
+                else:
+                    spark.conf.set(k, saved)
 
 
 @contextmanager
 def driver_paced_build_conf(spark: SparkSession):
     """Disable AQE for a bounded driver-paced build sequence (Lloyd
     fit collects, the suffix ladder's eager checkpoints), restoring
-    the session value after — the stream_drain_conf pattern.
+    the session value after.
 
     Under AQE every exchange of every bounded collect/materialization
     becomes its own stage-materialization job so the plan can be
@@ -168,21 +209,16 @@ def driver_paced_build_conf(spark: SparkSession):
     pacing — measured 66 → 16 jobs on the dedup_suffix ladder at
     sf0.1 (r14). Queries planned OUTSIDE the context (the returned
     lazy frames forced by the harness) still plan under AQE."""
-    key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         yield
-    finally:
-        spark.conf.set(key, old)
 
 
 # --- scratch-persist registry (ADVICE r10) ----------------------------------
 # Queries that persist branch-shared intermediates (containment's
 # inverted index, the recall report's scored pass) return a LAZY
 # DataFrame, so there is no natural in-query point to unpersist. The
-# harness protocol (bench.py / tools/spot_tier.py per-query isolation)
-# already calls clearCache(); this registry gives NON-harness callers
+# benchmark's per-query isolation (perfbench/harness.py) already
+# calls clearCache(); this registry gives NON-harness callers
 # the same explicit hook the index memos have (evict_index_caches /
 # evict_cluster_cache): long-lived sessions call evict_scratch(spark)
 # between queries, otherwise MEMORY_AND_DISK blocks accumulate until
@@ -206,8 +242,6 @@ def scratch_persist(df, level=None):
     bucket = _SCRATCH.setdefault(id(spark), [])
     bucket.append(out._jdf)
     if len(bucket) == 1:
-        import weakref
-
         weakref.finalize(spark, _SCRATCH.pop, id(spark), None)
     return out
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.numeric import exact_sum
-from ..session import stream_state_partitions
+from ..session import scoped_conf, stream_state_partitions
 from ..sources.catalog import TABLE_SCHEMAS, table_path
 
 
@@ -55,13 +55,9 @@ def stream_drain_conf(spark: SparkSession):
     queries planned concurrently on OTHER threads — harmless for
     results (AQE re-splits batch stages) and the harness protocol runs
     queries sequentially anyway."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(stream_state_partitions()))
-    try:
+    partitions = str(stream_state_partitions())
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": partitions}):
         yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def read_event_stream(

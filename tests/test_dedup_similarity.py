@@ -112,6 +112,12 @@ def test_brute_cosine_matches_numpy(spark, sf_dir):
         assert s_got == pytest.approx(s_exp, abs=1e-4)
 
 
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), -float("inf")])
+def test_lit_vec_rejects_non_finite(bad):
+    with pytest.raises(ValueError, match=r"\[1\]"):
+        S._lit_vec([1.0, bad])
+
+
 def _numpy_band_buckets(vecs: dict[int, np.ndarray]) -> dict[int, list[int]]:
     """Independent NumPy twin of sign_band_buckets: vec_id → per-band
     bucket values under the same deterministic hyperplanes."""

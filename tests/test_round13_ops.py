@@ -289,32 +289,6 @@ class TestDecontaminateSemantic:
         ), "expected chance band collisions exercising the verify-reject path"
 
 
-class TestBenchContract:
-    """bench.py's HEADLINE list is part of the measurement contract:
-    every name must resolve in the driver registry (a typo would crash
-    the per-round close), with no duplicate rows double-counting the
-    total, and the exec-split class is exactly the stream_* prefix."""
-
-    def test_headline_subset_of_registry(self):
-        import bench
-        import __spark_entry__ as E
-
-        names = bench.HEADLINE
-        assert len(names) == len(set(names)), "duplicate headline rows"
-        missing = [n for n in names if n not in E._QUERIES]
-        assert not missing, missing
-
-    def test_round13_rows_are_headline(self):
-        import bench
-
-        for n in (
-            "quality_classifier",
-            "decontaminate_semantic",
-            "quality_classifier_report",
-        ):
-            assert n in bench.HEADLINE, n
-
-
 class TestStreamQualityGate:
     """The streaming ingest gate must equal the batch classifier
     exactly (stateless per doc given the model), admit the

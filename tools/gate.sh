@@ -1,35 +1,27 @@
 #!/usr/bin/env bash
-# One-shot local gate: everything the round driver checks, in order of
-# increasing cost. Exit non-zero on the first failing stage.
+# One-shot local correctness gate, in order of increasing cost. Exit
+# non-zero on the first failing stage.
 #
 #   tools/gate.sh [sf_dir]          # default /root/testdata/sf0.01
 #
 # Stages:
-#   0. staleness         rotation-prefix freshness floor
 #   1. pytest            unit/plan/property/streaming suite
 #   2. audit_plans       scale anti-patterns over every query plan
-#   3. sweep_dtypes      driver-hash dtype/collection lint
-#   4. check_oracles     DRIVER-EXACT DuckDB comparison, full surface
+#   3. sweep_dtypes      output dtype/collection lint
+#   4. check_oracles     exact DuckDB comparison, full surface
 #
-# (bench.py is deliberately separate — it must run EXCLUSIVELY on an
-# otherwise-idle machine; see BASELINE.md protocol.)
+# The benchmark is separate: `python3 perfbench/run.py` (see
+# perfbench/README.md), run on an otherwise idle machine.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 
-echo "== 0/5 rotation staleness (prefix must refresh >=25 oldest rows) ==" >&2
-# ROUND pins which CORRECTNESS artifacts define the stale set: the
-# rotation at HEAD was planned for round $ROUND against rounds<ROUND
-# (ADVICE r08 — the current round's artifact landing must not shift
-# the gate). Bump when applying the next rotation.
-ROUND="${ROUND:-13}"
-python tools/staleness.py --target "$ROUND" --check 25
-echo "== 1/5 pytest ==" >&2
+echo "== 1/4 pytest ==" >&2
 python -m pytest tests/ -x -q
-echo "== 2/5 plan audit ==" >&2
+echo "== 2/4 plan audit ==" >&2
 python tools/audit_plans.py "$SF"
-echo "== 3/5 dtype sweep ==" >&2
+echo "== 3/4 dtype sweep ==" >&2
 python tools/sweep_dtypes.py "$SF"
-echo "== 4/5 oracle gate ($SF) ==" >&2
+echo "== 4/4 oracle gate ($SF) ==" >&2
 python tools/check_oracles.py "$SF"
 echo "GATE GREEN ($SF)" >&2
