@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.numeric import fine_sum
 from ..functions.text import (
     fingerprint_md5,
     lang_id_expr,
@@ -221,12 +222,7 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"),
         (
-            F.round(
-                F.sum(F.col("quality_score").cast("decimal(38,18)"))
-                .cast("double")
-                / F.count(F.lit(1)),
-                6,
-            )
+            F.round(fine_sum("quality_score", 18) / F.count(F.lit(1)), 6)
             + 0.0
         ).alias("mean_quality"),
     )

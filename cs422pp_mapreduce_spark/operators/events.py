@@ -27,7 +27,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.numeric import exact_sum
+from ..functions.numeric import (
+    comoment,
+    exact_int,
+    exact_sum,
+    exact_sum_over,
+    exact_sum_wide,
+    fixed_long,
+    long_dec,
+)
 from ..sources.catalog import load_table
 from .relational import HLL_BOUND_REL
 
@@ -121,10 +129,7 @@ def q_event_window_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("trail_sum"),
+        exact_sum_over("value", w, 2).alias("trail_sum"),
         F.count(F.lit(1)).over(w).alias("trail_n"),
     )
 
@@ -361,10 +366,8 @@ def q_outlier_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter runs on the unrounded value."""
     ev = load_table(spark, sf_dir, "events")
     n = F.count(F.lit(1)).cast("double")
-    s1 = F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-    s2 = F.sum(
-        (F.col("value") * F.col("value")).cast("decimal(28,4)")
-    ).cast("double")
+    s1 = exact_sum("value", 2)
+    s2 = exact_sum_wide(F.col("value") * F.col("value"), 4)
     stats = ev.groupBy("event_type").agg(
         (s1 / n).alias("m"),
         F.sqrt((s2 - s1 * s1 / n) / (n - F.lit(1.0))).alias("sd"),
@@ -906,24 +909,17 @@ def q_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entire fact table — the anti-pattern this query exists to show.)
     """
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        "event_type", fixed_long("value", 4).alias("vi")
     )
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("vi").alias("s"),
         # vi² ≤ ~6e13 per term fits LONG; the sum can pass 2^63 → decimal
-        F.sum((F.col("vi") * F.col("vi")).cast("decimal(20,0)")).alias("q"),
+        F.sum(long_dec(F.col("vi") * F.col("vi"))).alias("q"),
     )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    lhs = (d(F.col("n")) * d(F.col("vi")) - d(F.col("s"))) * (
-        d(F.col("n")) * d(F.col("vi")) - d(F.col("s"))
-    )
-    rhs = F.lit(9).cast("decimal(38,0)") * (
-        d(F.col("n")) * d(F.col("q")) - d(F.col("s")) * d(F.col("s"))
-    )
+    dev = exact_int("n") * exact_int("vi") - exact_int("s")
+    lhs = dev * dev
+    rhs = exact_int(F.lit(9)) * comoment("n", "q", "s", "s")
     flagged = ev.join(F.broadcast(stats), "event_type").select(
         "event_type", "n", (lhs > rhs).cast("int").alias("is_outlier")
     )
@@ -960,9 +956,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("t_us"),
         "event_id",
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        fixed_long("value", 4).alias("vi"),
     )
     w = Window.partitionBy("user_id").orderBy("t_us", "event_id")
     seg = ev.select(
@@ -976,11 +970,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             (F.max("t_us") - F.min("t_us")).alias("span_us"),
-            F.sum(
-                (F.col("dt_us").cast("decimal(20,0)") * F.col("vi")).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("area"),
+            F.sum(exact_int(long_dec("dt_us") * F.col("vi"))).alias("area"),
         )
         .where(F.col("span_us") > 0)
     )
@@ -1019,9 +1009,7 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        fixed_long("value", 4).alias("vi"),
     )
     stats = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("vi").alias("s")
@@ -1031,10 +1019,7 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "n",
-        (
-            F.col("n").cast("decimal(38,0)") * F.col("vi")
-            - F.col("s").cast("decimal(38,0)")
-        ).alias("d"),
+        (exact_int("n") * F.col("vi") - exact_int("s")).alias("d"),
     )
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     # two window stages (nested window functions are illegal): prefix
@@ -1052,13 +1037,13 @@ def q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n",
         "p",
-        F.min(F.least(F.col("p"), F.lit(0).cast("decimal(38,0)")))
+        F.min(F.least(F.col("p"), exact_int(F.lit(0))))
         .over(w.rowsBetween(Window.unboundedPreceding, -1))
         .alias("pmin_prev"),
     )
     c = F.col("p") - F.least(
-        F.coalesce("pmin_prev", F.lit(0).cast("decimal(38,0)")),
-        F.lit(0).cast("decimal(38,0)"),
+        F.coalesce("pmin_prev", exact_int(F.lit(0))),
+        exact_int(F.lit(0)),
     )
     return (
         cu.select("event_type", "n", c.alias("c"))

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.numeric import quantized
 from ..session import scoped_conf
 from ..sources.catalog import load_table
 
@@ -160,9 +161,7 @@ def pagerank(
             out_edges.join(ranks, out_edges.src == ranks.node)
             .select(
                 F.col("dst").alias("node"),
-                F.floor((F.col("rank") / F.col("outdeg")) * F.lit(1e18))
-                .cast("decimal(38,0)")
-                .alias("c18"),
+                quantized(F.col("rank") / F.col("outdeg"), 1e18).alias("c18"),
             )
             .groupBy("node")
             .agg(

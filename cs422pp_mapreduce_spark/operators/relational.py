@@ -28,7 +28,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.numeric import disc_price_dec, exact_avg, exact_sum
+from ..functions.numeric import (
+    comoment,
+    disc_price_dec,
+    exact_avg,
+    exact_sum,
+    exact_sum_over,
+    exact_sum_wide,
+    fixed_long,
+    long_dec,
+    rate_long,
+)
 from ..session import default_parallelism
 from ..sources.catalog import load_table
 
@@ -306,10 +316,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         # normalize NTZ → TIMESTAMP (same instant under the UTC session)
         F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("running_total"),
+        exact_sum_over("o_totalprice", w, 2).alias("running_total"),
     )
 
 
@@ -422,9 +429,7 @@ def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_sum(disc_price_dec(), 4, "revenue")
         )
     )
-    total = F.sum(F.col("revenue").cast("decimal(18,4)")).over(
-        Window.partitionBy()
-    ).cast("double")
+    total = exact_sum_over("revenue", Window.partitionBy(), 4)
     return rev.select(
         "n_name",
         "revenue",
@@ -551,10 +556,8 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster; these don't.)"""
     li = load_table(spark, sf_dir, "lineitem")
     n = F.count(F.lit(1)).cast("double")
-    s1 = F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double")
-    s2 = F.sum(
-        (F.col("l_quantity") * F.col("l_quantity")).cast("decimal(28,4)")
-    ).cast("double")
+    s1 = exact_sum("l_quantity", 2)
+    s2 = exact_sum_wide(F.col("l_quantity") * F.col("l_quantity"), 4)
     mean = s1 / n
     var = (s2 - s1 * s1 / n) / (n - F.lit(1.0))
     return li.groupBy("l_returnflag").agg(
@@ -905,7 +908,7 @@ def q_skewed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.skew import salted_sum_count
 
     li = load_table(spark, sf_dir, "lineitem")
-    rev = disc_price_dec().cast("decimal(18,4)")
+    rev = disc_price_dec()
     out = salted_sum_count(
         li,
         ["l_returnflag"],
@@ -1416,27 +1419,22 @@ def q_linreg_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
-        (F.col("l_quantity").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("xi"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("yi"),
+        fixed_long("l_quantity", 2).alias("xi"),
+        fixed_long("l_extendedprice", 2).alias("yi"),
     )
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     stats = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("xi").alias("sx"),
         F.sum("yi").alias("sy"),
         # per-term products fit LONG (x ≤ 5e3·100, y ≤ 1e5·100 cents),
         # but their SUMs can pass 2^63 at sf ≥ 1 → decimal accumulators
-        F.sum((F.col("xi") * F.col("xi")).cast("decimal(20,0)")).alias("sxx"),
-        F.sum((F.col("xi") * F.col("yi")).cast("decimal(20,0)")).alias("sxy"),
-        F.sum((F.col("yi") * F.col("yi")).cast("decimal(20,0)")).alias("syy"),
+        F.sum(long_dec(F.col("xi") * F.col("xi"))).alias("sxx"),
+        F.sum(long_dec(F.col("xi") * F.col("yi"))).alias("sxy"),
+        F.sum(long_dec(F.col("yi") * F.col("yi"))).alias("syy"),
     )
-    num = d(F.col("n")) * d(F.col("sxy")) - d(F.col("sx")) * d(F.col("sy"))
-    den = d(F.col("n")) * d(F.col("sxx")) - d(F.col("sx")) * d(F.col("sx"))
-    ssy = d(F.col("n")) * d(F.col("syy")) - d(F.col("sy")) * d(F.col("sy"))
+    num = comoment("n", "sxy", "sx", "sy")
+    den = comoment("n", "sxx", "sx", "sx")
+    ssy = comoment("n", "syy", "sy", "sy")
     slope = num.cast("double") / den.cast("double")
     intercept = (
         F.col("sy").cast("double") - slope * F.col("sx").cast("double")
@@ -1539,16 +1537,10 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     over correctly-rounded decimal→double casts.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
-        (F.col("l_quantity").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("q"),
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("p"),
-        (F.col("l_discount").cast("decimal(4,2)") * 100)
-        .cast("long")
-        .alias("dd"),
-        (F.col("l_tax").cast("decimal(4,2)") * 100).cast("long").alias("t"),
+        fixed_long("l_quantity", 2).alias("q"),
+        fixed_long("l_extendedprice", 2).alias("p"),
+        rate_long("l_discount").alias("dd"),
+        rate_long("l_tax").alias("t"),
     )
     cols = ["q", "p", "dd", "t"]
     names = {
@@ -1563,25 +1555,15 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         (a, b) for i, a in enumerate(cols) for b in cols[i:]
     ]  # includes (a, a) → the 4 squares + 6 cross products
     aggs += [
-        F.sum((F.col(a) * F.col(b)).cast("decimal(20,0)")).alias(
-            f"ss_{a}_{b}"
-        )
+        F.sum(long_dec(F.col(a) * F.col(b))).alias(f"ss_{a}_{b}")
         for a, b in pairs
     ]
     st = li.agg(*aggs)
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    n = d(F.col("n"))
 
     def corr(a: str, b: str):
-        num = n * d(F.col(f"ss_{a}_{b}")) - d(F.col(f"s_{a}")) * d(
-            F.col(f"s_{b}")
-        )
-        dena = n * d(F.col(f"ss_{a}_{a}")) - d(F.col(f"s_{a}")) * d(
-            F.col(f"s_{a}")
-        )
-        denb = n * d(F.col(f"ss_{b}_{b}")) - d(F.col(f"s_{b}")) * d(
-            F.col(f"s_{b}")
-        )
+        num = comoment("n", f"ss_{a}_{b}", f"s_{a}", f"s_{b}")
+        dena = comoment("n", f"ss_{a}_{a}", f"s_{a}", f"s_{a}")
+        denb = comoment("n", f"ss_{b}_{b}", f"s_{b}", f"s_{b}")
         return num.cast("double") / F.sqrt(
             dena.cast("double") * denb.cast("double")
         )

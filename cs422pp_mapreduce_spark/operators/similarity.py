@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.numeric import comoment, fine_sum, long_dec, quantized
 from ..session import driver_paced_build_conf, scratch_persist
 from ..sources.catalog import load_table
 
@@ -456,9 +457,7 @@ def _build_ivf_index_jobs(
             .select("cell", F.posexplode("arr").alias("pos", "x"))
             .groupBy("cell", "pos")
             .agg(
-                F.sum(
-                    F.floor(F.col("x") * F.lit(1e15)).cast("decimal(38,0)")
-                ).alias("qs"),
+                F.sum(quantized("x", 1e15)).alias("qs"),
                 F.count(F.lit(1)).alias("n"),
             )
             .collect()
@@ -802,7 +801,7 @@ def q_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         flat.groupBy("label", (F.col("pos") + 1).cast("long").alias("dim"))
         .agg(
-            F.sum(F.col("v").cast("decimal(38,20)")).cast("double").alias("s"),
+            fine_sum("v", 20, "s"),
             F.count(F.lit(1)).alias("n_vecs"),
         )
         .select(
@@ -1002,9 +1001,7 @@ def _build_pq_index_jobs(
             .select("m", "code", F.posexplode("sub").alias("pos", "x"))
             .groupBy("m", "code", "pos")
             .agg(
-                F.sum(
-                    F.floor(F.col("x") * F.lit(1e15)).cast("decimal(38,0)")
-                ).alias("qs"),
+                F.sum(quantized("x", 1e15)).alias("qs"),
                 F.count(F.lit(1)).alias("n"),
             )
             .collect()
@@ -1216,9 +1213,7 @@ def q_cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             (
-                F.sum(
-                    F.floor(F.col("sil") * F.lit(1e15)).cast("decimal(38,0)")
-                ).cast("double")
+                F.sum(quantized("sil", 1e15)).cast("double")
                 / F.lit(1e15)
                 / F.count(F.lit(1))
             ).alias("mean_sil"),
@@ -1291,7 +1286,7 @@ def centered_cov_ints(spark: SparkSession, sf_dir: str):
     pair = (
         parts.where(F.col("j") >= 0)
         .groupBy("i", "j")
-        .agg(F.sum(F.col("v").cast("decimal(20,0)")).alias("sxx"))
+        .agg(F.sum(long_dec("v")).alias("sxx"))
     )
     sums = (
         parts.where((F.col("j") == -1) & (F.col("i") >= 0))
@@ -1299,7 +1294,6 @@ def centered_cov_ints(spark: SparkSession, sf_dir: str):
         .agg(F.sum("v").alias("s"))
     )
     n = parts.where(F.col("i") == -1).agg(F.sum("v").alias("n"))
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     return (
         pair.join(
             F.broadcast(sums.select(F.col("i").alias("i2"), F.col("s").alias("si"))),
@@ -1313,8 +1307,7 @@ def centered_cov_ints(spark: SparkSession, sf_dir: str):
         .select(
             "i",
             "j",
-            (d(F.col("n")) * d(F.col("sxx")) - d(F.col("si")) * d(F.col("sj")))
-            .alias("c"),
+            comoment("n", "sxx", "si", "sj").alias("c"),
         )
     )
 

@@ -15,6 +15,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.numeric import (
+    DISC_PRICE_SQL,
+    spark_exact_sum_over_sql,
+    spark_exact_sum_sql,
+)
 from ..sources.catalog import register_views
 
 
@@ -29,13 +34,12 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(
         spark,
         sf_dir,
-        """
+        f"""
         SELECT l_returnflag, l_linestatus,
                CAST(grouping_id(l_returnflag, l_linestatus) AS BIGINT)
                    AS gid,
                COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_qty
+               {spark_exact_sum_sql('l_quantity', 2)} AS sum_qty
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
                                 (l_returnflag, l_linestatus))
@@ -50,12 +54,11 @@ def q_sql_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(
         spark,
         sf_dir,
-        """
+        f"""
         SELECT o_orderkey, o_custkey, o_totalprice
         FROM orders
         WHERE o_totalprice > (
-                SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                            AS DOUBLE) / COUNT(*)
+                SELECT {spark_exact_sum_sql('o_totalprice', 2)} / COUNT(*)
                 FROM orders)
           AND o_custkey IN (SELECT c_custkey FROM customer
                             WHERE c_mktsegment = 'BUILDING')
@@ -69,12 +72,10 @@ def q_sql_cte_topnation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(
         spark,
         sf_dir,
-        """
+        f"""
         WITH rev AS (
             SELECT n_name,
-                   CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(12,2))
-                                   * (1 - CAST(l_discount AS DECIMAL(4,2)))
-                                 AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+                   {spark_exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -82,8 +83,8 @@ def q_sql_cte_topnation(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY n_name
         )
         SELECT n_name, revenue,
-               revenue / CAST(SUM(CAST(revenue AS DECIMAL(18,4))) OVER ()
-                              AS DOUBLE) AS revenue_share
+               revenue / {spark_exact_sum_over_sql('revenue', '()', 4)}
+                   AS revenue_share
         FROM rev
         """,
     )
@@ -97,13 +98,12 @@ def q_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sql(
         spark,
         sf_dir,
-        """
+        f"""
         SELECT date_trunc('hour', ts) AS bucket_hour,
                date_trunc('day', ts)  AS bucket_day,
                event_type,
                COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_value
+               {spark_exact_sum_sql('value', 2)} AS sum_value
         FROM events
         GROUP BY GROUPING SETS
             ((date_trunc('hour', ts), event_type),

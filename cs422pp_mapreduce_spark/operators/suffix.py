@@ -439,9 +439,7 @@ def suffix_report(
     ta = toks.select(F.col("doc_id").alias("da"), F.col("t").alias("_ta"))
     tb = toks.select(F.col("doc_id").alias("db"), F.col("t").alias("_tb"))
     eq_arr = F.zip_with(
-        F.slice("_ta", F.col("pa"), F.lit(cmp_cap)),
-        F.slice("_tb", F.col("pb"), F.lit(cmp_cap)),
-        lambda x, y: x.eqNullSafe(y) & x.isNotNull(),
+        "_sa", "_sb", lambda x, y: x.eqNullSafe(y) & x.isNotNull()
     )
     first_false = F.array_position(eq_arr, F.lit(False))
     lcp_col = (
@@ -450,11 +448,21 @@ def suffix_report(
             F.size(eq_arr).cast("long"),
         )
     ).cast("long")
+    # Each side is cut to its cmp_cap-token slice right after its join,
+    # so the second exchange carries at most cmp_cap tokens per pair
+    # row instead of the whole document.
     pairs = (
         st.join(ta, "da")
+        .select(
+            "da", "pa", "db", "pb",
+            F.slice("_ta", F.col("pa"), F.lit(cmp_cap)).alias("_sa"),
+        )
         .join(tb, "db")
-        .withColumn("lcp", lcp_col)
-        .select("da", "pa", "db", "pb", "lcp")
+        .select(
+            "da", "pa", "db", "pb", "_sa",
+            F.slice("_tb", F.col("pb"), F.lit(cmp_cap)).alias("_sb"),
+        )
+        .select("da", "pa", "db", "pb", lcp_col.alias("lcp"))
     )
     # both union branches read pairs — truncate before the fanout so
     # the join+fold runs once (inside the build conf: this eager cut

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.numeric import exact_int, fixed_long, long_dec
 from ..functions.text import (
     fingerprint_md5,
     lang_id_expr,
@@ -1755,9 +1756,7 @@ def q_decay_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("day"),
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        fixed_long("value", 4).alias("vi"),
     )
     mx = ev.groupBy().agg(F.max("day").alias("max_day"))
     aged = ev.crossJoin(F.broadcast(mx)).select(
@@ -1775,9 +1774,7 @@ def q_decay_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = aged.select(
         "event_type",
         wcol.alias("w"),
-        (F.col("vi").cast("decimal(20,0)") * wcol.cast("decimal(20,0)"))
-        .cast("decimal(38,0)")
-        .alias("wv"),
+        exact_int(long_dec("vi") * long_dec(wcol)).alias("wv"),
     ).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("w").alias("wsum"),

@@ -23,6 +23,8 @@ from ..functions.numeric import (
     disc_rev_dec,
     exact_avg,
     exact_sum,
+    exact_sum_wide,
+    rate_dec,
 )
 from ..sources.catalog import load_table
 
@@ -208,10 +210,7 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(exact_sum("l_quantity", 2, "qty"))
     )
     thr = ship.agg(
-        (
-            F.sum(F.col("qty").cast("decimal(28,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("avg_qty")
+        (exact_sum_wide("qty", 2) / F.count(F.lit(1))).alias("avg_qty")
     )
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name"
@@ -315,10 +314,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     thr = pv.agg(
-        (
-            F.sum(F.col("part_value").cast("decimal(28,4)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mean_value")
+        (exact_sum_wide("part_value", 4) / F.count(F.lit(1))).alias("mean_value")
     )
     return (
         pv.crossJoin(F.broadcast(thr))
@@ -428,14 +424,10 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1999-10-01"))
     )
     rev = disc_price_dec()
-    promo_rev = (
-        F.sum(
-            F.when(F.col("p_type") == "PROMO", rev)
-            .otherwise(F.lit(0).cast("decimal(4,2)"))
-            .cast("decimal(18,4)")
-        ).cast("double")
+    promo_rev = exact_sum(
+        F.when(F.col("p_type") == "PROMO", rev).otherwise(rate_dec(F.lit(0))), 4
     )
-    total_rev = F.sum(rev.cast("decimal(18,4)")).cast("double")
+    total_rev = exact_sum(rev, 4)
     return (
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .groupBy()
@@ -719,7 +711,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     volume = disc_price_dec()
     nat_volume = F.when(F.col("supp_nation") == "NATION_1", volume).otherwise(
-        F.lit(0).cast("decimal(4,2)")
+        rate_dec(F.lit(0))
     )
     return (
         lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)

@@ -6,28 +6,32 @@ events/documents/embeddings. Column names and types must match the
 Spark output exactly (driver hashes values under name-sorted columns).
 
 Conventions shared with the Spark side:
-- money/measure sums: CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE) —
-  exact, order-independent (functions/numeric.py rationale);
-- avg: exact-decimal sum / COUNT (single double division);
+- exact arithmetic (decimal sums and averages, fixed-point longs,
+  co-moments, money products) is owned by functions/numeric.py: each
+  Spark helper there has its SQL-text twin beside it, and the strings
+  here call those twins rather than spelling a decimal precision;
 - rank/length/year/... cast to BIGINT to match Spark's long;
 - top-k always carries a unique tiebreaker in ORDER BY.
 """
 
 from __future__ import annotations
 
-
-def _xsum(expr: str, scale: int = 4) -> str:
-    # The final decimal→double conversion routes through VARCHAR: DuckDB's
-    # direct CAST(DECIMAL(38,s) AS DOUBLE) double-rounds (hugeint→double,
-    # then the scale division) and can land 1 ulp off the correctly-rounded
-    # value Spark's BigDecimal.doubleValue produces — observed on tpch_q1's
-    # sum_charge at sf1 (exact decimal ...637948 → Spark ...63795 correct,
-    # DuckDB ...637955). decimal→VARCHAR is exact and VARCHAR→DOUBLE is
-    # correctly rounded, so both engines now agree bit-for-bit.
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale})))"
-        f" AS VARCHAR) AS DOUBLE)"
-    )
+from .functions.numeric import (
+    CHARGE_SQL,
+    DISC_PRICE_SQL,
+    DISC_REV_SQL,
+    comoment_sql,
+    exact_avg_sql,
+    exact_sum_over_sql,
+    exact_sum_sql,
+    exact_sum_wide_sql,
+    fine_sum_sql,
+    fixed_long_sql,
+    money_dec_sql,
+    quantized_sql,
+    rate_dec_sql,
+    rate_long_sql,
+)
 
 
 def _isum(expr: str) -> str:
@@ -42,25 +46,10 @@ def _isum(expr: str) -> str:
     return f"CAST(SUM({expr}) AS BIGINT)"
 
 
-def _xavg(expr: str, scale: int = 4) -> str:
-    return f"{_xsum(expr, scale)} / COUNT({expr})"
-
-
-# Exact-decimal money products (r05, twins of functions/numeric.py
-# disc_price_dec/charge_dec/disc_rev_dec — see the rationale there):
-# the 2-decimal INPUTS convert to decimal boundary-safely, the products
-# stay exact decimal, so Spark and DuckDB sums are bit-identical — a
-# double PRODUCT cast to decimal rounds engine-dependently at .5
-# boundaries.
-_DISC_PRICE = (
-    "(CAST(l_extendedprice AS DECIMAL(12,2))"
-    " * (1 - CAST(l_discount AS DECIMAL(4,2))))"
-)
-_CHARGE = f"({_DISC_PRICE} * (1 + CAST(l_tax AS DECIMAL(4,2))))"
-_DISC_REV = (
-    "(CAST(l_extendedprice AS DECIMAL(12,2))"
-    " * CAST(l_discount AS DECIMAL(4,2)))"
-)
+def _price_when(cond: str) -> str:
+    """Discounted price where ``cond`` holds, else a rate-precision 0
+    (the CASE stays decimal(18,4)) — the tpch_q14/q8 conditional sum."""
+    return f"CASE WHEN {cond} THEN {DISC_PRICE_SQL} ELSE {rate_dec_sql('0')} END"
 
 
 # Shared with operators/corpus.q_source_cap — single source of truth so
@@ -215,11 +204,11 @@ ORACLES: dict[str, str] = {
     # --- aggregation ------------------------------------------------------
     "group_agg": f"""
         SELECT l_returnflag, l_linestatus,
-               {_xsum('l_quantity', 2)} AS sum_qty,
-               {_xsum('l_extendedprice', 2)} AS sum_base_price,
-               {_xsum(_DISC_PRICE, 4)} AS sum_disc_price,
-               {_xavg('l_quantity', 2)} AS avg_qty,
-               {_xavg('l_extendedprice', 2)} AS avg_price,
+               {exact_sum_sql('l_quantity', 2)} AS sum_qty,
+               {exact_sum_sql('l_extendedprice', 2)} AS sum_base_price,
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS sum_disc_price,
+               {exact_avg_sql('l_quantity', 2)} AS avg_qty,
+               {exact_avg_sql('l_extendedprice', 2)} AS avg_price,
                COUNT(*) AS count_order
         FROM lineitem
         GROUP BY l_returnflag, l_linestatus
@@ -233,13 +222,13 @@ ORACLES: dict[str, str] = {
     "rollup_agg": f"""
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n_rows,
-               {_xsum('l_quantity', 2)} AS sum_qty
+               {exact_sum_sql('l_quantity', 2)} AS sum_qty
         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
     "cube_agg": f"""
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n_rows,
-               {_xsum('l_extendedprice', 2)} AS sum_price
+               {exact_sum_sql('l_extendedprice', 2)} AS sum_price
         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
     """,
     "case_expr": f"""
@@ -247,7 +236,7 @@ ORACLES: dict[str, str] = {
                     WHEN l_quantity < 30 THEN 'medium'
                     ELSE 'large' END AS qty_bucket,
                COUNT(*) AS n_rows,
-               {_xsum('l_extendedprice', 2)} AS sum_price
+               {exact_sum_sql('l_extendedprice', 2)} AS sum_price
         FROM lineitem GROUP BY 1
     """,
     # --- joins ------------------------------------------------------------
@@ -263,7 +252,7 @@ ORACLES: dict[str, str] = {
     """,
     "multi_join_agg": f"""
         SELECT n_name,
-               {_xsum(_DISC_PRICE, 4)} AS revenue,
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
@@ -315,13 +304,12 @@ ORACLES: dict[str, str] = {
             FROM orders)
         WHERE rnk <= 3
     """,
-    "window_running": """
+    "window_running": f"""
         SELECT o_custkey, o_orderkey, o_orderdate,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                    PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS DOUBLE) AS running_total
+               {exact_sum_over_sql('o_totalprice', 'w', 2)} AS running_total
         FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
     "window_lag": """
         SELECT o_custkey, o_orderkey, o_totalprice,
@@ -343,7 +331,7 @@ ORACLES: dict[str, str] = {
         SELECT CAST(year(o_orderdate) AS BIGINT) AS oyear,
                CAST(month(o_orderdate) AS BIGINT) AS omonth,
                COUNT(*) AS n_orders,
-               {_xsum('o_totalprice', 2)} AS month_revenue
+               {exact_sum_sql('o_totalprice', 2)} AS month_revenue
         FROM orders GROUP BY 1, 2
     """,
     "math_funcs": """
@@ -367,14 +355,12 @@ ORACLES: dict[str, str] = {
                    AS max_k
         FROM events GROUP BY event_type
     """,
-    "stats_agg": """
+    "stats_agg": f"""
         WITH m AS (
             SELECT l_returnflag,
                    CAST(COUNT(*) AS DOUBLE) AS n,
-                   CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                       AS s1,
-                   CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,4)))
-                        AS DOUBLE) AS s2
+                   {exact_sum_sql('l_quantity', 2)} AS s1,
+                   {exact_sum_wide_sql('l_quantity * l_quantity', 4)} AS s2
             FROM lineitem GROUP BY l_returnflag
         )
         SELECT l_returnflag,
@@ -440,7 +426,7 @@ ORACLES: dict[str, str] = {
     """,
     "having": f"""
         SELECT l_suppkey, COUNT(*) AS n_items,
-               {_xsum('l_quantity', 2)} AS sum_qty
+               {exact_sum_sql('l_quantity', 2)} AS sum_qty
         FROM lineitem GROUP BY l_suppkey
         HAVING COUNT(*) > 550
     """,
@@ -474,7 +460,7 @@ ORACLES: dict[str, str] = {
     # --- TPC-H shapes -------------------------------------------------------
     "tpch_q3": f"""
         SELECT l_orderkey, o_orderdate, o_orderpriority,
-               {_xsum(_DISC_PRICE, 4)} AS revenue
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -487,7 +473,7 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q5": f"""
         SELECT n_name,
-               {_xsum(_DISC_PRICE, 4)} AS revenue
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -526,7 +512,7 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q9": f"""
         SELECT n_name, EXTRACT(year FROM o_orderdate) AS o_year,
-               {_xsum(_DISC_PRICE, 4)} AS profit
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS profit
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -537,15 +523,15 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q20": f"""
         WITH ship AS (
-            SELECT l_suppkey, {_xsum('l_quantity', 2)} AS qty
+            SELECT l_suppkey, {exact_sum_sql('l_quantity', 2)} AS qty
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE p_name LIKE 'small%'
             GROUP BY l_suppkey
         )
         SELECT s_name, qty
         FROM ship JOIN supplier ON l_suppkey = s_suppkey
-        WHERE qty > (SELECT CAST(SUM(CAST(qty AS DECIMAL(28,2))) AS DOUBLE)
-                            / COUNT(*) FROM ship)
+        WHERE qty > (SELECT {exact_sum_wide_sql('qty', 2)} / COUNT(*)
+                     FROM ship)
     """,
     # Q11/Q16/Q21 adapted: lineitem stands in for partsupp (the
     # fixtures lack it); "late" is shipdate-based as in Q4/Q12.
@@ -554,15 +540,13 @@ ORACLES: dict[str, str] = {
             SELECT s_suppkey FROM supplier WHERE s_nationkey = 1
         ), pv AS (
             SELECT l_partkey,
-                   CAST(CAST(SUM(CAST({_DISC_PRICE}
-                                 AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS part_value
+                   {exact_sum_sql(DISC_PRICE_SQL, 4)} AS part_value
             FROM lineitem JOIN nat ON l_suppkey = s_suppkey
             GROUP BY l_partkey
         )
         SELECT l_partkey, part_value FROM pv
         WHERE part_value > 2.0 *
-              (SELECT CAST(SUM(CAST(part_value AS DECIMAL(28,4))) AS DOUBLE)
-                      / COUNT(*)
+              (SELECT {exact_sum_wide_sql('part_value', 4)} / COUNT(*)
                FROM pv)
     """,
     "tpch_q16": """
@@ -616,7 +600,7 @@ ORACLES: dict[str, str] = {
         GROUP BY l_linestatus
     """,
     "tpch_q6": f"""
-        SELECT {_xsum(_DISC_REV, 4)} AS revenue,
+        SELECT {exact_sum_sql(DISC_REV_SQL, 4)} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem
         WHERE l_shipdate >= DATE '1999-01-01'
@@ -626,7 +610,7 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q10": f"""
         SELECT c_custkey, c_name, c_acctbal, n_name,
-               {_xsum(_DISC_PRICE, 4)} AS revenue
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -644,17 +628,16 @@ ORACLES: dict[str, str] = {
                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
                     AS BIGINT) AS gid,
                COUNT(*) AS n_rows,
-               {_xsum('l_quantity', 2)} AS sum_qty
+               {exact_sum_sql('l_quantity', 2)} AS sum_qty
         FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
                                 (l_returnflag, l_linestatus))
     """,
-    "sql_subquery": """
+    "sql_subquery": f"""
         SELECT o_orderkey, o_custkey, o_totalprice
         FROM orders
         WHERE o_totalprice > (
-                SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                            AS DOUBLE) / COUNT(*)
+                SELECT {exact_sum_sql('o_totalprice', 2)} / COUNT(*)
                 FROM orders)
           AND o_custkey IN (SELECT c_custkey FROM customer
                             WHERE c_mktsegment = 'BUILDING')
@@ -662,8 +645,7 @@ ORACLES: dict[str, str] = {
     "sql_cte_topnation": f"""
         WITH rev AS (
             SELECT n_name,
-                   CAST(CAST(SUM(CAST({_DISC_PRICE}
-                                 AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE) AS revenue
+                   {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -671,17 +653,16 @@ ORACLES: dict[str, str] = {
             GROUP BY n_name
         )
         SELECT n_name, revenue,
-               revenue / CAST(SUM(CAST(revenue AS DECIMAL(18,4))) OVER ()
-                              AS DOUBLE) AS revenue_share
+               revenue / {exact_sum_over_sql('revenue', '()', 4)}
+                   AS revenue_share
         FROM rev
     """,
-    "event_rollup": """
+    "event_rollup": f"""
         SELECT date_trunc('hour', ts) AS bucket_hour,
                date_trunc('day', ts)  AS bucket_day,
                event_type,
                COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                   AS sum_value
+               {exact_sum_sql('value', 2)} AS sum_value
         FROM events
         GROUP BY GROUPING SETS
             ((date_trunc('hour', ts), event_type),
@@ -731,7 +712,7 @@ ORACLES: dict[str, str] = {
     "event_tumbling": f"""
         SELECT date_trunc('hour', ts) AS win_start, event_type,
                COUNT(*) AS n_events,
-               {_xsum('value', 2)} AS sum_value
+               {exact_sum_sql('value', 2)} AS sum_value
         FROM events GROUP BY 1, 2
     """,
     # Partition-pruning contract: the Spark side scans a hive-layout
@@ -741,7 +722,7 @@ ORACLES: dict[str, str] = {
     "events_partitioned": f"""
         SELECT CAST(CAST(ts AS DATE) AS TIMESTAMP) AS event_date,
                event_type, COUNT(*) AS n_events,
-               {_xsum('value', 2)} AS sum_value
+               {exact_sum_sql('value', 2)} AS sum_value
         FROM events
         WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-08'
                                    AND DATE '2024-01-14'
@@ -782,7 +763,7 @@ ORACLES: dict[str, str] = {
             FROM events
         )
         SELECT win_start, COUNT(*) AS n_events,
-               {_xsum('value', 2)} AS sum_value
+               {exact_sum_sql('value', 2)} AS sum_value
         FROM assigned GROUP BY 1
     """,
     # Gaps-and-islands sessionization, 30-min inactivity gap, microsecond
@@ -807,7 +788,7 @@ ORACLES: dict[str, str] = {
             FROM l
         )
         SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
-               COUNT(*) AS n_events, {_xsum('value', 2)} AS sum_value
+               COUNT(*) AS n_events, {exact_sum_sql('value', 2)} AS sum_value
         FROM s GROUP BY user_id, sess_id
     """,
     # --- text analytics ---------------------------------------------------
@@ -1581,8 +1562,8 @@ ORACLES: dict[str, str] = {
         ), per_source AS (
             SELECT source, COUNT(*) AS n_docs,
                    {_isum('n_tokens')} AS n_tokens,
-                   ROUND(CAST(SUM(CAST(quality_score AS DECIMAL(38,18)))
-                              AS DOUBLE) / COUNT(*), 6) + 0.0
+                   ROUND({fine_sum_sql('quality_score', 18)} / COUNT(*), 6)
+                       + 0.0
                        AS mean_quality
             FROM scored GROUP BY source
         ), ed AS (
@@ -1850,23 +1831,19 @@ ORACLES: dict[str, str] = {
         ) ORDER BY sim DESC, vec_id LIMIT 10
     """,
     "tpch_q14": f"""
-        SELECT 100.0 * CAST(CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
-                                          THEN {_DISC_PRICE}
-                                          ELSE CAST(0 AS DECIMAL(4,2))
-                                          END AS DECIMAL(18,4)))
-                            AS VARCHAR) AS DOUBLE)
-                     / {_xsum(_DISC_PRICE, 4)}
+        SELECT 100.0 * {exact_sum_sql(_price_when("p_type = 'PROMO'"), 4)}
+                     / {exact_sum_sql(DISC_PRICE_SQL, 4)}
                    AS promo_pct,
-               {_xsum(_DISC_PRICE, 4)}
+               {exact_sum_sql(DISC_PRICE_SQL, 4)}
                    AS total_revenue
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= '1999-09-01' AND l_shipdate < '1999-10-01'
     """,
     "tpch_q18": f"""
         WITH big AS (
-            SELECT l_orderkey, {_xsum('l_quantity', 2)} AS sum_qty
+            SELECT l_orderkey, {exact_sum_sql('l_quantity', 2)} AS sum_qty
             FROM lineitem GROUP BY l_orderkey
-            HAVING {_xsum('l_quantity', 2)} > 250
+            HAVING {exact_sum_sql('l_quantity', 2)} > 250
         )
         SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                sum_qty
@@ -1877,7 +1854,7 @@ ORACLES: dict[str, str] = {
     """,
     "skewed_agg": f"""
         SELECT l_returnflag,
-               {_xsum(_DISC_PRICE, 4)} AS revenue,
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue,
                COUNT(*) AS n_rows
         FROM lineitem GROUP BY l_returnflag
     """,
@@ -1898,12 +1875,11 @@ ORACLES: dict[str, str] = {
             FROM lineitem WHERE l_orderkey % 100 = 0
         )
     """,
-    "gap_fill": """
+    "gap_fill": f"""
         WITH hourly AS (
             SELECT user_id, date_trunc('hour', ts) AS hr,
                    COUNT(*) AS n_events,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                       AS sum_value
+                   {exact_sum_sql('value', 2)} AS sum_value
             FROM events GROUP BY 1, 2
         ), grid AS (
             SELECT user_id,
@@ -1972,7 +1948,7 @@ ORACLES: dict[str, str] = {
     "tpch_q7": f"""
         SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                CAST(EXTRACT(year FROM l_shipdate) AS BIGINT) AS l_year,
-               {_xsum(_DISC_PRICE, 4)} AS revenue
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -2000,7 +1976,7 @@ ORACLES: dict[str, str] = {
     "tpch_q15": f"""
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
-                   {_xsum(_DISC_PRICE, 4)}
+                   {exact_sum_sql(DISC_PRICE_SQL, 4)}
                        AS total_revenue
             FROM lineitem
             WHERE l_shipdate >= '1999-01-01' AND l_shipdate < '1999-04-01'
@@ -2017,16 +1993,16 @@ ORACLES: dict[str, str] = {
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE p_brand = 'Brand#12'
         ), per_part AS (
-            SELECT l_partkey AS avg_partkey, {_xavg('l_quantity', 2)} AS avg_qty
+            SELECT l_partkey AS avg_partkey, {exact_avg_sql('l_quantity', 2)} AS avg_qty
             FROM branded GROUP BY l_partkey
         )
-        SELECT {_xsum('l_extendedprice', 4)} / 7.0 AS avg_yearly,
+        SELECT {exact_sum_sql('l_extendedprice', 4)} / 7.0 AS avg_yearly,
                COUNT(*) AS n_items
         FROM branded JOIN per_part ON l_partkey = avg_partkey
         WHERE l_quantity < 0.2 * avg_qty
     """,
     "tpch_q19": f"""
-        SELECT {_xsum(_DISC_PRICE, 4)} AS revenue,
+        SELECT {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
@@ -2036,10 +2012,9 @@ ORACLES: dict[str, str] = {
            OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
                AND l_quantity BETWEEN 20 AND 30)
     """,
-    "window_range": """
+    "window_range": f"""
         SELECT event_id, user_id, ts,
-               CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
-                   AS trail_sum,
+               {exact_sum_over_sql('value', 'w', 2)} AS trail_sum,
                COUNT(*) OVER w AS trail_n
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
@@ -2134,7 +2109,7 @@ ORACLES: dict[str, str] = {
     # Centroid sums are decimal(38,20)-routed on both sides so the
     # accumulation is order-independent; the /n mean is one double
     # division and the 6-decimal round makes hashing robust.
-    "label_centroid": """
+    "label_centroid": f"""
         WITH flat AS (
             SELECT label,
                    CAST(generate_subscripts(embedding, 1) AS BIGINT) AS dim,
@@ -2142,22 +2117,22 @@ ORACLES: dict[str, str] = {
             FROM embeddings
         )
         SELECT label, dim,
-               round(CAST(SUM(CAST(v AS DECIMAL(38,20))) AS DOUBLE)
-                     / COUNT(*), 6) + 0.0 AS centroid_v,
+               round({fine_sum_sql('v', 20)} / COUNT(*), 6) + 0.0
+                   AS centroid_v,
                COUNT(*) AS n_vecs
         FROM flat GROUP BY label, dim
     """,
     # Q22 shape: scalar avg subquery (exact-decimal) + anti join + agg.
     "tpch_q1": f"""
         SELECT l_returnflag, l_linestatus,
-               {_xsum('l_quantity', 2)} AS sum_qty,
-               {_xsum('l_extendedprice', 2)} AS sum_base_price,
-               {_xsum(_DISC_PRICE, 4)} AS sum_disc_price,
-               {_xsum(_CHARGE, 6)}
+               {exact_sum_sql('l_quantity', 2)} AS sum_qty,
+               {exact_sum_sql('l_extendedprice', 2)} AS sum_base_price,
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS sum_disc_price,
+               {exact_sum_sql(CHARGE_SQL, 6)}
                    AS sum_charge,
-               {_xavg('l_quantity', 2)} AS avg_qty,
-               {_xavg('l_extendedprice', 2)} AS avg_price,
-               {_xavg('l_discount', 2)} AS avg_disc,
+               {exact_avg_sql('l_quantity', 2)} AS avg_qty,
+               {exact_avg_sql('l_extendedprice', 2)} AS avg_price,
+               {exact_avg_sql('l_discount', 2)} AS avg_disc,
                COUNT(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= '2001-08-06'
@@ -2166,12 +2141,9 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q8": f"""
         SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-               CAST(CAST(SUM(CAST(CASE WHEN n2.n_name = 'NATION_1'
-                                  THEN {_DISC_PRICE}
-                                  ELSE CAST(0 AS DECIMAL(4,2))
-                                  END AS DECIMAL(18,4))) AS VARCHAR) AS DOUBLE)
-                 / {_xsum(_DISC_PRICE, 4)} AS mkt_share,
-               {_xsum(_DISC_PRICE, 4)} AS total_volume
+               {exact_sum_sql(_price_when("n2.n_name = 'NATION_1'"), 4)}
+                 / {exact_sum_sql(DISC_PRICE_SQL, 4)} AS mkt_share,
+               {exact_sum_sql(DISC_PRICE_SQL, 4)} AS total_volume
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN part ON l_partkey = p_partkey
@@ -2187,11 +2159,11 @@ ORACLES: dict[str, str] = {
     """,
     "tpch_q22": f"""
         WITH thresh AS (
-            SELECT {_xsum('c_acctbal', 2)} / COUNT(c_acctbal) AS avg_bal
+            SELECT {exact_sum_sql('c_acctbal', 2)} / COUNT(c_acctbal) AS avg_bal
             FROM customer WHERE c_acctbal > 0.0
         )
         SELECT c_nationkey, COUNT(*) AS numcust,
-               {_xsum('c_acctbal', 2)} AS totacctbal
+               {exact_sum_sql('c_acctbal', 2)} AS totacctbal
         FROM customer, thresh
         WHERE c_acctbal > avg_bal
           AND NOT EXISTS (
@@ -2624,7 +2596,7 @@ ORACLES: dict[str, str] = {
             VALUES ('O', 'open'), ('P', 'pending'), (NULL, 'finished')
         )
         SELECT status_name, COUNT(*) AS n_orders,
-               {_xsum('o_totalprice', 2)} AS total_value
+               {exact_sum_sql('o_totalprice', 2)} AS total_value
         FROM orders JOIN dim
           ON nullif(o_orderstatus, 'F') IS NOT DISTINCT FROM status_key
         GROUP BY status_name
@@ -2632,7 +2604,7 @@ ORACLES: dict[str, str] = {
     "revenue_share": f"""
         WITH rev AS (
             SELECT n_name,
-                   {_xsum(_DISC_PRICE, 4)} AS revenue
+                   {exact_sum_sql(DISC_PRICE_SQL, 4)} AS revenue
             FROM lineitem
             JOIN orders   ON l_orderkey = o_orderkey
             JOIN customer ON o_custkey = c_custkey
@@ -2640,9 +2612,8 @@ ORACLES: dict[str, str] = {
             GROUP BY n_name
         )
         SELECT n_name, revenue,
-               round(revenue
-                     / CAST(SUM(CAST(revenue AS DECIMAL(18,4))) OVER ()
-                            AS DOUBLE) * 100.0, 6) + 0.0 AS revenue_share_pct
+               round(revenue / {exact_sum_over_sql('revenue', '()', 4)}
+                     * 100.0, 6) + 0.0 AS revenue_share_pct
         FROM rev
     """,
     # Record linkage: the oracle is the brute-force all-pairs join —
@@ -2655,12 +2626,11 @@ ORACLES: dict[str, str] = {
         FROM w a JOIN w b ON a.c_name < b.c_name
         WHERE levenshtein(a.c_name, b.c_name) <= 1
     """,
-    "outlier_events": """
+    "outlier_events": f"""
         WITH s AS (
             SELECT event_type, COUNT(*) AS n,
-                   CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS s1,
-                   CAST(SUM(CAST(value * value AS DECIMAL(28,4))) AS DOUBLE)
-                       AS s2
+                   {exact_sum_sql('value', 2)} AS s1,
+                   {exact_sum_wide_sql('value * value', 4)} AS s2
             FROM events GROUP BY event_type
         )
         SELECT event_id, e.event_type, value,
@@ -2708,7 +2678,7 @@ ORACLES: dict[str, str] = {
     "price_histogram": f"""
         SELECT CAST(floor(o_totalprice / 20000.0) AS BIGINT) AS price_bucket,
                COUNT(*) AS n_orders,
-               {_xsum('o_totalprice', 2)} AS total_value
+               {exact_sum_sql('o_totalprice', 2)} AS total_value
         FROM orders
         GROUP BY 1
     """,
@@ -2771,7 +2741,7 @@ ORACLES["stream_interval_join"] = """
 # decimal sum this oracle computes).
 ORACLES["stream_profile"] = f"""
     SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-           {_xsum('value', 2)} AS sum_value,
+           {exact_sum_sql('value', 2)} AS sum_value,
            MAX(value) AS max_value, MAX(ts) AS last_ts
     FROM events GROUP BY user_id
 """
@@ -3021,7 +2991,7 @@ COMPACT_TARGET_CHARS = 64_000
 ORACLES["skew_join"] = f"""
     WITH dim AS (
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS type_n,
-               {_xsum('value', 2)} AS type_sum
+               {exact_sum_sql('value', 2)} AS type_sum
         FROM events GROUP BY event_type
     )
     SELECT e.event_id, e.event_type, e.value, d.type_n, d.type_sum
@@ -3101,7 +3071,7 @@ ORACLES["stream_enrich"] = """
 # truncation, float re-parse drift) breaks the hash.
 ORACLES["csv_roundtrip"] = f"""
     SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events,
-           {_xsum('value', 2)} AS sum_value,
+           {exact_sum_sql('value', 2)} AS sum_value,
            MIN(ts) AS first_ts, MAX(ts) AS last_ts
     FROM events GROUP BY event_type
 """
@@ -3112,7 +3082,7 @@ ORACLES["orc_roundtrip"] = ORACLES["csv_roundtrip"]
 ORACLES["bucketed_join"] = f"""
     SELECT c_mktsegment,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {_xsum('o_totalprice', 2)} AS revenue
+           {exact_sum_sql('o_totalprice', 2)} AS revenue
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY c_mktsegment
 """
@@ -3288,7 +3258,7 @@ ORACLES["pit_join"] = f"""
     )
     SELECT d.c_mktsegment, d.version,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
-           {_xsum('o.o_totalprice', 2)} AS revenue
+           {exact_sum_sql('o.o_totalprice', 2)} AS revenue
     FROM orders o
     JOIN dim d
       ON o.o_custkey = d.c_custkey
@@ -3469,10 +3439,10 @@ ORACLES["resample_ohlc"] = f"""
            MIN(value) AS low,
            MAX(CASE WHEN rn_close = 1 THEN value END) AS close,
            CAST(COUNT(*) AS BIGINT) AS volume,
-           {{XSUM_VALUE}} AS sum_value
+           {exact_sum_sql('value', 2)} AS sum_value
     FROM m GROUP BY event_type, hour
     ORDER BY event_type, hour
-""".replace("{XSUM_VALUE}", _xsum("value", 2))
+"""
 
 # BFS twin: hop-limited recursive CTE with UNION dedup on (node, hop)
 # pairs; MIN(hop) over hops ≤ 4 equals the frontier BFS's min distance
@@ -3503,10 +3473,10 @@ ORACLES["bfs_reach"] = """
 # ROW_NUMBER (ties between equal cents are rank-ambiguous but
 # value-deterministic). Cents via the 2-decimal DECIMAL route — never
 # ROUND on a double product (the .5-boundary engine divergence).
-ORACLES["order_stat"] = """
+ORACLES["order_stat"] = f"""
     WITH c AS (
-        SELECT CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100
-                    AS BIGINT) AS cents
+        SELECT CAST({money_dec_sql('l_extendedprice')} * 100 AS BIGINT)
+                   AS cents
         FROM lineitem
     ), n AS (SELECT COUNT(*) AS n FROM c),
     ks AS (
@@ -3549,7 +3519,7 @@ ORACLES["attribution"] = f"""
     )
     SELECT touch_type, day,
            CAST(COUNT(*) AS BIGINT) AS n_purchases,
-           {_xsum('value', 2)} AS revenue
+           {exact_sum_sql('value', 2)} AS revenue
     FROM p GROUP BY touch_type, day
     ORDER BY touch_type, day
 """
@@ -3644,7 +3614,7 @@ ORACLES["funnel_windowed"] = """
 # resulting integers sum EXACTLY (HUGEINT here, decimal(38,0) in
 # Spark; per-node inflow < 1 keeps the scaled sum < 1e18); the
 # integer→double reconstruction routes through VARCHAR (DuckDB's
-# decimal→double cast double-rounds — the _xsum convention) and
+# decimal→double cast double-rounds — the exact_sum_sql convention) and
 # divides by 1e18 (one correctly-rounded op). The damping literals are
 # embedded as the repr of the exact Python doubles the Spark side uses
 # and parsed via string→double, which is correctly rounded — writing
@@ -3679,8 +3649,8 @@ def _pagerank_sql() -> str:
                      + CAST('{damp}' AS DOUBLE) * i.inflow AS pr
             FROM (
                 SELECT s.dst AS node,
-                       CAST(CAST(SUM(CAST(FLOOR((r.pr / dg.outdeg) * 1e18)
-                                          AS HUGEINT)) AS VARCHAR) AS DOUBLE)
+                       CAST(CAST(SUM({quantized_sql('(r.pr / dg.outdeg)', '1e18')})
+                                 AS VARCHAR) AS DOUBLE)
                          / 1e18 AS inflow
                 FROM sym s
                 JOIN deg dg ON dg.src = s.src
@@ -3711,7 +3681,7 @@ ORACLES["text_roundtrip"] = ORACLES["wordcount"]
 # (d2q, cell) argmin; the centroid mean is
 # float(Σ floor(v·1e15)) / 1e15 / n with the integer→double step
 # routed through VARCHAR (DuckDB's decimal→double cast double-rounds;
-# the _xsum convention). Init is the first IVF_K vectors by vec_id;
+# the exact_sum_sql convention). Init is the first IVF_K vectors by vec_id;
 # empty cells keep their previous centroid (COALESCE over the prior
 # round's table). The output is the LAST round's assignment, computed
 # against the centroids from round ITERS−1 — exactly the Spark loop's
@@ -3742,8 +3712,7 @@ def _kmeans_ctes() -> str:
         prev = f"c{it - 1}"
         sql += f""", d{it} AS (
             SELECT v.vec_id, c.cell,
-                   SUM(CAST(FLOOR((v.v - c.c) * (v.v - c.c) * 1e15)
-                            AS HUGEINT)) AS d2q
+                   SUM({quantized_sql('(v.v - c.c) * (v.v - c.c)', '1e15')}) AS d2q
             FROM vflat v JOIN {prev} c ON v.pos = c.pos
             GROUP BY v.vec_id, c.cell
         ), a{it} AS (
@@ -3755,7 +3724,7 @@ def _kmeans_ctes() -> str:
             WHERE rn = 1
         ), u{it} AS (
             SELECT a.cell, v.pos,
-                   ((CAST(CAST(SUM(CAST(FLOOR(v.v * 1e15) AS HUGEINT))
+                   ((CAST(CAST(SUM({quantized_sql('v.v', '1e15')})
                                AS VARCHAR) AS DOUBLE) / 1e15)
                     / COUNT(*)) AS c
             FROM a{it} a JOIN vflat v ON a.vec_id = v.vec_id
@@ -3808,8 +3777,7 @@ def _ann_ivf_sql() -> str:
             FROM qv, UNNEST(generate_series(1, len(qvec))) AS u(i)
         ), pd AS (
             SELECT c.cell,
-                   SUM(CAST(FLOOR((q.qx - c.c) * (q.qx - c.c) * 1e15)
-                            AS HUGEINT)) AS dq
+                   SUM({quantized_sql('(q.qx - c.c) * (q.qx - c.c)', '1e15')}) AS dq
             FROM c{IVF_ITERS} c JOIN qflat q ON q.pos = c.pos
             GROUP BY c.cell
         ), probe AS (
@@ -3863,8 +3831,7 @@ def _semantic_dedup_sql() -> str:
             FROM vecs, UNNEST(generate_series(1, len(v))) AS u(i)
         ), ad AS (
             SELECT f.vec_id, c.cell,
-                   SUM(CAST(FLOOR((f.x - c.c) * (f.x - c.c) * 1e15)
-                            AS HUGEINT)) AS d2q
+                   SUM({quantized_sql('(f.x - c.c) * (f.x - c.c)', '1e15')}) AS d2q
             FROM cvflat f JOIN c{IVF_ITERS} c ON f.pos = c.pos
             GROUP BY f.vec_id, c.cell
         ), acell AS (
@@ -3938,8 +3905,7 @@ def _pq_fit_ctes() -> str:
         prev = f"pqb{it - 1}"
         sql += f""", pqd{it} AS (
             SELECT s.vec_id, s.m, b.cell,
-                   SUM(CAST(FLOOR((s.x - b.c) * (s.x - b.c) * 1e15)
-                            AS HUGEINT)) AS d2q
+                   SUM({quantized_sql('(s.x - b.c) * (s.x - b.c)', '1e15')}) AS d2q
             FROM pqsflat s JOIN {prev} b ON b.m = s.m AND b.pos = s.pos
             GROUP BY s.vec_id, s.m, b.cell
         ), pqa{it} AS (
@@ -3953,7 +3919,7 @@ def _pq_fit_ctes() -> str:
         if it <= PQ_ITERS:
             sql += f""", pqu{it} AS (
             SELECT a.m, a.code AS cell, s.pos,
-                   ((CAST(CAST(SUM(CAST(FLOOR(s.x * 1e15) AS HUGEINT))
+                   ((CAST(CAST(SUM({quantized_sql('s.x', '1e15')})
                                AS VARCHAR) AS DOUBLE) / 1e15)
                     / COUNT(*)) AS c
             FROM pqa{it} a
@@ -3987,8 +3953,7 @@ def _ann_pq_sql() -> str:
             WHERE vec_id = {QUERY_VEC_ID}
         ), lut AS (
             SELECT b.m, b.cell,
-                   SUM(CAST(FLOOR((q.qx - b.c) * (q.qx - b.c) * 1e15)
-                            AS HUGEINT)) AS dq
+                   SUM({quantized_sql('(q.qx - b.c) * (q.qx - b.c)', '1e15')}) AS dq
             FROM {final_b} b JOIN qflat q ON q.m = b.m AND q.pos = b.pos
             GROUP BY b.m, b.cell
         ), adc AS (
@@ -4002,8 +3967,7 @@ def _ann_pq_sql() -> str:
             LIMIT {PQ_SHORTLIST}
         ), rer AS (
             SELECT s.vec_id,
-                   SUM(CAST(FLOOR((f.x - q.qx) * (f.x - q.qx) * 1e15)
-                            AS HUGEINT)) AS l2q
+                   SUM({quantized_sql('(f.x - q.qx) * (f.x - q.qx)', '1e15')}) AS l2q
             FROM short s
             JOIN pqsflat f USING (vec_id)
             JOIN qflat q ON q.m = f.m AND q.pos = f.pos
@@ -4079,8 +4043,7 @@ def _ann_recall_sql() -> str:
             WHERE vec_id < {KNN_Q}
         ), l2s AS (
             SELECT q.query_id, f.vec_id,
-                   SUM(CAST(FLOOR((f.v - q.qx) * (f.v - q.qx) * 1e15)
-                            AS HUGEINT)) AS l2q
+                   SUM({quantized_sql('(f.v - q.qx) * (f.v - q.qx)', '1e15')}) AS l2q
             FROM vflat f JOIN qvflat q ON q.pos = f.pos
             WHERE f.vec_id >= {KNN_Q}
             GROUP BY q.query_id, f.vec_id
@@ -4101,8 +4064,7 @@ def _ann_recall_sql() -> str:
         + _topk("lsh_topk", "lcand", "sim DESC, vec_id")
         + f""", pdq AS (
             SELECT q.query_id, c.cell,
-                   SUM(CAST(FLOOR((q.qx - c.c) * (q.qx - c.c) * 1e15)
-                            AS HUGEINT)) AS dq
+                   SUM({quantized_sql('(q.qx - c.c) * (q.qx - c.c)', '1e15')}) AS dq
             FROM {fc} c JOIN qvflat q ON q.pos = c.pos
             GROUP BY q.query_id, c.cell
         ), probes AS (
@@ -4126,8 +4088,7 @@ def _ann_recall_sql() -> str:
             WHERE vec_id < {KNN_Q}
         ), plut AS (
             SELECT q.query_id, b.m, b.cell,
-                   SUM(CAST(FLOOR((q.qx - b.c) * (q.qx - b.c) * 1e15)
-                            AS HUGEINT)) AS dq
+                   SUM({quantized_sql('(q.qx - b.c) * (q.qx - b.c)', '1e15')}) AS dq
             FROM {pb} b JOIN pqf q ON q.m = b.m AND q.pos = b.pos
             GROUP BY q.query_id, b.m, b.cell
         ), padc AS (
@@ -4240,8 +4201,8 @@ def _cluster_silhouette_sql() -> str:
         _kmeans_ctes()
         + f""", sd AS (
             SELECT a.vec_id, a.cell, c.cell AS ocell,
-                   CAST(SUM(CAST(FLOOR((v.v - c.c) * (v.v - c.c) * 1e15)
-                                 AS HUGEINT)) AS BIGINT) AS d2q
+                   CAST(SUM({quantized_sql('(v.v - c.c) * (v.v - c.c)', '1e15')})
+                        AS BIGINT) AS d2q
             FROM a{IVF_ITERS} a
             JOIN vflat v ON v.vec_id = a.vec_id
             JOIN c{IVF_ITERS} c ON c.pos = v.pos
@@ -4261,7 +4222,7 @@ def _cluster_silhouette_sql() -> str:
         )
         SELECT CAST(cell AS INT) AS cell,
                CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(CAST(SUM(CAST(FLOOR(sil * 1e15) AS HUGEINT))
+               CAST(CAST(SUM({quantized_sql('sil', '1e15')})
                          AS VARCHAR) AS DOUBLE) / 1e15 / COUNT(*)
                    AS mean_sil
         FROM sil GROUP BY cell
@@ -4282,11 +4243,11 @@ ORACLES["cluster_silhouette"] = _cluster_silhouette_sql()
 # the only doubles, computed with the identical operation sequence as
 # the Spark side (correctly-rounded HUGEINT→DOUBLE via VARCHAR, then
 # one division each).
-ORACLES["linreg_ols"] = """
+ORACLES["linreg_ols"] = f"""
     WITH li AS (
         SELECT l_returnflag, l_linestatus,
-               CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS xi,
-               CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS yi
+               {fixed_long_sql('l_quantity', 2)} AS xi,
+               {fixed_long_sql('l_extendedprice', 2)} AS yi
         FROM lineitem
     ), st AS (
         SELECT l_returnflag, l_linestatus,
@@ -4298,9 +4259,9 @@ ORACLES["linreg_ols"] = """
         FROM li GROUP BY l_returnflag, l_linestatus
     ), comb AS (
         SELECT l_returnflag, l_linestatus, n, sx, sy,
-               CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS num,
-               CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS den,
-               CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS ssy
+               {comoment_sql('n', 'sxy', 'sx', 'sy')} AS num,
+               {comoment_sql('n', 'sxx', 'sx', 'sx')} AS den,
+               {comoment_sql('n', 'syy', 'sy', 'sy')} AS ssy
         FROM st
     )
     SELECT l_returnflag, l_linestatus, n AS n_rows,
@@ -4322,10 +4283,10 @@ ORACLES["linreg_ols"] = """
 # 3-sigma outlier census with the division-free integer comparison
 # (n·x − S)² > 9(n·Q − S²) — every product exact in HUGEINT, so the
 # per-row flag is accumulation-order- and engine-independent.
-ORACLES["zscore_outliers"] = """
+ORACLES["zscore_outliers"] = f"""
     WITH ev AS (
         SELECT event_type,
-               CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+               {fixed_long_sql('value', 4)} AS vi
         FROM events
     ), st AS (
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -4336,8 +4297,7 @@ ORACLES["zscore_outliers"] = """
         SELECT ev.event_type, st.n,
                CASE WHEN (CAST(st.n AS HUGEINT) * ev.vi - st.s)
                          * (CAST(st.n AS HUGEINT) * ev.vi - st.s)
-                       > 9 * (CAST(st.n AS HUGEINT) * st.q
-                              - CAST(st.s AS HUGEINT) * st.s)
+                       > 9 * ({comoment_sql('st.n', 'st.q', 'st.s', 'st.s')})
                     THEN 1 ELSE 0 END AS is_outlier
         FROM ev JOIN st USING (event_type)
     )
@@ -4493,52 +4453,33 @@ ORACLES["image_jpeg_ahash"] = _image_jpeg_ahash_sql()
 # One-pass Pearson correlation matrix: 15 exact sufficient statistics
 # (HUGEINT), exact integer combinations, then the identical double
 # sequence per pair (num / sqrt(denx·deny), correctly-rounded casts).
-ORACLES["corr_matrix"] = """
+_CORR_VARS = [
+    ("q", "quantity"), ("p", "extendedprice"), ("dd", "discount"), ("t", "tax")
+]
+_CORR_SS = ",\n".join(
+    f"SUM(CAST({a} AS HUGEINT) * {b}) AS ss_{a}_{b}"
+    for i, (a, _) in enumerate(_CORR_VARS) for b, _ in _CORR_VARS[i:]
+)
+_CORR_PAIRS = "\nUNION ALL ".join(
+    f"SELECT '{x}', '{y}', {comoment_sql('n', f'ss_{a}_{b}', f's_{a}', f's_{b}')},"
+    f" {comoment_sql('n', f'ss_{a}_{a}', f's_{a}', f's_{a}')},"
+    f" {comoment_sql('n', f'ss_{b}_{b}', f's_{b}', f's_{b}')} FROM st"
+    for i, (a, x) in enumerate(_CORR_VARS) for b, y in _CORR_VARS[i + 1:]
+)
+ORACLES["corr_matrix"] = f"""
     WITH li AS (
-        SELECT CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100 AS BIGINT) AS q,
-               CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS p,
-               CAST(CAST(l_discount AS DECIMAL(4,2)) * 100 AS BIGINT) AS dd,
-               CAST(CAST(l_tax AS DECIMAL(4,2)) * 100 AS BIGINT) AS t
+        SELECT {fixed_long_sql('l_quantity', 2)} AS q,
+               {fixed_long_sql('l_extendedprice', 2)} AS p,
+               {rate_long_sql('l_discount')} AS dd,
+               {rate_long_sql('l_tax')} AS t
         FROM lineitem
     ), st AS (
         SELECT CAST(COUNT(*) AS HUGEINT) AS n,
                SUM(q) AS s_q, SUM(p) AS s_p, SUM(dd) AS s_dd, SUM(t) AS s_t,
-               SUM(CAST(q AS HUGEINT) * q) AS ss_q_q,
-               SUM(CAST(p AS HUGEINT) * p) AS ss_p_p,
-               SUM(CAST(dd AS HUGEINT) * dd) AS ss_dd_dd,
-               SUM(CAST(t AS HUGEINT) * t) AS ss_t_t,
-               SUM(CAST(q AS HUGEINT) * p) AS ss_q_p,
-               SUM(CAST(q AS HUGEINT) * dd) AS ss_q_dd,
-               SUM(CAST(q AS HUGEINT) * t) AS ss_q_t,
-               SUM(CAST(p AS HUGEINT) * dd) AS ss_p_dd,
-               SUM(CAST(p AS HUGEINT) * t) AS ss_p_t,
-               SUM(CAST(dd AS HUGEINT) * t) AS ss_dd_t
+               {_CORR_SS}
         FROM li
     ), pairs(var_x, var_y, num, denx, deny) AS (
-        SELECT 'quantity', 'extendedprice',
-               n*ss_q_p - CAST(s_q AS HUGEINT)*s_p,
-               n*ss_q_q - CAST(s_q AS HUGEINT)*s_q,
-               n*ss_p_p - CAST(s_p AS HUGEINT)*s_p FROM st
-        UNION ALL SELECT 'quantity', 'discount',
-               n*ss_q_dd - CAST(s_q AS HUGEINT)*s_dd,
-               n*ss_q_q - CAST(s_q AS HUGEINT)*s_q,
-               n*ss_dd_dd - CAST(s_dd AS HUGEINT)*s_dd FROM st
-        UNION ALL SELECT 'quantity', 'tax',
-               n*ss_q_t - CAST(s_q AS HUGEINT)*s_t,
-               n*ss_q_q - CAST(s_q AS HUGEINT)*s_q,
-               n*ss_t_t - CAST(s_t AS HUGEINT)*s_t FROM st
-        UNION ALL SELECT 'extendedprice', 'discount',
-               n*ss_p_dd - CAST(s_p AS HUGEINT)*s_dd,
-               n*ss_p_p - CAST(s_p AS HUGEINT)*s_p,
-               n*ss_dd_dd - CAST(s_dd AS HUGEINT)*s_dd FROM st
-        UNION ALL SELECT 'extendedprice', 'tax',
-               n*ss_p_t - CAST(s_p AS HUGEINT)*s_t,
-               n*ss_p_p - CAST(s_p AS HUGEINT)*s_p,
-               n*ss_t_t - CAST(s_t AS HUGEINT)*s_t FROM st
-        UNION ALL SELECT 'discount', 'tax',
-               n*ss_dd_t - CAST(s_dd AS HUGEINT)*s_t,
-               n*ss_dd_dd - CAST(s_dd AS HUGEINT)*s_dd,
-               n*ss_t_t - CAST(s_t AS HUGEINT)*s_t FROM st
+        {_CORR_PAIRS}
     )
     SELECT var_x, var_y,
            CAST(CAST(num AS VARCHAR) AS DOUBLE)
@@ -4615,10 +4556,10 @@ ORACLES["stream_sliding"] = ORACLES["event_sliding"]
 # TWAP: exact integer microsecond intervals × exact 1e-4 value units;
 # per-term products route through HUGEINT, the area sum is exact, the
 # final division is one double op on correctly-rounded casts.
-ORACLES["twap"] = """
+ORACLES["twap"] = f"""
     WITH ev AS (
         SELECT user_id, epoch_us(ts) AS t_us, event_id,
-               CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+               {fixed_long_sql('value', 4)} AS vi
         FROM events
     ), seg AS (
         SELECT user_id, t_us, vi,
@@ -4642,10 +4583,10 @@ ORACLES["twap"] = """
 # 0-floor over preceding rows → max difference), deviations n-scaled
 # so every intermediate is an exact HUGEINT; the Spark twin stages the
 # same two windows over one sort.
-ORACLES["cusum_drift"] = """
+ORACLES["cusum_drift"] = f"""
     WITH ev AS (
         SELECT event_type, ts, event_id,
-               CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi
+               {fixed_long_sql('value', 4)} AS vi
         FROM events
     ), st AS (
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(vi) AS s
@@ -4804,12 +4745,12 @@ ORACLES["negative_sampling"] = _negative_sampling_sql()
 
 # Freshness decay with exact dyadic weights 2^(30−age): integer count
 # mass, HUGEINT value mass, single double divisions at the end.
-ORACLES["decay_agg"] = """
+ORACLES["decay_agg"] = f"""
     WITH mx AS (
         SELECT MAX(CAST(ts AS DATE)) AS max_day FROM events
     ), aged AS (
         SELECT event_type,
-               CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS BIGINT) AS vi,
+               {fixed_long_sql('value', 4)} AS vi,
                (CAST(1 AS BIGINT) << (30 - LEAST(
                    date_diff('day', CAST(ts AS DATE), mx.max_day), 30)))
                    AS w
@@ -5638,7 +5579,7 @@ def _stream_late_audit_sql() -> str:
         SELECT date_trunc('hour', ts) AS win_start, event_type,
                COUNT(*) AS total_n,
                COUNT(*) FILTER (WHERE event_id < {off}) AS on_time_n,
-               {_xsum(f"CASE WHEN event_id < {off} THEN value END", 2)}
+               {exact_sum_sql(f"CASE WHEN event_id < {off} THEN value END", 2)}
                    AS on_time_sum
         FROM allr GROUP BY 1, 2
     )

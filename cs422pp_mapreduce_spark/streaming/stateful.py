@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.numeric import exact_int, fixed_long
+
 PROFILE_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -445,9 +447,7 @@ def _twap_stream_projection(ev: DataFrame) -> DataFrame:
         "user_id",
         F.unix_micros("ts").alias("t_us"),
         "event_id",
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        fixed_long("value", 4).alias("vi"),
     )
 
 
@@ -459,7 +459,7 @@ def _twap_final_projection(sink: DataFrame) -> DataFrame:
         "n_events",
         "span_us",
         (
-            F.col("area_str").cast("decimal(38,0)").cast("double")
+            exact_int("area_str").cast("double")
             / (F.col("span_us").cast("double") * F.lit(10000.0))
         ).alias("twap"),
     )
@@ -628,9 +628,7 @@ def _cusum_static_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .select(
             "event_type",
-            (F.col("value").cast("decimal(18,4)") * 10000)
-            .cast("long")
-            .alias("vi"),
+            fixed_long("value", 4).alias("vi"),
         )
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("vi").alias("s"))
@@ -644,9 +642,7 @@ def _cusum_stream_projection(ev: DataFrame) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        (F.col("value").cast("decimal(18,4)") * 10000)
-        .cast("long")
-        .alias("vi"),
+        fixed_long("value", 4).alias("vi"),
     )
 
 
@@ -657,7 +653,7 @@ def _cusum_final_projection(sink: DataFrame) -> DataFrame:
         "event_type",
         F.col("n_total").alias("n_events"),
         (
-            F.col("cmax_str").cast("decimal(38,0)").cast("double")
+            exact_int("cmax_str").cast("double")
             / (F.col("n_total").cast("double") * F.lit(10000.0))
         ).alias("max_cusum"),
     )
