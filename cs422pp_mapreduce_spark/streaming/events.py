@@ -44,12 +44,12 @@ def stream_drain_conf(spark: SparkSession):
 
     Stateful streaming fixes its state-store instance count from this
     conf at the first batch and AQE never coalesces streaming stages,
-    so the batch default (one partition per core) makes EVERY stateful
-    stage of EVERY micro-batch run one task + one state-store commit
-    per core — pure fixed cost at contract-fixture state sizes (see
-    session.stream_state_partitions). Results are partition-count
-    independent by the engine's conventions (decimal-routed sums,
-    per-key sequential state), which the oracle gate re-verifies.
+    so EVERY stateful stage of EVERY micro-batch runs one task + one
+    state-store commit per state partition — pure fixed cost at
+    contract-fixture state sizes (see session.stream_state_partitions).
+    Results are partition-count independent by the engine's
+    conventions (decimal-routed sums, per-key sequential state), which
+    the oracle gate re-verifies.
 
     The conf is session-scoped, so a drain temporarily narrows batch
     queries planned concurrently on OTHER threads — harmless for

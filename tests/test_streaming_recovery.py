@@ -163,3 +163,72 @@ def test_upsert_versioned_replay_is_idempotent(spark, tmp_path):
     )
     assert again == once
     assert table_versions(tdir) == [0, 1]
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint keeps the state-partition count it started with:
+    Spark restores ``spark.sql.shuffle.partitions`` from the offset log,
+    so a dedup stream begun under 8 partitions and restarted under
+    ``stream_drain_conf`` still runs 8 state stores and still emits each
+    event exactly once. A fresh checkpoint under the drain conf runs
+    ``stream_state_partitions()`` of them."""
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cs422pp_mapreduce_spark.session import (
+        scoped_conf,
+        stream_state_partitions,
+    )
+    from cs422pp_mapreduce_spark.streaming.dedup import stream_dedup_events
+    from cs422pp_mapreduce_spark.streaming.events import stream_drain_conf
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+
+    def land(name, ids):
+        ts = [t0 + timedelta(seconds=i) for i in ids]
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+            }),
+            str(src / f"{name}.parquet"),
+        )
+
+    def run(ckpt, sink):
+        events = spark.readStream.schema(
+            "event_id long, ts timestamp"
+        ).parquet(str(src))
+        q = (
+            stream_dedup_events(events, watermark="1 hour")
+            .writeStream.format("parquet")
+            .option("path", str(sink))
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        ops = [op for p in q.recentProgress for op in p.stateOperators]
+        q.stop()
+        assert ops
+        return ops
+
+    ckpt, sink = tmp_path / "ckpt8", tmp_path / "sink8"
+    land("b0", list(range(100)))
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+        run(ckpt, sink)
+    land("b1", list(range(50, 150)))
+    with stream_drain_conf(spark):
+        ops = run(ckpt, sink)
+    assert {op.numShufflePartitions for op in ops} == {8}
+    ids = [r["event_id"] for r in spark.read.parquet(str(sink)).collect()]
+    assert sorted(ids) == list(range(150))
+
+    with stream_drain_conf(spark):
+        ops = run(tmp_path / "ckpt_fresh", tmp_path / "sink_fresh")
+    assert {op.numStateStoreInstances for op in ops} == {
+        stream_state_partitions()
+    }

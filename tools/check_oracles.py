@@ -17,10 +17,15 @@ No tolerance anywhere: the engine's determinism conventions
 (oracles.py) are supposed to make results serialize bit-identically.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+Each ``query`` is a registered name or a shell pattern (``'stream_*'``).
+A name or pattern that matches no registered query exits 2 before any
+query runs, so a mistyped subset cannot pass by checking nothing.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import sys
 import time
@@ -96,11 +101,27 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def select(names: list[str], patterns: list[str]) -> tuple[list[str], list[str]]:
+    """Names matching any of ``patterns`` (all names when there are
+    none), and the patterns that match no name."""
+    if not patterns:
+        return list(names), []
+    hits = {p: {n for n in names if fnmatch.fnmatchcase(n, p)} for p in patterns}
+    picked = set().union(*hits.values())
+    return [n for n in names if n in picked], [p for p, h in hits.items() if not h]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
     import __spark_entry__ as E
+
+    qs, oracles = E.queries(), E.oracle_sql()
+    chosen, unmatched = select(list(qs), sys.argv[2:])
+    if unmatched:
+        print("no registered query matches:", ", ".join(unmatched))
+        return 2
+
     from cs422pp_mapreduce_spark.session import get_spark
 
     spark = get_spark("check-oracles")
@@ -110,13 +131,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, oracles = E.queries(), E.oracle_sql()
     failed, rows_only = [], []
-    n_run = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        n_run += 1
+    for name in chosen:
+        fn = qs[name]
         t0 = time.time()
         sdf = fn(spark, sf_dir).toPandas()
         t1 = time.time()
@@ -137,7 +154,7 @@ def main() -> int:
         if problems:
             failed.append(name)
 
-    print(f"\n{n_run - len(failed) - len(rows_only)} OK, "
+    print(f"\n{len(chosen) - len(failed) - len(rows_only)} OK, "
           f"{len(failed)} FAIL, {len(rows_only)} rows-only")
     if failed:
         print("FAILED:", ", ".join(failed))
