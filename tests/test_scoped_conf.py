@@ -62,3 +62,17 @@ def test_conflicting_overlap_raises_and_keeps_holder(spark):
         assert spark.conf.get(PARTS) == "3"
     assert spark.conf.get(PARTS) == before
 
+
+def test_scoping_an_unset_key_unsets_it_after(spark):
+    """A key with no value before the scope reads the scoped value inside
+    it and has no value again after it, also when the body raises."""
+    key = "spark.graft.test.unset"
+    assert spark.conf.get(key, None) is None
+    with scoped_conf(spark, {key: "on"}):
+        assert spark.conf.get(key) == "on"
+    assert spark.conf.get(key, None) is None
+    with pytest.raises(ValueError):
+        with scoped_conf(spark, {key: "on"}):
+            assert spark.conf.get(key) == "on"
+            raise ValueError("boom")
+    assert spark.conf.get(key, None) is None

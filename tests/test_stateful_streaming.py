@@ -16,6 +16,10 @@ from cs422pp_mapreduce_spark.streaming.stateful import (
 )
 
 
+def _batches_with_input(query) -> int:
+    return sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
+
+
 @pytest.fixture()
 def stream_dir(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events")
@@ -28,9 +32,12 @@ def stream_dir(spark, sf_dir, tmp_path):
 
 def test_stateful_profile_converges_to_batch(spark, sf_dir, stream_dir):
     stream = read_event_stream(spark, stream_dir, max_files_per_trigger=1)
-    run_stream_to_memory(
+    q = run_stream_to_memory(
         user_activity_profile(stream), "t_profiles", mode="update"
     )
+    # one micro-batch per staged file, so the second one folds into
+    # state the first one left
+    assert _batches_with_input(q) == 2
     # update mode emits one row per user per micro-batch; the final
     # state per user is the row with max n_events (monotone counters)
     emitted = spark.table("t_profiles").toPandas()
@@ -89,11 +96,13 @@ def test_event_time_ttl_expires_idle_keys_under_skew(spark, tmp_path):
     )
 
     stream = read_event_stream(spark, d, max_files_per_trigger=1)
-    run_stream_to_memory(
+    q = run_stream_to_memory(
         user_activity_profile(stream, ttl_minutes=60, event_time=True),
         "t_profiles_ettl",
         mode="update",
     )
+    # expiry needs the watermark carried across batches, not one drain
+    assert _batches_with_input(q) == 4
     user1_counts = {
         r.n_events
         for r in spark.table("t_profiles_ettl").where("user_id = 1").collect()

@@ -11,6 +11,7 @@ section claims, so it gets a test.
 from __future__ import annotations
 
 import os
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import functions as F
 
@@ -165,6 +166,53 @@ def test_upsert_versioned_replay_is_idempotent(spark, tmp_path):
     assert table_versions(tdir) == [0, 1]
 
 
+T0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _land_events(src, name, ids):
+    """One parquet file of ``ids`` with a timestamp a second apart each."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [T0 + timedelta(seconds=i) for i in ids]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        }),
+        str(src / f"{name}.parquet"),
+    )
+
+
+def _run_dedup(spark, src, ckpt, sink):
+    """Drain ``src`` through stream dedup into a parquet sink in one
+    availableNow run; returns the run's progress reports."""
+    from cs422pp_mapreduce_spark.streaming.dedup import stream_dedup_events
+
+    events = spark.readStream.schema("event_id long, ts timestamp").parquet(
+        str(src)
+    )
+    q = (
+        stream_dedup_events(events, watermark="1 hour")
+        .writeStream.format("parquet")
+        .option("path", str(sink))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    progress = q.recentProgress
+    q.stop()
+    assert progress
+    return progress
+
+
+def _sink_ids(spark, sink):
+    return sorted(r["event_id"] for r in spark.read.parquet(str(sink)).collect())
+
+
 def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     """A checkpoint keeps the state-partition count it started with:
     Spark restores ``spark.sql.shuffle.partitions`` from the offset log,
@@ -172,63 +220,64 @@ def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     ``stream_drain_conf`` still runs 8 state stores and still emits each
     event exactly once. A fresh checkpoint under the drain conf runs
     ``stream_state_partitions()`` of them."""
-    from datetime import datetime, timedelta, timezone
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from cs422pp_mapreduce_spark.session import (
         scoped_conf,
         stream_state_partitions,
     )
-    from cs422pp_mapreduce_spark.streaming.dedup import stream_dedup_events
     from cs422pp_mapreduce_spark.streaming.events import stream_drain_conf
 
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
-
-    def land(name, ids):
-        ts = [t0 + timedelta(seconds=i) for i in ids]
-        pq.write_table(
-            pa.table({
-                "event_id": pa.array(ids, pa.int64()),
-                "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
-            }),
-            str(src / f"{name}.parquet"),
-        )
-
-    def run(ckpt, sink):
-        events = spark.readStream.schema(
-            "event_id long, ts timestamp"
-        ).parquet(str(src))
-        q = (
-            stream_dedup_events(events, watermark="1 hour")
-            .writeStream.format("parquet")
-            .option("path", str(sink))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        ops = [op for p in q.recentProgress for op in p.stateOperators]
-        q.stop()
+    def state_ops(progress):
+        ops = [op for p in progress for op in p.stateOperators]
         assert ops
         return ops
 
+    src = tmp_path / "src"
+    src.mkdir()
     ckpt, sink = tmp_path / "ckpt8", tmp_path / "sink8"
-    land("b0", list(range(100)))
+    _land_events(src, "b0", list(range(100)))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        run(ckpt, sink)
-    land("b1", list(range(50, 150)))
+        _run_dedup(spark, src, ckpt, sink)
+    _land_events(src, "b1", list(range(50, 150)))
     with stream_drain_conf(spark):
-        ops = run(ckpt, sink)
+        ops = state_ops(_run_dedup(spark, src, ckpt, sink))
     assert {op.numShufflePartitions for op in ops} == {8}
-    ids = [r["event_id"] for r in spark.read.parquet(str(sink)).collect()]
-    assert sorted(ids) == list(range(150))
+    assert _sink_ids(spark, sink) == list(range(150))
 
     with stream_drain_conf(spark):
-        ops = run(tmp_path / "ckpt_fresh", tmp_path / "sink_fresh")
+        ops = state_ops(
+            _run_dedup(spark, src, tmp_path / "ckpt_fresh", tmp_path / "sink_fresh")
+        )
     assert {op.numStateStoreInstances for op in ops} == {
         stream_state_partitions()
     }
+
+
+def test_checkpoint_changes_file_manager_without_replaying(spark, tmp_path):
+    """A dedup checkpoint begun under Spark's FileContext-based manager
+    restarts under the session default, the FileSystem-based one: the
+    restart reads only the file that landed while the stream was down,
+    the sink holds each id once, and the checkpoint keeps its Hadoop
+    ``.crc`` files in the logs and beside the state deltas."""
+    from cs422pp_mapreduce_spark.session import scoped_conf
+
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt, sink = tmp_path / "ckpt", tmp_path / "sink"
+    _land_events(src, "b0", list(range(100)))
+    file_context = CKPT_PKG + "FileContextBasedCheckpointFileManager"
+    with scoped_conf(spark, {CKPT_MANAGER: file_context}):
+        _run_dedup(spark, src, ckpt, sink)
+    _land_events(src, "b1", list(range(50, 150)))
+    progress = _run_dedup(spark, src, ckpt, sink)
+
+    assert spark.conf.get(CKPT_MANAGER) == (
+        CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+    )
+    assert sum(p["numInputRows"] for p in progress) == 100
+    assert _sink_ids(spark, sink) == list(range(150))
+    # Hadoop checksums of the files the restart wrote (state version
+    # N + 1 holds batch N)
+    batch = progress[0]["batchId"]
+    for log in ("offsets", "commits"):
+        assert f".{batch}.crc" in os.listdir(ckpt / log), log
+    assert f".{batch + 1}.delta.crc" in os.listdir(ckpt / "state" / "0" / "0")
