@@ -27,7 +27,6 @@ integration (operators/tokenize.py) runs it inside Arrow-batched
 
 from __future__ import annotations
 
-import os
 import re
 from collections import Counter
 from functools import lru_cache
@@ -261,44 +260,3 @@ class BPEEncoder:
 
 DEFAULT_ENCODER = BPEEncoder(train_bpe(_SEED_TEXT))
 
-
-def get_token_counter():
-    """Return a ``text -> int`` token-count callable, preferring a
-    NATIVE tokenizer when explicitly enabled — the BPE analog of
-    multimodal.py's real-decode slots.
-
-    The pure-Python encoder above is Arrow-batched but CPU-bound in
-    Python: fine for correctness pinning at test scale, ~2-3 orders of
-    magnitude below what a 100 TB tokenization pass needs. Production
-    binds a Rust/C++ tokenizer (e.g. the HuggingFace ``tokenizers``
-    wheel: a byte-level BPE with a real merges.txt, released under
-    Apache-2.0) inside the same mapInPandas kernels — ONLY the
-    ``count`` callable changes; the Spark plan (batch shapes, schema,
-    partitioning) is identical, which is exactly why the plumbing is
-    tested with the slow encoder.
-
-    Opt-in via ``SPARK_GRAFT_NATIVE_BPE=1`` *and* an importable
-    ``tokenizers`` package (absent in this container — the flag then
-    raises, loudly, rather than silently falling back: a run that
-    asked for native throughput must not get the slow path). Default:
-    the deterministic pure-Python encoder the oracle replicas pin.
-    """
-    if os.environ.get("SPARK_GRAFT_NATIVE_BPE") == "1":
-        try:
-            from tokenizers import Tokenizer  # noqa: F401
-        except ImportError as exc:  # pragma: no cover — env-dependent
-            raise NotImplementedError(
-                "SPARK_GRAFT_NATIVE_BPE=1 but the `tokenizers` package "
-                "is not installed in this environment; install it (and "
-                "provide a vocab/merges file via "
-                "SPARK_GRAFT_BPE_VOCAB) or unset the flag"
-            ) from exc
-        vocab = os.environ.get("SPARK_GRAFT_BPE_VOCAB")
-        if not vocab:  # pragma: no cover — env-dependent
-            raise NotImplementedError(
-                "native BPE needs SPARK_GRAFT_BPE_VOCAB pointing at a "
-                "tokenizer.json (byte-level BPE vocab+merges)"
-            )
-        tok = Tokenizer.from_file(vocab)  # pragma: no cover
-        return lambda text: len(tok.encode(text).ids)  # pragma: no cover
-    return DEFAULT_ENCODER.count

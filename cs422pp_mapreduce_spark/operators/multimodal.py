@@ -5,19 +5,24 @@ with typed metadata, processed by Arrow-batched pandas functions via
 ``mapInPandas`` — the one place Python in the hot path is justified,
 because the work is per-byte media decoding, not relational logic.
 
-Decode coverage (r07): PNG is decoded FOR REAL, pixels included —
-``encode_png_gray8`` emits spec-complete grayscale PNGs (zlib IDAT,
-per-scanline filters, CRCs) and ``decode_png_gray8`` is an independent
-full decoder (chunk walk, CRC verify, inflate, all five spec filter
-reconstructions incl. Paeth), both pure stdlib; the aHash/resize/
-pipeline queries run on genuinely decoded pixels and hash-verify
-against arithmetic oracles. Real-format HEADER parsing (PNG IHDR with
-CRC, JPEG marker walk, WAV RIFF) likewise needs no libs. What remains
-env-gated is general-purpose decode of arbitrary formats/color types
-(``decode_image_real`` names the Pillow call); ``decode_image_stub``
-parses the synthetic IMG0 container for the generic-plumbing tests.
-Everything Spark-side — schema, batch iteration shape, partition
-sizing, UDF signature — is real and tested (tests/test_multimodal.py,
+Every per-blob codec runs through one of two shared Arrow passes:
+``_decode_pass`` (one typed row per blob, null fields for a blob the
+kernel cannot decode) and ``_encode_pass`` (one blob per document id).
+Only the byte-level kernel is specific to a format:
+
+- real decoders, pure stdlib: PNG pixels (``decode_png_gray8``: chunk
+  walk, CRC verify, inflate, all five spec filters incl. Paeth),
+  baseline grayscale JPEG (``decode_jpeg_gray``), 16-bit PCM WAV
+  (``decode_wav_pcm16``) and MJPEG AVI (``decode_avi_mjpeg``), each
+  beside an independent encoder; real-format header parsing (PNG IHDR
+  with CRC, JPEG marker walk, WAV RIFF);
+- synthetic containers (IMG0, VID0) for the generic-plumbing tests.
+
+Formats these kernels do not cover (other PNG color types and bit
+depths, progressive JPEG, compressed audio, inter-frame video codecs)
+need an external codec library and are out of scope. Everything
+Spark-side — schema, batch iteration shape, partition sizing — is
+tested (tests/test_multimodal.py, tests/test_real_formats.py,
 tests/test_round7_wave4.py, tests/test_properties.py).
 
 Scale notes:
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import default_parallelism
 from ..sources.catalog import load_table
 
 # Synthetic media blob format for tests: b'IMG0' + u16 width + u16
@@ -68,6 +74,90 @@ IMAGE_META_SCHEMA = T.StructType(
 )
 
 
+def _decode_pass(media: DataFrame, schema: T.StructType, decode) -> DataFrame:
+    """The Arrow decode pass every per-blob kernel runs through: one
+    output row per input blob, columns named by ``schema``.
+
+    ``decode(blob)`` returns a name → value mapping, or None when the
+    blob does not decode. ``media_id`` is copied from the input,
+    ``n_bytes`` is the blob length (0 for a null blob), ``ok`` says
+    whether the blob decoded, and every other field is the decoder's
+    value of that name — null when the blob did not decode."""
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            blobs = pdf["blob"]
+            metas = [decode(b) for b in blobs]
+            cols = {}
+            for name in names:
+                if name == "media_id":
+                    cols[name] = pdf["media_id"]
+                elif name == "n_bytes":
+                    cols[name] = [0 if b is None else len(b) for b in blobs]
+                elif name == "ok":
+                    cols[name] = [m is not None for m in metas]
+                else:
+                    cols[name] = [None if m is None else m[name] for m in metas]
+            yield pd.DataFrame(cols)
+
+    return media.mapInPandas(batches, schema=schema)
+
+
+def _named(decode, *names):
+    """Adapt a decoder that returns a tuple (or None) to the
+    name → value mapping ``_decode_pass`` reads."""
+
+    def named(blob):
+        got = decode(blob)
+        return None if got is None else dict(zip(names, got))
+
+    return named
+
+
+def _encode_pass(docs: DataFrame, mime: str, encode) -> DataFrame:
+    """The Arrow encode pass: one ``mime`` blob ``encode(doc_id)`` per
+    document, as a MEDIA_SCHEMA table.
+
+    The id column is REPARTITIONED to the session parallelism before
+    the codec: a codec such as the JPEG DCT is ~1.5 ms/image of Python
+    work, and the upstream scan's partition count follows FILE layout,
+    not CPU count (one small parquet file → one partition → a
+    single-core codec pass: 10 s instead of 0.8 s at sf0.1). The
+    exchange moves 8-byte ids — the canonical
+    cheap-shuffle-before-expensive-map trade, and a no-op cost-wise
+    wherever the scan is already wide."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["doc_id"],
+                    "blob": [encode(int(d)) for d in pdf["doc_id"]],
+                    "mime": mime,
+                }
+            )
+
+    ids = docs.select("doc_id").repartition(default_parallelism(), "doc_id")
+    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+
+
+def _le_bytes(col, n: int) -> list:
+    c = col.cast("bigint")
+    return [F.lpad(F.hex(F.shiftright(c, 8 * i) % 256), 2, "0") for i in range(n)]
+
+
+def _hex_le(col, n: int):
+    """``col`` as ``n`` little-endian bytes in hex, JVM-side (the blob
+    builders concatenate hex and ``unhex`` once)."""
+    return F.concat(*_le_bytes(col, n))
+
+
+def _hex_be(col, n: int):
+    """``col`` as ``n`` big-endian bytes in hex (see ``_hex_le``)."""
+    return F.concat(*reversed(_le_bytes(col, n)))
+
+
 def encode_fake_image(media_id: int, width: int, height: int, channels: int = 3) -> bytes:
     payload = bytes((media_id * 31 + i) % 251 for i in range(min(width * height, 64)))
     return MAGIC + struct.pack("<HHB", width, height, channels) + payload
@@ -81,54 +171,22 @@ def decode_image_stub(blob: bytes) -> tuple[int, int, int] | None:
     return w, h, c
 
 
-def decode_image_real(blob: bytes):
-    """General-purpose pixel decode (arbitrary formats/color types —
-    not available in this container).
-
-    Note the scope: 8-bit grayscale PNG pixels ARE decoded for real by
-    ``decode_png_gray8`` below (pure stdlib: inflate + all five spec
-    filters, hash-verified against arithmetic oracles), and header
-    parsing for PNG/JPEG/WAV needs no libs either. This gate covers
-    only what genuinely needs an image library: arbitrary color types,
-    bit depths, interlacing, and non-PNG pixel formats."""
-    raise NotImplementedError(
-        "pixel decode requires Pillow: Image.open(io.BytesIO(blob)); "
-        "swap into extract_image_meta via decode=decode_image_real. "
-        "Header-only metadata needs no lib: use extract_png_meta / "
-        "extract_jpeg_meta."
+def extract_image_meta(media: DataFrame) -> DataFrame:
+    """IMG0 image metadata extraction over Arrow batches (the shared
+    decode pass)."""
+    return _decode_pass(
+        media,
+        IMAGE_META_SCHEMA,
+        _named(decode_image_stub, "width", "height", "channels"),
     )
-
-
-def extract_image_meta(media: DataFrame, decode=decode_image_stub) -> DataFrame:
-    """Image metadata extraction over Arrow batches (mapInPandas).
-
-    The per-batch loop is the real production shape: iterate pandas
-    batches, run the decode kernel per blob, emit a typed frame. Only
-    the kernel is swappable/stubbed.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [m[0] if m else None for m in metas],
-                    "height": [m[1] if m else None for m in metas],
-                    "channels": [m[2] if m else None for m in metas],
-                    "n_bytes": [len(b) if b is not None else 0 for b in pdf["blob"]],
-                    "ok": [m is not None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_nth: int = 2) -> DataFrame:
     """Frame-sampling shape for video blobs: explode each blob into
     frame records (stub: payload bytes stand in for frames), keeping
-    every ``every_nth`` frame. Real decoders slot into the same
-    mapInPandas contract."""
+    every ``every_nth`` frame. It emits several rows per blob, so it
+    keeps its own batch loop rather than the one-row-per-blob
+    ``_decode_pass``."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -172,18 +230,11 @@ def synth_media(docs: DataFrame) -> DataFrame:
     h = (F.lit(16) + (did * H_MUL) % H_MOD).cast("int")
     c = (F.lit(1) + did % C_MOD).cast("int")
     payload_len = (did % P_MOD + 1).cast("int")  # bytes
-
-    def _u8(col):
-        return F.lpad(F.hex(col), 2, "0")
-
-    def _u16le(col):
-        return F.concat(_u8(col % 256), _u8((col / 256).cast("int")))
-
     blob_hex = F.concat(
         F.lit("494D4730"),  # b"IMG0"
-        _u16le(w),
-        _u16le(h),
-        _u8(c),
+        _hex_le(w, 2),
+        _hex_le(h, 2),
+        _hex_le(c, 1),
         F.substring(F.md5(did.cast("string")), 1, payload_len * 2),
     )
     return docs.select(
@@ -243,37 +294,10 @@ def decode_wav_stub(blob: bytes) -> dict | None:
     }
 
 
-def decode_audio_real(blob: bytes):
-    """Real decode path (not available in this container)."""
-    raise NotImplementedError(
-        "full audio decode requires soundfile/librosa: "
-        "sf.read(io.BytesIO(blob)); swap into extract_audio_meta via "
-        "decode=decode_audio_real"
-    )
-
-
-def extract_audio_meta(media: DataFrame, decode=decode_wav_stub) -> DataFrame:
-    """Audio metadata extraction over Arrow batches (mapInPandas) —
-    identical batch-iteration contract to extract_image_meta."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_channels": [m["n_channels"] if m else None for m in metas],
-                    "sample_rate": [m["sample_rate"] if m else None for m in metas],
-                    "bits_per_sample": [
-                        m["bits_per_sample"] if m else None for m in metas
-                    ],
-                    "n_samples": [m["n_samples"] if m else None for m in metas],
-                    "duration_us": [m["duration_us"] if m else None for m in metas],
-                    "ok": [m is not None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+def extract_audio_meta(media: DataFrame) -> DataFrame:
+    """WAV header metadata extraction over Arrow batches (the shared
+    decode pass)."""
+    return _decode_pass(media, AUDIO_META_SCHEMA, decode_wav_stub)
 
 
 def synth_audio(docs: DataFrame) -> DataFrame:
@@ -291,37 +315,20 @@ def synth_audio(docs: DataFrame) -> DataFrame:
     data_size = n_samples * ch * 2  # 16-bit PCM
     byte_rate = sr * ch * 2
     block_align = ch * 2
-
-    def _u8(col):
-        return F.lpad(F.hex(col.cast("bigint") % 256), 2, "0")
-
-    def _u16le(col):
-        c = col.cast("bigint")
-        return F.concat(_u8(c), _u8((c / 256).cast("bigint")))
-
-    def _u32le(col):
-        c = col.cast("bigint")
-        return F.concat(
-            _u8(c),
-            _u8((c / 256).cast("bigint")),
-            _u8((c / 65536).cast("bigint")),
-            _u8((c / 16777216).cast("bigint")),
-        )
-
     blob_hex = F.concat(
         F.lit("52494646"),            # "RIFF"
-        _u32le(data_size + 36),       # riff chunk size
+        _hex_le(data_size + 36, 4),   # riff chunk size
         F.lit("57415645"),            # "WAVE"
         F.lit("666D7420"),            # "fmt "
-        _u32le(F.lit(16)),            # fmt chunk size
-        _u16le(F.lit(1)),             # PCM
-        _u16le(ch),
-        _u32le(sr),
-        _u32le(byte_rate),
-        _u16le(block_align),
-        _u16le(F.lit(16)),            # bits per sample
+        _hex_le(F.lit(16), 4),        # fmt chunk size
+        _hex_le(F.lit(1), 2),         # PCM
+        _hex_le(ch, 2),
+        _hex_le(sr, 4),
+        _hex_le(byte_rate, 4),
+        _hex_le(block_align, 2),
+        _hex_le(F.lit(16), 2),        # bits per sample
         F.lit("64617461"),            # "data"
-        _u32le(data_size),
+        _hex_le(data_size, 4),
         F.substring(F.md5(did.cast("string")), 1, 16),  # truncated payload
     )
     return docs.select(
@@ -381,35 +388,10 @@ def decode_video_stub(blob: bytes) -> dict | None:
     }
 
 
-def decode_video_real(blob: bytes):
-    """Real decode path (not available in this container)."""
-    raise NotImplementedError(
-        "real video decode requires PyAV/ffmpeg: av.open(io.BytesIO(blob)); "
-        "swap into extract_video_meta via decode=decode_video_real"
-    )
-
-
-def extract_video_meta(media: DataFrame, decode=decode_video_stub) -> DataFrame:
-    """Video metadata extraction over Arrow batches (mapInPandas)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [m["width"] if m else None for m in metas],
-                    "height": [m["height"] if m else None for m in metas],
-                    "fps": [m["fps"] if m else None for m in metas],
-                    "n_frames": [m["n_frames"] if m else None for m in metas],
-                    "duration_ms": [
-                        m["duration_ms"] if m else None for m in metas
-                    ],
-                    "ok": [m is not None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+def extract_video_meta(media: DataFrame) -> DataFrame:
+    """VID0 video metadata extraction over Arrow batches (the shared
+    decode pass)."""
+    return _decode_pass(media, VIDEO_META_SCHEMA, decode_video_stub)
 
 
 def synth_video(docs: DataFrame) -> DataFrame:
@@ -423,20 +405,12 @@ def synth_video(docs: DataFrame) -> DataFrame:
         (did % 3).cast("int") + 1,
     )
     n_frames = (F.lit(100) + did % 200).cast("int")
-
-    def _u8(col):
-        return F.lpad(F.hex(col.cast("bigint") % 256), 2, "0")
-
-    def _u16le(col):
-        c = col.cast("bigint")
-        return F.concat(_u8(c), _u8((c / 256).cast("bigint")))
-
     blob_hex = F.concat(
         F.lit("56494430"),  # "VID0"
-        _u16le(w),
-        _u16le(h),
-        _u8(fps),
-        _u16le(n_frames),
+        _hex_le(w, 2),
+        _hex_le(h, 2),
+        _hex_le(fps, 1),
+        _hex_le(n_frames, 2),
         F.substring(F.md5(did.cast("string")), 1, 16),  # truncated payload
     )
     return docs.select(
@@ -525,54 +499,11 @@ def decode_png(blob: bytes) -> dict | None:
 
 
 def extract_png_meta(media: DataFrame) -> DataFrame:
-    """PNG metadata extraction over Arrow batches (mapInPandas) —
-    identical batch-iteration contract to extract_image_meta."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode_png(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [m["width"] if m else None for m in metas],
-                    "height": [m["height"] if m else None for m in metas],
-                    "bit_depth": [
-                        m["bit_depth"] if m else None for m in metas
-                    ],
-                    "color_type": [
-                        m["color_type"] if m else None for m in metas
-                    ],
-                    "channels": [
-                        m["channels"] if m else None for m in metas
-                    ],
-                    "n_bytes": [
-                        len(b) if b is not None else 0 for b in pdf["blob"]
-                    ],
-                    "crc_ok": [bool(m["crc_ok"]) if m else False for m in metas],
-                    "ok": [m is not None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=PNG_META_SCHEMA)
-
-
-def _be_u8(col):
-    return F.lpad(F.hex(col.cast("bigint") % 256), 2, "0")
-
-
-def _be_u16(col):
-    c = col.cast("bigint")
-    return F.concat(_be_u8((c / 256).cast("bigint")), _be_u8(c))
-
-
-def _be_u32(col):
-    c = col.cast("bigint")
-    return F.concat(
-        _be_u8((c / 16777216).cast("bigint")),
-        _be_u8((c / 65536).cast("bigint")),
-        _be_u8((c / 256).cast("bigint")),
-        _be_u8(c),
-    )
+    """PNG header metadata extraction over Arrow batches (the shared
+    decode pass). ``crc_ok`` reads False, not null, for a blob that is
+    not a PNG: no CRC was verified."""
+    meta = _decode_pass(media, PNG_META_SCHEMA, decode_png)
+    return meta.withColumn("crc_ok", F.coalesce("crc_ok", F.lit(False)))
 
 
 def synth_png(docs: DataFrame) -> DataFrame:
@@ -593,10 +524,10 @@ def synth_png(docs: DataFrame) -> DataFrame:
 
     ihdr_body_hex = F.concat(
         F.lit("49484452"),  # "IHDR"
-        _be_u32(w),
-        _be_u32(h),
+        _hex_be(w, 4),
+        _hex_be(h, 4),
         F.lit("08"),        # bit depth 8
-        _be_u8(ctype),
+        _hex_be(ctype, 1),
         F.lit("000000"),    # compression, filter, interlace
     )
     ihdr_crc = F.lpad(F.hex(F.crc32(F.unhex(ihdr_body_hex))), 8, "0")
@@ -607,9 +538,9 @@ def synth_png(docs: DataFrame) -> DataFrame:
     idat_crc = F.lpad(F.hex(F.crc32(F.unhex(idat_body_hex))), 8, "0")
     blob_hex = F.concat(
         F.lit("89504E470D0A1A0A"),      # signature
-        _be_u32(F.lit(13)), ihdr_body_hex, ihdr_crc,
-        _be_u32(plen), idat_body_hex, idat_crc,
-        _be_u32(F.lit(0)), F.lit("49454E44"), F.lit("AE426082"),  # IEND
+        _hex_be(F.lit(13), 4), ihdr_body_hex, ihdr_crc,
+        _hex_be(plen, 4), idat_body_hex, idat_crc,
+        _hex_be(F.lit(0), 4), F.lit("49454E44"), F.lit("AE426082"),  # IEND
     )
     return docs.select(
         did.alias("media_id"),
@@ -674,30 +605,9 @@ def decode_jpeg(blob: bytes) -> dict | None:
 
 
 def extract_jpeg_meta(media: DataFrame) -> DataFrame:
-    """JPEG metadata extraction over Arrow batches (mapInPandas)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [decode_jpeg(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": [m["width"] if m else None for m in metas],
-                    "height": [m["height"] if m else None for m in metas],
-                    "precision": [
-                        m["precision"] if m else None for m in metas
-                    ],
-                    "n_components": [
-                        m["n_components"] if m else None for m in metas
-                    ],
-                    "n_bytes": [
-                        len(b) if b is not None else 0 for b in pdf["blob"]
-                    ],
-                    "ok": [m is not None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=JPEG_META_SCHEMA)
+    """JPEG header metadata extraction over Arrow batches (the shared
+    decode pass)."""
+    return _decode_pass(media, JPEG_META_SCHEMA, decode_jpeg)
 
 
 def synth_jpeg(docs: DataFrame) -> DataFrame:
@@ -722,11 +632,11 @@ def synth_jpeg(docs: DataFrame) -> DataFrame:
     )
     sof0_hex = F.concat(
         F.lit("FFC0"),
-        _be_u16(F.lit(8) + ncomp * 3),  # length = 8 + 3*ncomp
+        _hex_be(F.lit(8) + ncomp * 3, 2),  # length = 8 + 3*ncomp
         F.lit("08"),                    # precision
-        _be_u16(h),
-        _be_u16(w),
-        _be_u8(ncomp),
+        _hex_be(h, 2),
+        _hex_be(w, 2),
+        _hex_be(ncomp, 1),
         F.when(ncomp == 1, F.lit(JPEG_NCOMP_HEX[1])).otherwise(
             F.lit(JPEG_NCOMP_HEX[3])
         ),
@@ -932,43 +842,20 @@ PIXELS_SCHEMA = T.StructType(
 
 
 def synth_png_images(docs: DataFrame) -> DataFrame:
-    """Arrow-batched encoder pass: one real PNG blob per document.
-    Ids repartitioned to session parallelism before the codec — see
-    synth_jpeg_images (the cheap-shuffle-before-expensive-map trade;
-    file-layout partitioning is not CPU-count partitioning)."""
+    """Arrow-batched encoder pass: one real PNG blob per document."""
+    return _encode_pass(
+        docs, "image/png", lambda d: encode_png_gray8(ahash_pixels(d))
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "blob": [
-                        encode_png_gray8(ahash_pixels(int(d)))
-                        for d in pdf["doc_id"]
-                    ],
-                    "mime": "image/png",
-                }
-            )
 
-    from ..session import default_parallelism
-
-    ids = docs.select("doc_id").repartition(default_parallelism(), "doc_id")
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+def _png_px(blob: bytes) -> dict | None:
+    px = decode_png_gray8(blob)
+    return None if px is None else {"px": px}
 
 
 def decode_png_pixels(media: DataFrame) -> DataFrame:
     """Arrow-batched decoder pass (the independent implementation)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "px": [decode_png_gray8(b) for b in pdf["blob"]],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=PIXELS_SCHEMA)
+    return _decode_pass(media, PIXELS_SCHEMA, _png_px)
 
 
 def ahash64_hex(arr: str, total) -> "F.Column":
@@ -994,6 +881,28 @@ def ahash64_hex(arr: str, total) -> "F.Column":
     )
     hex8 = lambda v: F.lpad(F.lower(F.hex(v)), 8, "0")  # noqa: E731
     return F.concat(hex8(half(1)), hex8(half(33)))
+
+
+def _thumbnail():
+    """(pooled_hex, brightness) columns of the decoded 8×8 raster ``px``:
+    the 4×4 thumbnail as 2×2 mean-pools (integer floor division) in 32
+    hex chars, and the mean gray as a long — shared by image_resize
+    and media_pipeline."""
+    # pooled[k] for k in 0..15: r = k/4, c = k%4 → mean of the 2×2
+    # block at (2r, 2c); element_at is 1-based
+    base = lambda k: (k // 4) * 16 + (k % 4) * 2 + 1  # noqa: E731
+    pool = lambda k: (  # noqa: E731
+        F.element_at("px", base(k))
+        + F.element_at("px", base(k) + 1)
+        + F.element_at("px", base(k) + 8)
+        + F.element_at("px", base(k) + 9)
+    ) / 4
+    hexpair = lambda v: F.lpad(F.lower(F.hex(v.cast("long"))), 2, "0")  # noqa: E731
+    pooled_hex = F.concat(*[hexpair(pool(k)) for k in range(16)])
+    brightness = F.aggregate(
+        "px", F.lit(0).cast("long"), lambda a, x: a + x
+    ) / 64
+    return pooled_hex.alias("pooled_hex"), brightness.cast("long").alias("brightness")
 
 
 def q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,25 +958,7 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     px_df = decode_png_pixels(
         synth_png_images(load_table(spark, sf_dir, "documents"))
     )
-    # pooled[k] for k in 0..15: r = k/4, c = k%4 → mean of the 2×2
-    # block at (2r, 2c); element_at is 1-based
-    base = lambda k: (k // 4) * 16 + (k % 4) * 2 + 1  # noqa: E731
-    pool = lambda k: (  # noqa: E731
-        F.element_at("px", base(k))
-        + F.element_at("px", base(k) + 1)
-        + F.element_at("px", base(k) + 8)
-        + F.element_at("px", base(k) + 9)
-    ) / 4
-    hexpair = lambda v: F.lpad(F.lower(F.hex(v.cast("long"))), 2, "0")  # noqa: E731
-    pooled_hex = F.concat(*[hexpair(pool(k)) for k in range(16)])
-    brightness = F.aggregate(
-        "px", F.lit(0).cast("long"), lambda a, x: a + x
-    ) / 64
-    return px_df.select(
-        "media_id",
-        pooled_hex.alias("pooled_hex"),
-        brightness.cast("long").alias("brightness"),
-    )
+    return px_df.select("media_id", *_thumbnail())
 
 
 def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1103,24 +994,12 @@ def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "px",
         F.aggregate("px", F.lit(0), lambda a, x: a + x).alias("total"),
     )
-    ahash = ahash64_hex("px", F.col("total"))
-    base = lambda k: (k // 4) * 16 + (k % 4) * 2 + 1  # noqa: E731
-    pool = lambda k: (  # noqa: E731
-        F.element_at("px", base(k))
-        + F.element_at("px", base(k) + 1)
-        + F.element_at("px", base(k) + 8)
-        + F.element_at("px", base(k) + 9)
-    ) / 4
-    hexpair = lambda v: F.lpad(F.lower(F.hex(v.cast("long"))), 2, "0")  # noqa: E731
-    pooled_hex = F.concat(*[hexpair(pool(k)) for k in range(16)])
-    brightness = (
-        F.aggregate("px", F.lit(0).cast("long"), lambda a, x: a + x) / 64
-    )
+    pooled_hex, brightness = _thumbnail()
     skinny = with_total.select(
         "media_id",
-        ahash.alias("ahash"),
-        brightness.cast("long").alias("brightness"),
-        pooled_hex.alias("pooled_hex"),
+        ahash64_hex("px", F.col("total")).alias("ahash"),
+        brightness,
+        pooled_hex,
     )
     w = Window.partitionBy("ahash")
     return (
@@ -1578,62 +1457,30 @@ def jpeg_block_values(doc_id: int) -> list[int]:
     ]
 
 
+def _jpeg16(vals: list[int]) -> bytes:
+    """Baseline JFIF of the planted 16×16 raster: four constant 8×8
+    blocks with grays ``vals`` in row-major block order."""
+    raster = [
+        vals[(y // 8) * 2 + (x // 8)]
+        for y in range(JPEG16_SIDE)
+        for x in range(JPEG16_SIDE)
+    ]
+    return encode_jpeg_gray(raster, JPEG16_SIDE, JPEG16_SIDE)
+
+
 def synth_jpeg_images(docs: DataFrame) -> DataFrame:
     """Arrow-batched encoder pass: one real baseline JFIF per document
-    (16×16, four constant 8×8 blocks — see jpeg_block_values).
-
-    The id column is REPARTITIONED to the session parallelism before
-    the codec: the DCT codec is ~1.5 ms/image of Python work, and the
-    upstream scan's partition count follows FILE layout, not CPU count
-    (one small parquet file → one partition → a single-core codec pass,
-    the r08 bench catch: 10 s instead of 0.8 s at sf0.1). The exchange
-    moves 8-byte ids — the canonical cheap-shuffle-before-expensive-map
-    trade, and a no-op cost-wise wherever the scan is already wide."""
-
-    def raster(vals: list[int]) -> list[int]:
-        return [
-            vals[(y // 8) * 2 + (x // 8)]
-            for y in range(JPEG16_SIDE)
-            for x in range(JPEG16_SIDE)
-        ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "blob": [
-                        encode_jpeg_gray(
-                            raster(jpeg_block_values(int(d))),
-                            JPEG16_SIDE,
-                            JPEG16_SIDE,
-                        )
-                        for d in pdf["doc_id"]
-                    ],
-                    "mime": "image/jpeg",
-                }
-            )
-
-    from ..session import default_parallelism
-
-    ids = docs.select("doc_id").repartition(default_parallelism(), "doc_id")
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    (16×16, four constant 8×8 blocks — see jpeg_block_values)."""
+    return _encode_pass(
+        docs, "image/jpeg", lambda d: _jpeg16(jpeg_block_values(d))
+    )
 
 
 def decode_jpeg_pixels(media: DataFrame) -> DataFrame:
     """Arrow-batched decoder pass (the independent implementation)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [decode_jpeg_gray(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "px": [d[2] if d else None for d in decoded],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=PIXELS_SCHEMA)
+    return _decode_pass(
+        media, PIXELS_SCHEMA, _named(decode_jpeg_gray, "width", "height", "px")
+    )
 
 
 def q_image_jpeg_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,50 +1638,22 @@ AUDIO_SAMPLES_SCHEMA = T.StructType(
 )
 
 
+def _sawtooth_wav(doc_id: int) -> bytes:
+    n, a, b = pcm_wave_params(doc_id)
+    return encode_wav_pcm16([((a * t + b) % 2001) - 1000 for t in range(n)])
+
+
 def synth_wav_audio(docs: DataFrame) -> DataFrame:
     """Arrow-batched encoder pass: one real PCM WAV per document
-    (planted sawtooth — see pcm_wave_params). Ids repartitioned to
-    session parallelism first (the synth_jpeg_images rule)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for d in pdf["doc_id"]:
-                n, a, b = pcm_wave_params(int(d))
-                blobs.append(
-                    encode_wav_pcm16(
-                        [((a * t + b) % 2001) - 1000 for t in range(n)]
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "mime": "audio/wav",
-                }
-            )
-
-    from ..session import default_parallelism
-
-    ids = docs.select("doc_id").repartition(default_parallelism(), "doc_id")
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    (planted sawtooth — see pcm_wave_params)."""
+    return _encode_pass(docs, "audio/wav", _sawtooth_wav)
 
 
 def decode_wav_samples(media: DataFrame) -> DataFrame:
     """Arrow-batched decoder pass (the independent implementation)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            dec = [decode_wav_pcm16(b) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "rate": [d[0] if d else None for d in dec],
-                    "samples": [d[1] if d else None for d in dec],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_SAMPLES_SCHEMA)
+    return _decode_pass(
+        media, AUDIO_SAMPLES_SCHEMA, _named(decode_wav_pcm16, "rate", "samples")
+    )
 
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1856,8 +1675,8 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     sawtooth has a closed form, so the oracle recomputes every sample
     arithmetically and the hash match verifies writer → reader →
     feature math end to end (the same discipline as the PNG/JPEG
-    pixel paths; compressed audio codecs remain env-gated because
-    those DO need external libraries)."""
+    pixel paths; compressed audio codecs need external libraries and
+    are out of scope)."""
     dec = decode_wav_samples(
         synth_wav_audio(load_table(spark, sf_dir, "documents"))
     )
@@ -1889,7 +1708,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every frame is a baseline JFIF the engine's independent JPEG
 # decoder already handles. This composes the two r08 codecs into the
 # video family's sample path; inter-frame-compressed codecs
-# (H.264/VP9/AV1) remain correctly env-gated.
+# (H.264/VP9/AV1) need external libraries and are out of scope.
 # ---------------------------------------------------------------------------
 
 
@@ -2067,46 +1886,18 @@ VIDEO_FRAMES_STATS_SCHEMA = T.StructType(
 )
 
 
+def _planted_avi(doc_id: int) -> bytes:
+    frames = [
+        _jpeg16(video_frame_block_values(doc_id, f))
+        for f in range(video_frame_count(doc_id))
+    ]
+    return encode_avi_mjpeg(frames, JPEG16_SIDE, JPEG16_SIDE)
+
+
 def synth_avi_videos(docs: DataFrame) -> DataFrame:
     """Arrow-batched encoder pass: one real MJPEG AVI per document
-    (3–6 frames of planted constant-block JFIFs). Ids repartitioned
-    to session parallelism first (the synth_jpeg_images rule)."""
-
-    def raster(vals: list[int]) -> list[int]:
-        return [
-            vals[(y // 8) * 2 + (x // 8)]
-            for y in range(JPEG16_SIDE)
-            for x in range(JPEG16_SIDE)
-        ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            blobs = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                frames = [
-                    encode_jpeg_gray(
-                        raster(video_frame_block_values(d, f)),
-                        JPEG16_SIDE,
-                        JPEG16_SIDE,
-                    )
-                    for f in range(video_frame_count(d))
-                ]
-                blobs.append(
-                    encode_avi_mjpeg(frames, JPEG16_SIDE, JPEG16_SIDE)
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "mime": "video/x-msvideo",
-                }
-            )
-
-    from ..session import default_parallelism
-
-    ids = docs.select("doc_id").repartition(default_parallelism(), "doc_id")
-    return ids.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    (3–6 frames of planted constant-block JFIFs)."""
+    return _encode_pass(docs, "video/x-msvideo", _planted_avi)
 
 
 def decode_avi_frames(media: DataFrame) -> DataFrame:

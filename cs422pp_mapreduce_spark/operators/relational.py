@@ -1606,6 +1606,56 @@ def _bloom_pos(key, i: int):
     )
 
 
+def bloom_probe_report(
+    spark: SparkSession, sf_dir: str, sel: DataFrame, bitmap: list[int]
+) -> DataFrame:
+    """The probe side of ``q_bloom_semi_join``: broadcast the M/64-word
+    ``bitmap``, test every lineitem key's k md5 probe bits inside
+    codegen, verify survivors exactly against the selective keys
+    ``sel`` (o_orderkey), and count probe / bloom-pass / match /
+    false-positive rows per return flag. The plan twin
+    (``plans.analysis.bloom_semi_join_plan``) passes an all-zeros
+    bitmap to get the same plan without building the filter."""
+    bm = spark.createDataFrame(
+        [(bitmap,)], "bm: array<long>"
+    )  # 16384 longs → broadcast to every probe task
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag"
+    )
+    probe = li.crossJoin(F.broadcast(bm))
+    bit_ok = None
+    for i in range(BLOOM_K):
+        p = _bloom_pos(F.col("l_orderkey"), i)
+        t = (
+            F.element_at("bm", (p / 64).cast("int") + 1).bitwiseAND(
+                F.call_function(
+                    "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
+                )
+            )
+            != 0
+        )
+        bit_ok = t if bit_ok is None else (bit_ok & t)
+    passed = probe.select(
+        "l_orderkey", "l_returnflag", bit_ok.cast("int").alias("bloom_pass")
+    )
+    matched = passed.join(
+        F.broadcast(sel.withColumn("is_match", F.lit(1))),
+        passed.l_orderkey == F.col("o_orderkey"),
+        "left",
+    ).select(
+        "l_returnflag",
+        "bloom_pass",
+        F.coalesce("is_match", F.lit(0)).alias("is_match"),
+    )
+    return matched.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n_probe"),
+        F.sum("bloom_pass").alias("n_bloom_pass"),
+        F.sum("is_match").alias("n_match"),
+        (F.sum("bloom_pass") - F.sum("is_match")).alias("n_false_pos"),
+    )
+
+
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered semi join — THE shuffle-avoidance pattern for
     selective joins at 100 TB: build a Bloom filter over the selective
@@ -1660,41 +1710,4 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap = [0] * (BLOOM_M // 64)
     for r in word_rows:
         bitmap[r["word"]] = r["bits"]
-    bm = spark.createDataFrame(
-        [(bitmap,)], "bm: array<long>"
-    )  # 16384 longs → broadcast to every probe task
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag"
-    )
-    probe = li.crossJoin(F.broadcast(bm))
-    bit_ok = None
-    for i in range(BLOOM_K):
-        p = _bloom_pos(F.col("l_orderkey"), i)
-        t = (
-            F.element_at("bm", (p / 64).cast("int") + 1).bitwiseAND(
-                F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
-            )
-            )
-            != 0
-        )
-        bit_ok = t if bit_ok is None else (bit_ok & t)
-    passed = probe.select(
-        "l_orderkey", "l_returnflag", bit_ok.cast("int").alias("bloom_pass")
-    )
-    matched = passed.join(
-        F.broadcast(sel.withColumn("is_match", F.lit(1))),
-        passed.l_orderkey == F.col("o_orderkey"),
-        "left",
-    ).select(
-        "l_returnflag",
-        "bloom_pass",
-        F.coalesce("is_match", F.lit(0)).alias("is_match"),
-    )
-    return matched.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_probe"),
-        F.sum("bloom_pass").alias("n_bloom_pass"),
-        F.sum("is_match").alias("n_match"),
-        (F.sum("bloom_pass") - F.sum("is_match")).alias("n_false_pos"),
-    )
+    return bloom_probe_report(spark, sf_dir, sel, bitmap)

@@ -32,13 +32,9 @@ BPE_COUNT_SCHEMA = "doc_id long, n_ws_tokens long, n_bpe_tokens long"
 def _count_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     # import inside the worker so the encoder (and its merge table)
     # is constructed once per executor process, not shipped per task.
-    # get_token_counter is the native-tokenizer slot: with
-    # SPARK_GRAFT_NATIVE_BPE=1 (+ the `tokenizers` wheel) the SAME
-    # kernel runs a Rust byte-level BPE — only this callable changes,
-    # the Spark plan/schema/batching stay identical (functions/bpe.py).
-    from ..functions.bpe import get_token_counter
+    from ..functions.bpe import DEFAULT_ENCODER
 
-    count = get_token_counter()
+    count = DEFAULT_ENCODER.count
     for pdf in batches:
         yield pd.DataFrame(
             {
@@ -67,9 +63,9 @@ CHUNK_BPE_SCHEMA = "doc_id long, chunk_id long, n_chunk_tokens long"
 def _chunk_count_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    from ..functions.bpe import get_token_counter
+    from ..functions.bpe import DEFAULT_ENCODER
 
-    count = get_token_counter()
+    count = DEFAULT_ENCODER.count
     for pdf in batches:
         yield pd.DataFrame(
             {

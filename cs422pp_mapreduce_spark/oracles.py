@@ -5364,12 +5364,9 @@ def _bpe_encode_ctes() -> str:
     VALUES literal generated from DEFAULT_ENCODER — a shared
     deterministic constant like MINHASH_A_MULT, pinned by
     tests/test_bpe.py and driver-verified end-to-end via bpe_vocab /
-    bpe_train. Contract caveats: with SPARK_GRAFT_NATIVE_BPE=1 the
-    Spark side swaps in a native tokenizer and these oracles no longer
-    apply (env gate documented in functions/bpe.get_token_counter,
-    absent in driver runs); the rank*1e6+pos argmin assumes pretokens
-    shorter than 1e6 chars (unreachable — the pretokenizer emits
-    character-class runs)."""
+    bpe_train. Contract caveat: the rank*1e6+pos argmin assumes
+    pretokens shorter than 1e6 chars (unreachable — the pretokenizer
+    emits character-class runs)."""
     from .functions.bpe import DEFAULT_ENCODER, EOW
 
     def esc(s: str) -> str:

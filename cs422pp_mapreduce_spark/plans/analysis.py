@@ -75,59 +75,18 @@ def order_stat_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bloom_semi_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy twin of ``q_bloom_semi_join`` (which builds the broadcast
     bloom bitmap with one bounded JVM-folded word-aggregate collect —
-    <=16384 (word, bits) rows — at build time). The twin substitutes
-    an all-zeros bitmap literal — same
-    probe-side plan (crossJoin of the broadcast 1-row bitmap, k
-    md5-probe bit tests inside codegen, exact-verify join, final
-    aggregate), same output schema, zero driver jobs."""
-    from ..operators.relational import (
-        BLOOM_K,
-        BLOOM_M,
-        _bloom_pos,
-    )
+    <=16384 (word, bits) rows — at build time). The twin hands the
+    query's own probe side an all-zeros bitmap: same plan, same output
+    schema, zero driver jobs."""
+    from ..operators.relational import BLOOM_M, bloom_probe_report
     from ..sources.catalog import load_table
 
-    orders = load_table(spark, sf_dir, "orders")
-    sel = orders.where(F.col("o_orderpriority") == "1-URGENT").select(
-        "o_orderkey"
+    sel = (
+        load_table(spark, sf_dir, "orders")
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
     )
-    bm = spark.createDataFrame(
-        [([0] * (BLOOM_M // 64),)], "bm: array<long>"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag"
-    )
-    probe = li.crossJoin(F.broadcast(bm))
-    bit_ok = None
-    for i in range(BLOOM_K):
-        p = _bloom_pos(F.col("l_orderkey"), i)
-        t = (
-            F.element_at("bm", (p / 64).cast("int") + 1).bitwiseAND(
-                F.call_function(
-                "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")
-            )
-            )
-            != 0
-        )
-        bit_ok = t if bit_ok is None else (bit_ok & t)
-    passed = probe.select(
-        "l_orderkey", "l_returnflag", bit_ok.cast("int").alias("bloom_pass")
-    )
-    matched = passed.join(
-        F.broadcast(sel.withColumn("is_match", F.lit(1))),
-        passed.l_orderkey == F.col("o_orderkey"),
-        "left",
-    ).select(
-        "l_returnflag",
-        "bloom_pass",
-        F.coalesce("is_match", F.lit(0)).alias("is_match"),
-    )
-    return matched.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_probe"),
-        F.sum("bloom_pass").alias("n_bloom_pass"),
-        F.sum("is_match").alias("n_match"),
-        (F.sum("bloom_pass") - F.sum("is_match")).alias("n_false_pos"),
-    )
+    return bloom_probe_report(spark, sf_dir, sel, [0] * (BLOOM_M // 64))
 
 
 def pca_power_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from cs422pp_mapreduce_spark.functions.bpe import (
     DEFAULT_ENCODER,
     BPEEncoder,
@@ -95,58 +93,6 @@ def test_seq_pack_bpe_matches_python_replica(spark, sf_dir):
         for r in q_seq_pack_bpe(spark, sf_dir).collect()
     }
     assert got == want
-
-
-def test_get_token_counter_default_is_pure_python(monkeypatch):
-    from cs422pp_mapreduce_spark.functions.bpe import (
-        DEFAULT_ENCODER,
-        get_token_counter,
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_NATIVE_BPE", raising=False)
-    c = get_token_counter()
-    s = "the quick brown fox"
-    assert c(s) == DEFAULT_ENCODER.count(s)
-
-
-def test_get_token_counter_native_flag_raises_without_package(monkeypatch):
-    """Asking for native throughput in an environment without the
-    `tokenizers` wheel must fail loudly, never silently run 100-1000x
-    slower."""
-    import pytest
-
-    from cs422pp_mapreduce_spark.functions.bpe import get_token_counter
-
-    monkeypatch.setenv("SPARK_GRAFT_NATIVE_BPE", "1")
-    with pytest.raises(NotImplementedError, match="tokenizers"):
-        get_token_counter()
-
-
-def test_native_path_activates_when_available(monkeypatch, tmp_path):
-    """When the `tokenizers` package IS installed (not in this
-    container — then this skips), the native slot must activate end to
-    end: train a minimal byte-level BPE, point SPARK_GRAFT_BPE_VOCAB at
-    it, and the counter returned by get_token_counter must be the
-    native one (agreeing with tokenizers' own encode length)."""
-    tokenizers = pytest.importorskip("tokenizers")
-    from tokenizers import Tokenizer, models, pre_tokenizers, trainers
-
-    tok = Tokenizer(models.BPE())
-    tok.pre_tokenizer = pre_tokenizers.Whitespace()
-    trainer = trainers.BpeTrainer(vocab_size=300, special_tokens=[])
-    tok.train_from_iterator(
-        ["the quick brown fox jumps over the lazy dog"] * 50, trainer
-    )
-    vocab_path = str(tmp_path / "tokenizer.json")
-    tok.save(vocab_path)
-
-    monkeypatch.setenv("SPARK_GRAFT_NATIVE_BPE", "1")
-    monkeypatch.setenv("SPARK_GRAFT_BPE_VOCAB", vocab_path)
-    from cs422pp_mapreduce_spark.functions.bpe import get_token_counter
-
-    counter = get_token_counter()
-    sample = "the quick brown fox"
-    assert counter(sample) == len(tok.encode(sample).ids)
 
 
 def test_bpe_train_distributed_matches_replica(spark, sf_dir):

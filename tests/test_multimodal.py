@@ -1,5 +1,6 @@
 """Multimodal plumbing: binary columns through mapInPandas with typed
-schemas — real Spark-side shape, stubbed decode kernel."""
+schemas, the shared decode pass's null contract, the JVM-side byte
+builders, and the real PNG/JPEG/WAV codecs."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ import pytest
 
 from cs422pp_mapreduce_spark.operators.multimodal import (
     MEDIA_SCHEMA,
-    decode_image_real,
     encode_fake_image,
     extract_image_meta,
     media_metadata_filter_then_decode,
@@ -32,6 +32,60 @@ def test_extract_image_meta(spark, media_df):
     assert got[2]["channels"] == 1
     assert got[3]["ok"] is False and got[3]["width"] is None
     assert got[4]["ok"] is False and got[4]["n_bytes"] == 0
+
+
+@pytest.mark.parametrize(
+    "kernel", ["image", "audio", "video", "png", "jpeg"]
+)
+def test_meta_kernel_nulls_undecodable_blobs(spark, media_df, kernel):
+    """Every metadata kernel maps a blob it cannot decode (garbage
+    bytes, or a null blob) to ok=False with every decoded field null;
+    n_bytes still counts the blob (0 when null) and PNG's crc_ok reads
+    False, not null."""
+    from cs422pp_mapreduce_spark.operators import multimodal as mm
+
+    extract = getattr(mm, f"extract_{kernel}_meta")
+    malformed = media_df.where(media_df.media_id.isin(3, 4))
+    got = {r["media_id"]: r.asDict() for r in extract(malformed).collect()}
+    assert set(got) == {3, 4}
+    for mid, n_bytes in ((3, len(b"not-an-image")), (4, 0)):
+        row = got[mid]
+        del row["media_id"]
+        assert row.pop("ok") is False
+        if "n_bytes" in row:
+            assert row.pop("n_bytes") == n_bytes
+        if kernel == "png":
+            assert row.pop("crc_ok") is False
+        assert row and all(v is None for v in row.values()), row
+
+
+def test_hex_byte_builders_match_struct_pack(spark):
+    """_hex_le / _hex_be spell a value as n bytes exactly as struct
+    packs it, at the byte-boundary edge values of each width."""
+    import struct
+
+    from pyspark.sql import functions as F
+
+    from cs422pp_mapreduce_spark.operators.multimodal import _hex_be, _hex_le
+
+    cases = [
+        (v, n, code)
+        for n, code in ((1, "B"), (2, "H"), (4, "I"))
+        for v in (0, 255, 256, 65535, 2**32 - 1)
+        if v < 256**n
+    ]
+    cols = [
+        F.unhex(build(F.lit(v), n))
+        for v, n, _ in cases
+        for build in (_hex_le, _hex_be)
+    ]
+    got = spark.range(1).select(*cols).collect()[0]
+    want = [
+        struct.pack(order + code, v)
+        for v, _, code in cases
+        for order in ("<", ">")
+    ]
+    assert [bytes(b) for b in got] == want
 
 
 def test_metadata_filter_prunes_before_decode(spark, media_df):
@@ -59,11 +113,6 @@ def test_media_meta_contract_query(spark, sf_dir):
         assert r["height"] == 16 + (did * 7) % 485
         assert r["channels"] == 1 + did % 4
         assert r["n_bytes"] == 10 + did % 8
-
-
-def test_real_decoder_is_explicit_stub():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"anything")
 
 
 def test_media_to_embedding_to_similarity(spark):
@@ -157,13 +206,6 @@ def test_synth_audio_roundtrip_through_spark(spark, sf_dir):
         assert r.sample_rate == (8000, 16000, 22050, 44100)[r.media_id % 4]
         assert r.n_samples == 100 + r.media_id % 50
         assert r.duration_us == r.n_samples * 1_000_000 // r.sample_rate
-
-
-def test_audio_real_decoder_is_explicit_stub():
-    from cs422pp_mapreduce_spark.operators.multimodal import decode_audio_real
-
-    with pytest.raises(NotImplementedError):
-        decode_audio_real(b"RIFF")
 
 
 def test_video_decode_parses_struct_built_header():
