@@ -13,11 +13,18 @@ cluster because nothing here assumes a single JVM.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+import tempfile
 import threading
 import weakref
 from contextlib import contextmanager
 
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Runtime-settable session confs applied even when the caller (e.g. the
@@ -75,6 +82,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # FileContext-based manager, and without the native Hadoop library
     # its local rename forks a `readlink` process for every path it
     # resolves: 2,272 forks in one ingest run at 2 state partitions.
+    # The FileSystem API's own fork, a `chmod` for every file created,
+    # is gone only in sessions get_spark launches (NIO_LOCAL_FS).
     # Ten interleaved ingest pairs (perfbench, seeds 51-60, 4-core VM):
     # p50 event latency fell in 10 of 10, median 0.702 -> 0.493 s
     # against a parent interquartile range of 0.066 s.
@@ -111,14 +120,15 @@ def stream_state_partitions() -> int:
     without any parallelism the data can use (guide §2: fewer, larger
     partitions; §6: small files hurt twice).
 
-    That fixed cost is process forks, not data or disk sync. Each
+    That fixed cost was process forks, not data or disk sync. Each
     partition of each micro-batch launches a task, writes one state
-    delta file and one sink file, and renames both into place. Without
-    the native Hadoop library, the local file system forks a ``chmod``
-    process for every file it creates. Renames no longer fork
-    ``readlink``: checkpoints go through the FileSystem-based manager
-    (``RUNTIME_CONFS``). More partitions than cores also add a second
-    task wave.
+    delta file and one sink file, and renames both into place. Renames
+    no longer fork ``readlink``: checkpoints go through the
+    FileSystem-based manager (``RUNTIME_CONFS``). Creates no longer
+    fork ``chmod`` in sessions ``get_spark`` launches: their local file
+    system sets permissions in-process (``NIO_LOCAL_FS``). A plain
+    session without that class still forks one ``chmod`` per file and
+    directory. More partitions than cores also add a second task wave.
 
     Measured on ``perfbench/run.py --workload ingest`` (4-core VM,
     seeds 1 and 2, p50 event latency and sustained rows/s per seed):
@@ -171,13 +181,114 @@ def apply_runtime_confs(spark: SparkSession, force: bool = False) -> SparkSessio
     return spark
 
 
+# Hadoop's local file system with permissions set through java.nio
+# instead of a forked `chmod` per file and directory (without the
+# native Hadoop library, Hadoop cannot call chmod(2) directly). Source
+# in jvm/, compiled on first use into the user cache dir.
+NIO_LOCAL_FS = "cs422pp_mapreduce_spark.jvm.NioLocalFileSystem"
+_NIO_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
+)
+_log = logging.getLogger(__name__)
+
+
+def _javac() -> str | None:
+    """The javac of the JDK that launches Spark: JAVA_HOME's, else PATH's."""
+    home = os.environ.get("JAVA_HOME")
+    if home and os.access(os.path.join(home, "bin", "javac"), os.X_OK):
+        return os.path.join(home, "bin", "javac")
+    return shutil.which("javac")
+
+
+def nio_local_fs_classes() -> str | None:
+    """Class directory holding ``NIO_LOCAL_FS``; None without javac or a
+    writable cache.
+
+    Compiled once per source digest into the user cache dir; never
+    under TMPDIR, which benchmark runs delete. javac writes into a
+    temporary sibling that is renamed into place, so processes
+    compiling at once all end with one complete directory."""
+    with open(_NIO_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "spark-graft", "jvm",
+    )
+    out = os.path.join(cache, digest)
+    if os.path.isdir(out):
+        return out
+    javac = _javac()
+    jars = glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar"))
+    if javac is None or not jars:
+        _log.warning("no javac or hadoop-client-api jar: the local file system "
+                     "forks chmod for every file it creates")
+        return None
+    try:
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=f".{digest}-", dir=cache)
+    except OSError as e:
+        _log.warning("cannot write %s (%s): the local file system forks "
+                     "chmod for every file it creates", cache, e)
+        return None
+    try:
+        # Spark 4 needs Java 17, so these classes load in any JVM it runs on.
+        done = subprocess.run(
+            [javac, "--release", "17", "-cp", jars[0], "-d", tmp, _NIO_SOURCE],
+            capture_output=True, text=True,
+        )
+        if done.returncode:
+            _log.warning("compiling %s failed, keeping the forking local file "
+                         "system:\n%s", _NIO_SOURCE, done.stderr)
+            return None
+        try:
+            os.replace(tmp, out)
+        except OSError:
+            if not os.path.isdir(out):  # else another process renamed first
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
+def _local_fs_confs() -> dict[str, str]:
+    """Launch confs that make ``NIO_LOCAL_FS`` the ``file:`` file system.
+
+    Never in RUNTIME_CONFS: a session whose JVM lacks the class on its
+    classpath (the external driver's) could then read no file."""
+    classes = nio_local_fs_classes()
+    if classes is None:
+        return {}
+    return {
+        # local[N] executors run in the driver JVM, so share its classpath
+        "spark.driver.extraClassPath": classes,
+        "spark.hadoop.fs.file.impl": NIO_LOCAL_FS,
+    }
+
+
+# (gateway, its launch confs) of the JVM the last get_spark launched
+_LAUNCHED: tuple = (None, {})
+
+
 def get_spark(app_name: str = "cs422pp_mapreduce_spark") -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     Local mode uses ``local[$SPARK_GRAFT_CPUS]``; shuffle partitions are
     sized to the local core count. On a real cluster these two settings
     are deployment-time choices (spark-submit conf), not code.
+
+    A JVM this function launches gets ``NIO_LOCAL_FS`` as its ``file:``
+    file system, and so do later sessions on that JVM. A JVM someone
+    else launched keeps its own.
     """
+    global _LAUNCHED
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is None:
+        fs_confs = _local_fs_confs()
+    elif SparkContext._gateway is _LAUNCHED[0]:
+        fs_confs = _LAUNCHED[1]
+    else:
+        fs_confs = {}
     cpus = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
@@ -189,9 +300,11 @@ def get_spark(app_name: str = "cs422pp_mapreduce_spark") -> SparkSession:
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **fs_confs}.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _LAUNCHED = (SparkContext._gateway, fs_confs)
+    return spark
 
 
 # session → {key: (value, saved value, depth)} for the open scopes
