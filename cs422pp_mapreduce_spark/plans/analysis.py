@@ -6,12 +6,11 @@ to get a DataFrame whose plan and schema they inspect WITHOUT running
 it. Two classes of queries break that assumption:
 
 * streaming contract queries — calling them runs a real streaming job
-  and returns a memory-sink scan that hides the aggregation plan
-  (``STREAM_PLAN_BUILDERS`` in ``streaming.events``);
+  and returns a memory-sink scan that hides the aggregation plan;
 * driver-paced iterative queries (order_stat) — calling them pays the
   real scans eagerly and returns a trivial ``LocalTableScan``.
 
-``ANALYSIS_PLAN_BUILDERS`` maps each such query to a lazy builder that
+``analysis_plan_builders()`` maps each such query to a lazy builder that
 (a) has the exact output schema of the real query (the dtype sweep
 compares it column-by-column against the oracle) and (b) exposes the
 representative distributed plan shape (the audit scans it for
@@ -147,13 +146,45 @@ def dedup_suffix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def analysis_plan_builders() -> dict:
-    """Full name → lazy-builder map for the analysis tools (streaming
-    twins + driver-paced twins)."""
-    from ..streaming.events import STREAM_PLAN_BUILDERS
+    """Full name → lazy-builder map for the analysis tools: one twin
+    per streaming contract query (every ``stream_*`` query, checked by
+    tests/test_plan_twins.py) plus the driver-paced twins."""
+    from ..streaming.dedup import stream_dedup_plan
+    from ..streaming.events import (
+        stream_event_session_plan,
+        stream_event_tumbling_plan,
+        stream_late_audit_plan,
+        stream_sliding_plan,
+    )
+    from ..streaming.joins import stream_enrich_plan, stream_interval_join_plan
     from ..streaming.quality import stream_quality_gate_plan
+    from ..streaming.stateful import (
+        stream_cusum_plan,
+        stream_ewma_plan,
+        stream_profile_plan,
+        stream_twap_plan,
+    )
+    from ..streaming.wordcount import stream_wordcount_plan
 
     return {
-        **STREAM_PLAN_BUILDERS,
+        "stream_event_tumbling": stream_event_tumbling_plan,
+        "stream_event_session": stream_event_session_plan,
+        "stream_sliding": stream_sliding_plan,
+        # the recovery and upsert queries run the tumbling aggregation
+        # (same _tumbling_agg over a file stream) through a restart
+        # sequence; mapping them to its plan keeps the analysis tools
+        # from executing that sequence
+        "stream_event_recovery": stream_event_tumbling_plan,
+        "stream_foreach_upsert": stream_event_tumbling_plan,
+        "stream_late_audit": stream_late_audit_plan,
+        "stream_dedup": stream_dedup_plan,
+        "stream_interval_join": stream_interval_join_plan,
+        "stream_enrich": stream_enrich_plan,
+        "stream_profile": stream_profile_plan,
+        "stream_ewma": stream_ewma_plan,
+        "stream_twap": stream_twap_plan,
+        "stream_cusum": stream_cusum_plan,
+        "stream_wordcount": stream_wordcount_plan,
         "stream_quality_gate": stream_quality_gate_plan,
         "order_stat": order_stat_plan,
         "dedup_suffix": dedup_suffix_plan,

@@ -9,15 +9,24 @@ that: the first call creates it, every later call reuses it and
 overwrites the contents — the write still happens per call (for
 bucketed_join the write IS the operator under test), only the
 allocation is amortized.
+
+Streaming inputs go one step further: their slices are a pure function
+of the fixture, so ``build_once`` writes them once per (application,
+tag), and ``land_files`` copies them into a per-call source directory
+in arrival order.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import tempfile
 import threading
+import time
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _STAGING: dict[tuple[str, str], str] = {}
 _TAG_LOCKS: dict[tuple[str, str], threading.Lock] = {}
@@ -52,7 +61,63 @@ def tag_lock(spark: SparkSession, tag: str) -> threading.Lock:
         return lk
 
 
+def build_once(
+    spark: SparkSession, tag: str, slices: Callable[[], list[DataFrame]]
+) -> list[str]:
+    """Write each frame of ``slices()`` as ONE parquet file, once per
+    (Spark application, tag), and return the files in slice order.
+
+    Later calls skip the build and return the same paths. The marker
+    check and the build run under the tag's lock: two concurrent
+    first callers must not interleave overwrite writes into the same
+    slice dirs, and the second must not read a half-written set."""
+    base = session_staging_dir(spark, tag)
+    marker = os.path.join(base, "_COMPLETE")
+    with tag_lock(spark, tag):
+        if not os.path.isfile(marker):
+            for i, frame in enumerate(slices(), start=1):
+                frame.coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(base, f"s{i}")
+                )
+            with open(marker, "w") as fh:
+                fh.write("ok")
+    dirs = sorted(
+        (d for d in os.listdir(base) if d.startswith("s")),
+        key=lambda d: int(d[1:]),
+    )
+    return [
+        os.path.join(base, d, next(
+            n for n in os.listdir(os.path.join(base, d))
+            if n.endswith(".parquet")
+        ))
+        for d in dirs
+    ]
+
+
+def land_files(src: str, parts: list[str]) -> None:
+    """Copy ``parts`` into the file-stream source dir ``src`` in list
+    order, as the arrival sequence of an ingestion directory.
+
+    The k-th file ever landed in ``src`` is named ``slice{k}.parquet``
+    and stamped with an mtime 10 s after the newest file already there
+    (or after now): the file source orders new files by modification
+    time, so landing order is processing order, also across landings
+    made between two runs of one restarted query."""
+    have = os.listdir(src)
+    t = max([time.time()] + [os.path.getmtime(os.path.join(src, n)) for n in have])
+    for k, part in enumerate(parts, start=len(have) + 1):
+        dst = os.path.join(src, f"slice{k}.parquet")
+        shutil.copy(part, dst)
+        t += 10
+        os.utime(dst, (t, t))
+
+
 def sf_tag(sf_dir: str) -> str:
-    """Filesystem/metastore-safe token for an sf_dir (staging dirs and
-    table names must be distinct per fixture tier within a session)."""
-    return os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    """Filesystem/metastore-safe token for an sf_dir: its basename plus
+    a short digest of the normalised absolute path, so two fixtures
+    that share a directory name (say two ``sf0.01`` copies) never share
+    staged files or table names within a session. Lowercase hex keeps
+    the token a valid metastore identifier."""
+    path = os.path.abspath(sf_dir)
+    digest = hashlib.sha1(path.encode()).hexdigest()[:8]
+    return f"{os.path.basename(path).replace('.', '_')}_{digest}"

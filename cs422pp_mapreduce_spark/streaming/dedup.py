@@ -13,7 +13,17 @@ cross-day replays are a batch reconciliation problem by design.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.staging import land_files
+from .events import (
+    drain_to_memory,
+    read_event_stream,
+    read_event_stream_auto,
+    stage_event_files,
+)
 
 
 def stream_dedup_events(
@@ -30,8 +40,6 @@ def stream_dedup_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started streaming plan behind q_stream_dedup (same operators
     over the catalog events stream) — lets analysis tooling audit the
     dedup-state plan without running a streaming job."""
-    from .events import read_event_stream_auto
-
     return stream_dedup_events(
         read_event_stream_auto(spark, sf_dir), watermark="90 days"
     ).select("event_id", "user_id", "event_type", "ts", "value")
@@ -59,21 +67,11 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes streaming dedup runnable forever — and the
     eviction-after-watermark behavior is pinned separately in pytest
     (tests/test_streaming_extra.py)."""
-    import os
-    import shutil
-
-    from .events import _drain_to_memory, stage_event_files
-
     src = stage_event_files(spark, sf_dir, n_files=2)
-    now_plus = os.path.getmtime(os.path.join(src, "slice2.parquet"))
-    for i, name in enumerate(sorted(os.listdir(src))):
-        dup = os.path.join(src, name.replace("slice", "redeliver"))
-        shutil.copy(os.path.join(src, name), dup)
-        os.utime(dup, (now_plus + 10 * (i + 1), now_plus + 10 * (i + 1)))
-
-    from .events import read_staged_event_stream
-
+    # the re-delivery: every staged file lands a second time, in order
+    land_files(src, [os.path.join(src, n) for n in sorted(os.listdir(src))])
     deduped = stream_dedup_events(
-        read_staged_event_stream(spark, src), watermark="90 days"
+        read_event_stream(spark, src), watermark="90 days"
     ).select("event_id", "user_id", "event_type", "ts", "value")
-    return _drain_to_memory(deduped, "stream_dedup", output_mode="append")
+    q = drain_to_memory(deduped, "stream_dedup", "append")
+    return spark.table(q.name)

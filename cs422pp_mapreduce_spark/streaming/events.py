@@ -17,6 +17,12 @@ Design:
 - sessions = ``F.session_window`` (state merges windows within gap);
 - sinks: append/update to memory (tests) or any ``writeStream`` target.
 
+The plumbing every streaming contract query shares lives here: the
+fixture's staged slices (``staged_slice_parts``, ``stage_event_files``,
+``stage_document_files``), the readers (``read_event_stream``,
+``read_event_stream_auto``) and the drain (``drain``,
+``drain_to_memory``).
+
 The ``value`` sums here stay plain doubles: streaming state updates are
 sequential per window, and the oracle story for streams is the batch
 twin (tests assert stream result == batch result on the same data).
@@ -25,15 +31,20 @@ twin (tests assert stream result == batch result on the same data).
 from __future__ import annotations
 
 import itertools
+import os
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.window import Window
 
 from ..functions.numeric import exact_sum
 from ..session import scoped_conf, stream_state_partitions
-from ..sources.catalog import TABLE_SCHEMAS, table_path
+from ..sources.catalog import TABLE_SCHEMAS, load_table, table_path
+from ..sources.staging import build_once, land_files, session_staging_dir, sf_tag
 
 
 @contextmanager
@@ -76,70 +87,46 @@ def read_event_stream(
     )
 
 
-def stream_tumbling_counts(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """1-hour tumbling count+sum per event_type with watermarked state —
-    the streaming twin of operators.events.q_event_tumbling."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+def drain(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """Run ``writer`` until all available input is processed: start it
+    with an availableNow trigger under ``stream_drain_conf``, wait for
+    it to stop, and return the stopped query (its ``recentProgress``
+    holds one record per micro-batch).
 
-
-def stream_session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-user session windows with state — streaming twin of
-    operators.events.q_event_session_native."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_end", "n_events")
-    )
-
-
-def run_stream_foreach_batch(
-    stream_df: DataFrame, batch_fn, checkpoint_dir: str | None = None
-) -> "object":
-    """Drive a streaming DataFrame through a ``foreachBatch`` sink until
-    all available input is processed.
-
-    ``foreachBatch`` is the escape hatch for sinks Structured Streaming
-    lacks natively (JDBC upserts, multi-table fan-out, MERGE INTO):
-    ``batch_fn(batch_df, batch_id)`` receives each micro-batch as a
-    BATCH DataFrame, so every batch writer in sources/sinks.py works
-    unchanged inside it. Exactly-once comes from the (batch_id,
-    checkpoint) pair: a restarted query re-offers the same batch_id, so
-    idempotent writers (overwrite-by-batch-partition, MERGE on key)
-    upgrade at-least-once delivery to effectively-once."""
-    writer = stream_df.writeStream.foreachBatch(batch_fn).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    with stream_drain_conf(stream_df.sparkSession):
-        q = writer.start()
+    With a ``foreachBatch`` writer, ``batch_fn(batch_df, batch_id)``
+    receives each micro-batch as a BATCH DataFrame, so every batch
+    writer in sources/sinks.py works unchanged inside it. Exactly-once
+    comes from the (batch_id, checkpoint) pair: a restarted query
+    re-offers the same batch_id, so idempotent writers (overwrite-by-
+    batch-partition, MERGE on key — see ``upsert_versioned``) upgrade
+    at-least-once delivery to effectively-once."""
+    with stream_drain_conf(spark):
+        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
     return q
 
 
 _MEMSINK_SEQ = itertools.count()
-# per-invocation src-dir suffix for stage_event_files (see its
-# docstring: shared src dirs race concurrent file-source streams)
-_STAGE_SRC_SEQ = itertools.count()
+
+
+def drain_to_memory(
+    agg: DataFrame,
+    prefix: str,
+    output_mode: str = "complete",
+    checkpoint_dir: str | None = None,
+) -> StreamingQuery:
+    """``drain`` a streaming DataFrame into an in-memory sink and return
+    the stopped query; the sink is the table ``spark.table(q.name)``.
+    Each call gets its own sink name (``prefix`` plus a sequence
+    number), so repeated or concurrent runs never share a table."""
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(f"{prefix}_{next(_MEMSINK_SEQ)}")
+        .outputMode(output_mode)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return drain(writer, agg.sparkSession)
 
 
 def read_event_stream_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,6 +161,112 @@ def read_event_stream_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer div: epoch-nanos exceed double's 2^53 exact range
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
+
+
+# --- staged inputs -----------------------------------------------------------
+
+# per-invocation src-dir suffix (see _stage: shared src dirs race
+# concurrent file-source streams)
+_STAGE_SRC_SEQ = itertools.count()
+
+
+def _ntile_slices(df: DataFrame, n: int, *order: str) -> list[DataFrame]:
+    """``df`` cut into ``n`` equal-size slices along ``order``."""
+    sliced = df.withColumn("_slice", F.ntile(n).over(Window.orderBy(*order)))
+    return [
+        sliced.where(F.col("_slice") == i).drop("_slice")
+        for i in range(1, n + 1)
+    ]
+
+
+def staged_slice_parts(
+    spark: SparkSession, sf_dir: str, n_files: int, by: str = "time"
+) -> list[str]:
+    """Session-memoized deterministic slices of the events table:
+    built ONCE per (application, sf_dir, n_files, by) and returned as
+    n parquet file paths in slice order. ``by='time'``: equal-size
+    event-time slices (ntile over (ts, event_id) — the ingestion-
+    directory convention); ``by='hash'``: event_id % n.
+
+    The slices are pure functions of the fixture, so reusing them is
+    semantics-free for the streaming contract queries — what those
+    queries verify is the LANDING/RESTART sequence over per-call
+    source/checkpoint dirs, not the slicing. Re-slicing per call cost
+    a global sort plus n writes, about 13 s per invocation of
+    stream_foreach_upsert/stream_event_recovery at sf0.1, for
+    identical input."""
+
+    def slices() -> list[DataFrame]:
+        ev = load_table(spark, sf_dir, "events")
+        if by == "time":
+            return _ntile_slices(ev, n_files, "ts", "event_id")
+        return [
+            ev.where(F.col("event_id") % n_files == i) for i in range(n_files)
+        ]
+
+    return build_once(spark, f"slices_{by}_{sf_tag(sf_dir)}_{n_files}", slices)
+
+
+def _stage(spark: SparkSession, tag: str, parts: list[str]) -> str:
+    """Land ``parts`` in a fresh source dir under the session staging
+    dir for ``tag`` and return it.
+
+    Each invocation gets its OWN source dir: a shared one that is
+    cleared per call would delete files out from under a concurrent
+    invocation's still-running file-source stream, and callers that
+    land extras after staging (stream_dedup's redelivered copies, the
+    late-audit plant) must never leak them into another invocation's
+    stream. Only the memoized slice files are shared; per-call cost is
+    n file copies + mtime stamps."""
+    src = os.path.join(
+        session_staging_dir(spark, tag), f"src{next(_STAGE_SRC_SEQ)}"
+    )
+    os.makedirs(src)
+    land_files(src, parts)
+    return src
+
+
+def stage_event_files(
+    spark: SparkSession, sf_dir: str, n_files: int = 2
+) -> str:
+    """Stage the catalog's events table as ``n_files`` TIME-ORDERED
+    parquet files in a fresh source directory, for feeding file-stream
+    contract queries as a multi-micro-batch sequence.
+
+    Files are split on event-time quantiles (file k holds the k-th time
+    slice) and landed in slice order, so the file-stream source
+    processes them in event-time order — the arrival pattern of a real
+    ingestion directory, where landing order tracks event time.
+    Splitting on a time column rather than a hash keeps cross-batch
+    watermark semantics honest: each batch's data is newer than the
+    last."""
+    return _stage(
+        spark,
+        f"stream_stage_{sf_tag(sf_dir)}_{n_files}",
+        staged_slice_parts(spark, sf_dir, n_files, by="time"),
+    )
+
+
+def stage_document_files(
+    spark: SparkSession, sf_dir: str, n_files: int = 2
+) -> str:
+    """Stage the catalog's documents table as ``n_files`` doc_id-range
+    parquet files in a fresh source directory — the arrival pattern of
+    a crawl-ingest directory (each landed file is one micro-batch).
+    The slices are built once per (application, sf_dir, n_files), like
+    ``staged_slice_parts``."""
+    tag = f"docslices_{sf_tag(sf_dir)}_{n_files}"
+    parts = build_once(
+        spark,
+        tag,
+        lambda: _ntile_slices(
+            load_table(spark, sf_dir, "documents"), n_files, "doc_id"
+        ),
+    )
+    return _stage(spark, f"{tag}_src", parts)
+
+
+# --- windowed aggregations ---------------------------------------------------
 
 
 def _tumbling_agg(ev: DataFrame) -> DataFrame:
@@ -215,6 +308,25 @@ def _sliding_agg(ev: DataFrame) -> DataFrame:
     )
 
 
+def _session_agg(ev: DataFrame) -> DataFrame:
+    """Watermark → per-user 30-minute-gap session windows →
+    bounds/count/exact-sum, column for column the batch
+    operators.events.q_event_session_native."""
+    return (
+        ev.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            exact_sum("value", 2, "sum_value"),
+        )
+        .select(
+            "user_id", "session_start", "session_end", "n_events", "sum_value"
+        )
+    )
+
+
 def stream_sliding_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started streaming sliding-window aggregation behind
     q_stream_sliding (see stream_event_tumbling_plan for why)."""
@@ -229,9 +341,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tumbling/session contracts don't cover; scale posture is the
     incremental form (per-micro-batch partials into windowed state,
     shuffle O(windows), watermark bounds state size)."""
-    return _drain_to_memory(
-        stream_sliding_plan(spark, sf_dir), "stream_sliding"
-    )
+    q = drain_to_memory(stream_sliding_plan(spark, sf_dir), "stream_sliding")
+    return spark.table(q.name)
 
 
 def stream_event_tumbling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,154 +354,6 @@ def stream_event_tumbling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract query's returned memory-sink table would otherwise hide
     the aggregation plan behind a trivial in-memory scan."""
     return _tumbling_agg(read_event_stream_auto(spark, sf_dir))
-
-
-def _drain_to_memory(
-    agg: DataFrame,
-    prefix: str,
-    checkpoint_dir: str | None = None,
-    output_mode: str = "complete",
-) -> DataFrame:
-    name = f"{prefix}_{next(_MEMSINK_SEQ)}"
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    with stream_drain_conf(agg.sparkSession):
-        q = writer.start()
-        q.awaitTermination()
-    return agg.sparkSession.table(name)
-
-
-def staged_slice_parts(
-    spark: SparkSession, sf_dir: str, n_files: int, by: str = "time"
-) -> list[str]:
-    """Session-memoized deterministic slices of the events table:
-    built ONCE per (application, sf_dir, n_files, by) and returned as
-    n parquet file paths in slice order. ``by='time'``: equal-size
-    event-time slices (ntile over (ts, event_id) — the ingestion-
-    directory convention); ``by='hash'``: event_id % n.
-
-    The slices are pure functions of the fixture, so reusing them is
-    semantics-free for the streaming contract queries — what those
-    queries verify is the LANDING/RESTART sequence over per-call
-    source/checkpoint dirs, not the slicing. Memoizing here removes
-    the per-invocation global sort + n writes that dominated
-    stream_foreach_upsert/stream_event_recovery's fixed cost (a
-    r06 bench finding: 13 s/invocation at sf0.1, most of it
-    re-slicing identical input)."""
-    import os
-
-    from ..sources.catalog import load_table
-    from ..sources.staging import session_staging_dir, sf_tag, tag_lock
-
-    tag = f"slices_{by}_{sf_tag(sf_dir)}_{n_files}"
-    base = session_staging_dir(spark, tag)
-    marker = os.path.join(base, "_COMPLETE")
-
-    def _paths() -> list[str]:
-        out = []
-        for i in range(1, n_files + 1):
-            d = os.path.join(base, f"s{i}")
-            f = next(n for n in os.listdir(d) if n.endswith(".parquet"))
-            out.append(os.path.join(d, f))
-        return out
-
-    # check-marker + build is serialized per tag: two concurrent
-    # first-callers must not race interleaved overwrite writes into
-    # the same slice parts (ADVICE r06)
-    with tag_lock(spark, tag):
-        if os.path.isfile(marker):
-            return _paths()
-
-        ev = load_table(spark, sf_dir, "events")
-        if by == "time":
-            from pyspark.sql.window import Window
-
-            sliced = ev.withColumn(
-                "_slice",
-                F.ntile(n_files).over(Window.orderBy("ts", "event_id")),
-            )
-            for i in range(1, n_files + 1):
-                sliced.where(F.col("_slice") == i).drop("_slice").coalesce(
-                    1
-                ).write.mode("overwrite").parquet(os.path.join(base, f"s{i}"))
-        else:
-            for i in range(1, n_files + 1):
-                ev.where(F.col("event_id") % n_files == i - 1).coalesce(
-                    1
-                ).write.mode("overwrite").parquet(os.path.join(base, f"s{i}"))
-        with open(marker, "w") as fh:
-            fh.write("ok")
-        return _paths()
-
-
-def stage_event_files(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
-) -> str:
-    """Stage the catalog's events table as ``n_files`` TIME-ORDERED
-    parquet files in a fresh temp directory, for feeding file-stream
-    contract queries as a multi-micro-batch sequence.
-
-    Files are split on event-time quantiles (file k holds the k-th time
-    slice) and stamped with increasing mtimes so the file-stream source
-    (which orders new files by modification time) processes them in
-    event-time order — the arrival pattern of a real ingestion
-    directory, where landing order tracks event time. Splitting on a
-    time column rather than a hash keeps cross-batch watermark
-    semantics honest: each batch's data is newer than the last.
-
-    The staging BASE dir is SESSION-SCOPED per (sf_dir, n_files) —
-    amortized across gate/bench/pytest runs instead of leaking one
-    temp dir per invocation (ADVICE r05) — but each invocation gets
-    its OWN src/ subdir (ADVICE r06): a shared src/ that is rmtree'd
-    per call would delete slice files out from under a concurrent
-    invocation's still-running file-source stream, and callers that
-    add extras after staging (stream_dedup's redelivered copies) must
-    never leak them into another invocation's stream. Only the
-    memoized slice parquet files are shared; per-call cost is n file
-    copies + mtime stamps."""
-    import os
-    import shutil
-    import time as _time
-
-    from ..sources.staging import session_staging_dir, sf_tag
-
-    base = session_staging_dir(
-        spark, f"stream_stage_{sf_tag(sf_dir)}_{n_files}"
-    )
-    src = os.path.join(base, f"src{next(_STAGE_SRC_SEQ)}")
-    os.makedirs(src)
-
-    # slices are session-memoized (pure function of the fixture);
-    # per-call work is n file copies + mtime stamps only
-    slice_files = staged_slice_parts(spark, sf_dir, n_files, by="time")
-    now = _time.time()
-    for i, part in enumerate(slice_files, start=1):
-        dst = os.path.join(src, f"slice{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-    return src
-
-
-def read_staged_event_stream(
-    spark: SparkSession, src: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """File stream over a ``stage_event_files`` directory (the staged
-    files are Spark-written, so the catalog schema applies directly —
-    no ns-layout probe needed). ``max_files_per_trigger`` sizes the
-    micro-batch: watermark-sensitive contracts (late_audit) and the
-    restart sequences keep 1 file per batch; the NoTimeout stateful
-    recurrences may batch wider (see their contract notes)."""
-    return (
-        spark.readStream.schema(TABLE_SCHEMAS["events"])
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src)
-    )
 
 
 def q_stream_event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,35 +369,23 @@ def q_stream_event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     value sum ⇒ accumulation-order-independent), and the DuckDB oracle
     is the SAME SQL as event_tumbling's. This puts a hash-verified
     driver row on the streaming code path (readStream → watermark →
-    windowed state → availableNow drain), which the pytest-only
-    streaming twins didn't have (VERDICT r03 ask #6).
+    windowed state → availableNow drain), which pytest alone covered
+    before.
 
     Scale: the plan is the incremental form — per-micro-batch partial
     aggregation into windowed state, shuffle O(windows × groups). The
     memory sink is test-harness plumbing; production writes the same
     stream to any writeStream target (sinks.py foreachBatch bridge)."""
-    return _drain_to_memory(
+    q = drain_to_memory(
         stream_event_tumbling_plan(spark, sf_dir), "stream_event_tumbling"
     )
+    return spark.table(q.name)
 
 
 def stream_event_session_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started streaming session aggregation behind
     q_stream_event_session (see stream_event_tumbling_plan for why)."""
-    ev = read_event_stream_auto(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-            exact_sum("value", 2, "sum_value"),
-        )
-        .select(
-            "user_id", "session_start", "session_end", "n_events", "sum_value"
-        )
-    )
+    return _session_agg(read_event_stream_auto(spark, sf_dir))
 
 
 def q_stream_event_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,18 +403,19 @@ def q_stream_event_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly — including the decimal-routed value sums (accumulation-
     order-independent). Hash-verified driver row on the session-state
     code path."""
-    return _drain_to_memory(
+    q = drain_to_memory(
         stream_event_session_plan(spark, sf_dir), "stream_event_session"
     )
+    return spark.table(q.name)
 
 
 def q_stream_event_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint-recovery contract query (VERDICT r04 ask #2): the
-    tumbling aggregation run as TWO separate streaming queries against
-    the SAME checkpoint — start, drain half the input, STOP (the
-    planned-kill analog: availableNow processes only what exists, then
-    shuts the query down), land the other half while no query is
-    running, restart, drain, return the final complete-mode state.
+    """Checkpoint-recovery contract query: the tumbling aggregation run
+    as TWO separate streaming queries against the SAME checkpoint —
+    start, drain half the input, STOP (the planned-kill analog:
+    availableNow processes only what exists, then shuts the query
+    down), land the other half while no query is running, restart,
+    drain, return the final complete-mode state.
 
     What this pins, hash-verified against event_tumbling's batch
     oracle: the restarted query recovers windowed state + source
@@ -485,10 +437,6 @@ def q_stream_event_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     matters most: a 1000-executor streaming job WILL be restarted —
     deploys, spot loss — and correctness across that boundary is what
     the checkpoint buys."""
-    import os
-    import shutil
-    import tempfile
-
     base = tempfile.mkdtemp(prefix="stream_recovery_")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
@@ -496,34 +444,21 @@ def q_stream_event_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     parts = staged_slice_parts(spark, sf_dir, 4, by="hash")
 
-    def land(i: int) -> None:
-        shutil.copy(parts[i], os.path.join(src, f"s{i}.parquet"))
-
-    def agg() -> DataFrame:
-        raw = (
-            spark.readStream.schema(TABLE_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        return _tumbling_agg(raw)
+    def run(prefix: str) -> StreamingQuery:
+        agg = _tumbling_agg(read_event_stream(spark, src))
+        return drain_to_memory(agg, prefix, checkpoint_dir=ckpt)
 
     # phase 1: half the input, run to completion, query stops
-    land(0)
-    land(1)
-    _drain_to_memory(agg(), "stream_recovery_phase1", checkpoint_dir=ckpt)
+    land_files(src, parts[:2])
+    run("stream_recovery_phase1")
     # the rest lands while NO query is running
-    land(2)
-    land(3)
+    land_files(src, parts[2:])
     # phase 2: a NEW query on the same checkpoint resumes exactly
-    return _drain_to_memory(
-        agg(), "stream_event_recovery", checkpoint_dir=ckpt
-    )
+    return spark.table(run("stream_event_recovery").name)
 
 
 def table_versions(tdir: str) -> list[int]:
     """Sorted batch-id versions present in a versioned-table dir."""
-    import os
-
     return sorted(
         int(n.split("v")[1]) for n in os.listdir(tdir) if n.startswith("v")
     )
@@ -549,8 +484,6 @@ def upsert_versioned(
     the emptiness probe, so a non-empty apply runs the micro-batch
     plan exactly once, as before. Version numbering simply skips the
     empty batch_id; a replay still finds its true predecessor."""
-    import os
-
     from ..operators.maintenance import merge_upsert
 
     sess = batch.sparkSession
@@ -576,14 +509,14 @@ def upsert_versioned(
 
 
 def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch EXACTLY-ONCE sink contract (VERDICT r05 #7): the
-    tumbling aggregation streamed in UPDATE mode through foreachBatch
-    into an idempotent MERGE-style table sink, killed and restarted
-    mid-stream — the streaming→maintenance integration: Structured
-    Streaming's sink guarantee is only at-least-once for foreachBatch,
-    and the published recipe for effective exactly-once is an
-    IDEMPOTENT batch apply keyed by (batch_id, merge key), which is
-    exactly what this builds from the engine's own merge_upsert.
+    """foreachBatch EXACTLY-ONCE sink contract: the tumbling
+    aggregation streamed in UPDATE mode through foreachBatch into an
+    idempotent MERGE-style table sink, killed and restarted mid-stream
+    — the streaming→maintenance integration: Structured Streaming's
+    sink guarantee is only at-least-once for foreachBatch, and the
+    published recipe for effective exactly-once is an IDEMPOTENT batch
+    apply keyed by (batch_id, merge key), which is exactly what this
+    builds from the engine's own merge_upsert.
 
     Per micro-batch: the update-mode rows (changed window aggregates)
     are merged into the previous table VERSION via merge_upsert
@@ -608,11 +541,6 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     could slice arbitrarily, this one cannot) are the session-memoized
     staged_slice_parts, so repeat invocations pay file copies, not a
     re-slicing job."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     base = tempfile.mkdtemp(prefix="stream_upsert_")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
@@ -621,14 +549,6 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(tdir)
 
     parts = staged_slice_parts(spark, sf_dir, 4, by="time")
-    _t0 = _time.time()
-
-    def land(i: int) -> None:
-        dst = os.path.join(src, f"s{i}.parquet")
-        shutil.copy(parts[i], dst)
-        # monotone mtimes: the file source orders new files by mtime,
-        # and slice order IS event-time order here
-        os.utime(dst, (_t0 + i * 10, _t0 + i * 10))
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         batch = bdf.withColumn(
@@ -640,29 +560,20 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_versioned(tdir, batch, batch_id, "k")
 
     def run_query() -> None:
-        raw = (
-            spark.readStream.schema(TABLE_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        writer = (
+            _tumbling_agg(read_event_stream(spark, src))
+            .writeStream.foreachBatch(apply_batch)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
         )
-        with stream_drain_conf(spark):
-            q = (
-                _tumbling_agg(raw)
-                .writeStream.foreachBatch(apply_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(writer, spark)
 
-    # phase 1: half the input, run to completion, query stops
-    land(0)
-    land(1)
+    # phase 1: half the input, run to completion, query stops; slice
+    # order IS event-time order here, and land_files keeps it
+    land_files(src, parts[:2])
     run_query()
     # the rest lands while NO query is running
-    land(2)
-    land(3)
+    land_files(src, parts[2:])
     # phase 2: a NEW query on the same checkpoint resumes exactly
     run_query()
 
@@ -670,8 +581,8 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not versions:
         # Every micro-batch was empty (possible only on an empty/
         # filtered events fixture): the empty-batch skip then writes no
-        # versions at all, where pre-r13 an empty v0 landed. Return the
-        # same empty result with the output schema (ADVICE r13 #2).
+        # versions at all, so there is no table to read. Return the
+        # same empty result with the output schema instead of failing.
         return spark.createDataFrame(
             [],
             "win_start timestamp, event_type string, "
@@ -681,77 +592,15 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.select("win_start", "event_type", "n_events", "sum_value")
 
 
-# name → un-started plan builder, for analysis-only tooling: executing
-# the q_stream_* contract queries runs a real streaming job AND hides
-# the aggregation plan behind the memory-sink scan; tools analyze these
-# instead.
-def _wave3_plan_builders() -> dict:
-    # late imports: dedup/joins/stateful import helpers from this
-    # module at call time, so a top-level import here would be a cycle
-    from .dedup import stream_dedup_plan
-    from .joins import stream_enrich_plan, stream_interval_join_plan
-    from .stateful import (
-        stream_cusum_plan,
-        stream_ewma_plan,
-        stream_profile_plan,
-        stream_twap_plan,
-    )
-    from .wordcount import stream_wordcount_plan
-
-    return {
-        "stream_dedup": stream_dedup_plan,
-        "stream_interval_join": stream_interval_join_plan,
-        "stream_profile": stream_profile_plan,
-        "stream_ewma": stream_ewma_plan,
-        "stream_twap": stream_twap_plan,
-        "stream_cusum": stream_cusum_plan,
-        "stream_wordcount": stream_wordcount_plan,
-        "stream_enrich": stream_enrich_plan,
-    }
-
-
-STREAM_PLAN_BUILDERS = {
-    "stream_event_tumbling": stream_event_tumbling_plan,
-    "stream_event_session": stream_event_session_plan,
-    "stream_sliding": stream_sliding_plan,
-    # the recovery query's aggregation plan IS the tumbling plan (same
-    # _tumbling_agg over a file stream); mapping it here keeps the
-    # analysis tools from executing the whole kill-and-restart sequence
-    "stream_event_recovery": stream_event_tumbling_plan,
-    # same plan under the foreachBatch upsert sink — mapping it here
-    # keeps the analysis tools from executing the restart sequence
-    "stream_foreach_upsert": stream_event_tumbling_plan,
-    **_wave3_plan_builders(),
-}
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, table_name: str, mode: str = "append"
-) -> "object":
-    """Drive a streaming DataFrame into an in-memory sink until all
-    available input is processed (test/demo harness). Returns the
-    stopped query; read results from ``spark.table(table_name)``."""
-    with stream_drain_conf(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(table_name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return q
-
-
 # Planted-late event_ids live above this offset; everything below is a
 # genuine fixture row. Shared by the Spark side, the analysis twin,
 # and the DuckDB oracle.
 LATE_PLANT_OFFSET = 1_000_000_000
 # Single source of truth for the late-audit watermark delay: the
 # stream's withWatermark string, the report's finalized-window cutoff,
-# and the DuckDB oracle's INTERVAL all derive from this one integer
-# (ADVICE r11 — three hardcoded copies meant changing any one alone
-# silently broke the hash contract).
+# and the DuckDB oracle's INTERVAL all derive from this one integer —
+# with three hardcoded copies, changing any one alone would silently
+# break the hash contract.
 LATE_AUDIT_WM_HOURS = 2
 LATE_AUDIT_WM = f"{LATE_AUDIT_WM_HOURS} hours"
 
@@ -830,8 +679,6 @@ def stream_late_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-time side is the batch conditional aggregate instead of the
     memory sink). Exact output schema; representative distributed
     plan; no build-time jobs."""
-    from ..sources.catalog import load_table
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
@@ -848,9 +695,9 @@ def stream_late_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming LATE-DATA ACCOUNTING contract (VERDICT r10 ask #6):
-    every other streaming row verifies the happy path — this one pins
-    what the watermark DROPS.
+    """Streaming LATE-DATA ACCOUNTING contract: every other streaming
+    row verifies the happy path — this one pins what the watermark
+    DROPS.
 
     Arrival sequence: the events table staged as 3 time-ordered
     micro-batch files, then a 4th PLANTED file landed last containing
@@ -877,43 +724,25 @@ def q_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear pass for the truth side — the audit you would run
     continuously on a 100 TB ingest to MEASURE late-data loss rather
     than assume it."""
-    import os
-    import shutil
 
-    from ..sources.catalog import load_table
-    from ..sources.staging import session_staging_dir, sf_tag, tag_lock
-
-    src = stage_event_files(spark, sf_dir, n_files=3)
-    # The planted-late file is a pure function of the fixture (first-
-    # hour events, ids offset) — build it ONCE per (application,
-    # sf_dir) like staged_slice_parts; per-call work is one file copy
-    # + mtime stamp, not a min-ts job + coalesce(1) write.
-    tag = f"late_plant_{sf_tag(sf_dir)}"
-    base = session_staging_dir(spark, tag)
-    marker = os.path.join(base, "_COMPLETE")
-    with tag_lock(spark, tag):
-        if not os.path.isfile(marker):
-            ev = load_table(spark, sf_dir, "events")
-            lo = ev.agg(F.min("ts")).collect()[0][0]  # 1-row bounded
-            plant = ev.where(
+    def plant() -> list[DataFrame]:
+        # first-hour events with offset ids: a pure function of the
+        # fixture, so it is built once like the slices
+        ev = load_table(spark, sf_dir, "events")
+        lo = ev.agg(F.min("ts")).collect()[0][0]  # 1-row bounded
+        return [
+            ev.where(
                 F.col("ts") < F.lit(lo) + F.expr("INTERVAL 1 HOUR")
             ).withColumn(
                 "event_id", F.col("event_id") + F.lit(LATE_PLANT_OFFSET)
             )
-            plant.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(base, "plant")
-            )
-            with open(marker, "w") as fh:
-                fh.write("ok")
-    pdir = os.path.join(base, "plant")
-    part = next(n for n in os.listdir(pdir) if n.endswith(".parquet"))
-    dst = os.path.join(src, "slice4_late.parquet")
-    shutil.copy(os.path.join(pdir, part), dst)
-    mt = os.path.getmtime(os.path.join(src, "slice3.parquet")) + 10
-    os.utime(dst, (mt, mt))
+        ]
+
+    src = stage_event_files(spark, sf_dir, n_files=3)
+    land_files(src, build_once(spark, f"late_plant_{sf_tag(sf_dir)}", plant))
 
     agg = (
-        read_staged_event_stream(spark, src)
+        read_event_stream(spark, src)
         .withWatermark("ts", LATE_AUDIT_WM)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
@@ -927,12 +756,10 @@ def q_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "on_time_sum",
         )
     )
-    sink = _drain_to_memory(agg, "stream_late_audit", output_mode="append")
+    q = drain_to_memory(agg, "stream_late_audit", output_mode="append")
 
     staged = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(src)
     return _late_audit_report(
-        staged.select("event_id", "ts", "event_type", "value"), sink
+        staged.select("event_id", "ts", "event_type", "value"),
+        spark.table(q.name),
     )
-
-
-STREAM_PLAN_BUILDERS["stream_late_audit"] = stream_late_audit_plan

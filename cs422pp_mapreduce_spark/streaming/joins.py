@@ -18,8 +18,18 @@ eventually.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.catalog import load_table
+from .events import (
+    drain_to_memory,
+    read_event_stream,
+    read_event_stream_auto,
+    stage_event_files,
+)
 
 
 def interval_join(
@@ -57,20 +67,21 @@ def interval_join(
     ).select("k", "left_id", "right_id", "lts", "rts")
 
 
-def stream_interval_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-started streaming plan behind q_stream_interval_join (same
-    join over the catalog events stream) for analysis tooling."""
-    from .events import read_event_stream_auto
-
-    views = read_event_stream_auto(spark, sf_dir).where(
-        F.col("event_type") == "view"
-    )
-    purchases = read_event_stream_auto(spark, sf_dir).where(
-        F.col("event_type") == "purchase"
-    )
+def _view_purchase_join(read: Callable[[], DataFrame]) -> DataFrame:
+    """View events joined to same-user purchases within 30 minutes,
+    each side its own stream from ``read()``. The watermark spans the
+    fixture, so nothing is late-dropped whatever the arrival order."""
+    views = read().where(F.col("event_type") == "view")
+    purchases = read().where(F.col("event_type") == "purchase")
     return interval_join(
         views, purchases, key="user_id", gap_minutes=30, watermark="90 days"
     )
+
+
+def stream_interval_join_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Un-started streaming plan behind q_stream_interval_join (same
+    join over the catalog events stream) for analysis tooling."""
+    return _view_purchase_join(lambda: read_event_stream_auto(spark, sf_dir))
 
 
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,21 +109,10 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the join state is hash-partitioned on the key, identical to
     the batch shuffle; 1000 executors each buffer only their key
     range's interval window."""
-    from .events import _drain_to_memory, read_staged_event_stream, stage_event_files
-
     src = stage_event_files(spark, sf_dir, n_files=2)
-    views = read_staged_event_stream(spark, src).where(
-        F.col("event_type") == "view"
-    )
-    purchases = read_staged_event_stream(spark, src).where(
-        F.col("event_type") == "purchase"
-    )
-    joined = interval_join(
-        views, purchases, key="user_id", gap_minutes=30, watermark="90 days"
-    )
-    return _drain_to_memory(
-        joined, "stream_interval_join", output_mode="append"
-    )
+    joined = _view_purchase_join(lambda: read_event_stream(spark, src))
+    q = drain_to_memory(joined, "stream_interval_join", "append")
+    return spark.table(q.name)
 
 
 def enrich_stream(
@@ -132,13 +132,11 @@ def enrich_stream(
     ).drop(dim_key)
 
 
-def stream_enrich_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Un-started stream-static enrichment plan behind q_stream_enrich
-    for analysis tooling."""
-    from ..sources.catalog import load_table
-    from .events import read_event_stream_auto
-
-    ev = read_event_stream_auto(spark, sf_dir)
+def _type_count_enrich(
+    spark: SparkSession, sf_dir: str, ev: DataFrame
+) -> DataFrame:
+    """Each event of ``ev`` left-joined with its type's global event
+    count, the static dimension of q_stream_enrich."""
     dim = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("event_type").alias("et"))
@@ -147,6 +145,14 @@ def stream_enrich_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich_stream(
         ev.select("event_id", "event_type", "value"), dim, "event_type", "et"
     ).select("event_id", "event_type", "value", "type_n")
+
+
+def stream_enrich_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Un-started stream-static enrichment plan behind q_stream_enrich
+    for analysis tooling."""
+    return _type_count_enrich(
+        spark, sf_dir, read_event_stream_auto(spark, sf_dir)
+    )
 
 
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,23 +172,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the dim ships as a broadcast hash table per micro-batch
     (refreshable between batches at cluster scale); the event stream
     is never shuffled."""
-    from .events import (
-        _drain_to_memory,
-        read_staged_event_stream,
-        stage_event_files,
-    )
-    from ..sources.catalog import load_table
-
     src = stage_event_files(spark, sf_dir, n_files=2)
-    ev = read_staged_event_stream(spark, src).select(
-        "event_id", "event_type", "value"
-    )
-    dim = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(F.col("event_type").alias("et"))
-        .agg(F.count(F.lit(1)).alias("type_n"))
-    )
-    out = enrich_stream(ev, dim, "event_type", "et").select(
-        "event_id", "event_type", "value", "type_n"
-    )
-    return _drain_to_memory(out, "stream_enrich", output_mode="append")
+    out = _type_count_enrich(spark, sf_dir, read_event_stream(spark, src))
+    q = drain_to_memory(out, "stream_enrich", "append")
+    return spark.table(q.name)

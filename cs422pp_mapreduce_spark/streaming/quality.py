@@ -15,63 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# documents table schema for the file-stream reader (readStream needs
-# an explicit schema; mirrors TABLE_SCHEMAS in sources/catalog.py)
-DOC_STREAM_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def stage_document_files(
-    spark: SparkSession, sf_dir: str, n_files: int = 2
-) -> str:
-    """Stage the catalog's documents table as ``n_files`` doc_id-range
-    parquet files in a session-memoized staging dir — the arrival
-    pattern of a crawl-ingest directory (each landed file is one
-    micro-batch). Mirrors streaming/events.staged_slice_parts'
-    memoization discipline: build once per (application, sf_dir,
-    n_files), serialized per tag."""
-    import os
-
-    from ..sources.catalog import load_table
-    from ..sources.staging import session_staging_dir, sf_tag, tag_lock
-
-    import shutil
-    import tempfile
-    import time
-
-    tag = f"docslices_{sf_tag(sf_dir)}_{n_files}"
-    base = session_staging_dir(spark, tag)
-    marker = os.path.join(base, "_COMPLETE")
-    with tag_lock(spark, tag):
-        if not os.path.isfile(marker):
-            from pyspark.sql.window import Window
-
-            docs = load_table(spark, sf_dir, "documents").withColumn(
-                "_slice",
-                F.ntile(n_files).over(Window.orderBy("doc_id")),
-            )
-            for i in range(1, n_files + 1):
-                docs.where(F.col("_slice") == i).drop("_slice").coalesce(
-                    1
-                ).write.mode("overwrite").parquet(
-                    os.path.join(base, f"s{i}")
-                )
-            with open(marker, "w") as fh:
-                fh.write("ok")
-    # per-call src dir with FLAT slice files + increasing mtimes (the
-    # stage_event_files discipline): the file-stream source lists
-    # plain files, not nested parquet dirs, and a fresh src per call
-    # keeps concurrent invocations' streams isolated.
-    src = tempfile.mkdtemp(prefix=f"{tag}_src_")
-    now = time.time()
-    for i in range(1, n_files + 1):
-        d = os.path.join(base, f"s{i}")
-        part = next(n for n in os.listdir(d) if n.endswith(".parquet"))
-        dst = os.path.join(src, f"slice{i}.parquet")
-        shutil.copy(os.path.join(d, part), dst)
-        os.utime(dst, (now + 10 * i, now + 10 * i))
-    return src
+from ..sources.catalog import TABLE_SCHEMAS, load_table
+from .events import drain_to_memory, stage_document_files
 
 
 def _stream_feats(sdocs: DataFrame) -> DataFrame:
@@ -174,28 +119,24 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (doc_id, n_grams, score, admit) — Σ over gram instances of w
     regroups Σ tf·w exactly (decimal addition)."""
     from ..operators.textops import qc_fit
-    from ..sources.catalog import load_table
-    from .events import _drain_to_memory
 
     docs = load_table(spark, sf_dir, "documents")
     m = qc_fit(spark, docs)
     bias = m["prior"].collect()[0]["bias"]  # Decimal — exact literal
     thr = m["thr"].collect()[0]["thr"]  # IEEE double — exact literal
-    # one availableNow trigger (r14, the q_stream_twap note): the gate
-    # is stateless per document given the model — each doc's grams are
-    # in one file hence one batch at ANY trigger size — while each
-    # extra micro-batch pays a full state-commit + Python-round cycle
-    # for the per-doc aggregation state.
-    src = stage_document_files(spark, sf_dir, n_files=2)
+    # one availableNow trigger (as in streaming/stateful._staged_stream):
+    # the gate is stateless per document given the model — each doc's
+    # grams are in one file hence one batch at ANY trigger size — while
+    # each extra micro-batch pays a full state-commit + Python-round
+    # cycle for the per-doc aggregation state.
     sdocs = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
+        spark.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        .parquet(stage_document_files(spark, sf_dir, n_files=2))
     )
     gated = stream_quality_gate_frame(sdocs, m["w"], bias, thr)
-    return _drain_to_memory(
-        gated, "stream_quality_gate", output_mode="update"
-    )
+    q = drain_to_memory(gated, "stream_quality_gate", "update")
+    return spark.table(q.name)
 
 
 def stream_quality_gate_plan(
@@ -208,7 +149,6 @@ def stream_quality_gate_plan(
     import decimal
 
     from ..operators.textops import qc_fit
-    from ..sources.catalog import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     m = qc_fit(spark, docs)

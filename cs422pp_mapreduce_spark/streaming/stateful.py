@@ -28,11 +28,20 @@ from collections.abc import Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
 
 from ..functions.numeric import exact_int, fixed_long
+from ..sources.catalog import load_table
+from .events import (
+    drain_to_memory,
+    read_event_stream,
+    read_event_stream_auto,
+    stage_event_files,
+)
 
 PROFILE_SCHEMA = T.StructType(
     [
@@ -101,6 +110,39 @@ def _make_update_profile(ttl_minutes: int | None, event_time: bool = False):
     return _update_profile
 
 
+def latest_per_key(sink: DataFrame, key: str, counter: str) -> DataFrame:
+    """The converged state of an update-mode stateful sink: per ``key``,
+    the row with the highest ``counter``. Each emission of a key
+    carries a strictly larger count than the last, so that row is the
+    key's final state."""
+    w = Window.partitionBy(key).orderBy(F.desc(counter))
+    return (
+        sink.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _staged_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table staged as three time-ordered files and read in
+    ONE availableNow micro-batch (``maxFilesPerTrigger`` = 3).
+
+    Each micro-batch of a NoTimeout update-mode recurrence pays a full
+    state-store commit cycle plus a Python worker round per state
+    partition, which at contract state sizes is pure fixed cost for
+    the same rows: interleaved at sf0.1, stream_twap went 4.9 → 2.1 s
+    and stream_ewma 5.8 → 2.2 s with bit-identical output, while a
+    2-batch drain still took 4.8 s, so the win needs one trigger. The
+    folds sort each key's rows by (ts, event_id) within a batch, so the
+    final state does not depend on batch sizing. The CROSS-batch state
+    handoff stays pinned by the seeded-continuation tests
+    (tests/test_stateful_streaming.py) and by the restart contracts
+    (stream_event_recovery / stream_foreach_upsert), whose multi-batch
+    arrival sequences are semantic."""
+    src = stage_event_files(spark, sf_dir, n_files=3)
+    return read_event_stream(spark, src, max_files_per_trigger=3)
+
+
 def user_activity_profile(
     events: DataFrame,
     ttl_minutes: int | None = None,
@@ -145,10 +187,6 @@ def stream_profile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same state operator over the catalog events stream; the final
     batch-side max-n_events projection keeps names/types identical)
     for analysis tooling."""
-    from pyspark.sql import functions as F
-
-    from .events import read_event_stream_auto
-
     ev = read_event_stream_auto(spark, sf_dir).withColumn(
         "value", F.round(F.col("value") * 100, 0)
     )
@@ -159,10 +197,9 @@ def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract ARBITRARY-STATE streaming query: the per-user
     running activity profile (applyInPandasWithState) over the events
     table staged as three time-ordered files drained in one
-    availableNow trigger (r14 — see q_stream_twap's note), update-mode
-    memory sink, final state = the max-``n_events`` row per user
-    (the counter is strictly monotone per emission, so that row IS the
-    converged profile).
+    availableNow trigger (see ``_staged_stream``; the profile fold is
+    count/sum/max, order-free per key), update-mode memory sink, final
+    state = the max-``n_events`` row per user (``latest_per_key``).
 
     Exactness without trusting float accumulation order: the stream
     feeds the state function ``value`` pre-scaled to integral CENTS
@@ -178,28 +215,12 @@ def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is four scalars per user, shuffled once per
     micro-batch on user_id — the cost profile of a built-in streaming
     agg; TTL/expiry variants are pinned in tests/test_stateful_streaming.py."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .events import (
-        _drain_to_memory,
-        read_staged_event_stream,
-        stage_event_files,
+    ev = _staged_stream(spark, sf_dir).withColumn(
+        "value", F.round(F.col("value") * 100, 0)
     )
-
-    # one availableNow trigger (r14): see q_stream_twap's note — the
-    # NoTimeout profile fold is order-free per key (count/sum/max),
-    # so batch sizing never changes the final state.
-    src = stage_event_files(spark, sf_dir, n_files=3)
-    ev = read_staged_event_stream(
-        spark, src, max_files_per_trigger=3
-    ).withColumn("value", F.round(F.col("value") * 100, 0))
-    profiles = user_activity_profile(ev)
-    sink = _drain_to_memory(profiles, "stream_profile", output_mode="update")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    q = drain_to_memory(user_activity_profile(ev), "stream_profile", "update")
     return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        latest_per_key(spark.table(q.name), "user_id", "n_events")
         .select(
             "user_id",
             "n_events",
@@ -213,8 +234,6 @@ def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def user_activity_profile_batch(events: DataFrame) -> DataFrame:
     """Batch twin (plain aggregation) — what the streaming state
     converges to after all input; tests assert equality."""
-    from pyspark.sql import functions as F
-
     return events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("sum_value"),
@@ -255,7 +274,7 @@ def _update_ewma(
     # concat the Arrow chunk iterator FIRST, then sort ONCE: per-chunk
     # sorting is only correct if chunk time-ranges never interleave,
     # which shuffle-read order does not guarantee when the staged file
-    # scans as >1 partition (ADVICE r08). Per-key-per-batch row counts
+    # scans as >1 partition. Per-key-per-batch row counts
     # are bounded, so the concat is cheap and the fold order becomes
     # partition-count-independent — exactly the batch twin's
     # array_sort order.
@@ -267,7 +286,7 @@ def _update_ewma(
         # still counts the row — a null 'value' would yield a finite
         # ewma with an inflated count instead of the NaN the replaced
         # Python loop propagated. Fail loudly on bad input instead of
-        # diverging from the batch twin (ADVICE r09).
+        # diverging from the batch twin.
         if vals.isna().any():
             raise ValueError(
                 f"stream_ewma: null/NaN 'value' for user_id={user_id}"
@@ -279,8 +298,8 @@ def _update_ewma(
         # JVM fold in the batch twin — so the result is BIT-IDENTICAL
         # to the row loop it replaces (pinned across magnitudes
         # 1e±200 and seeded continuations in
-        # tests/test_stateful_streaming.py; the r09 swap cut the sf1
-        # wall of the 1M-row stream). Cross-batch state seeds the
+        # tests/test_stateful_streaming.py; the swap cut the sf1 wall
+        # of the 1M-row stream). Cross-batch state seeds the
         # kernel as a prepended pseudo-first element: y_0 = s exactly,
         # every later step continues the recurrence.
         if n > 0:
@@ -313,8 +332,6 @@ def user_ewma_stream(events: DataFrame) -> DataFrame:
 def stream_ewma_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started applyInPandasWithState plan behind q_stream_ewma for
     the analysis tools."""
-    from .events import read_event_stream_auto
-
     return user_ewma_stream(read_event_stream_auto(spark, sf_dir))
 
 
@@ -322,9 +339,8 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract stateful-streaming EWMA: the per-user
     exponential smoother run through applyInPandasWithState over
     the events table staged as three time-ordered files drained in
-    one availableNow trigger (r14 — see q_stream_twap's note),
-    update-mode memory sink, final state = the max-``n_events`` row
-    per user.
+    one availableNow trigger (see ``_staged_stream``), update-mode
+    memory sink, final state = the max-``n_events`` row per user.
 
     HASH-VERIFIED against the BATCH oracle (the same DuckDB
     list_reduce SQL as ewma_smooth): the staged slices partition the
@@ -336,31 +352,12 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     recurrence (stream_profile's state is integral cents): it proves
     order-stable state handoff across micro-batch boundaries, which is
     exactly the property a production streaming smoother needs after
-    restarts/backfills.
-
-    Trigger sizing (r14): one availableNow trigger over the staged
-    files — see q_stream_twap's contract note (measured 5.8 → 2.2 s
-    at sf0.1, output bit-identical; cross-batch handoff stays pinned
-    by the seeded-continuation pytest suite and the restart
-    contracts)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .events import (
-        _drain_to_memory,
-        read_staged_event_stream,
-        stage_event_files,
+    restarts/backfills."""
+    q = drain_to_memory(
+        user_ewma_stream(_staged_stream(spark, sf_dir)), "stream_ewma", "update"
     )
-
-    src = stage_event_files(spark, sf_dir, n_files=3)
-    ev = read_staged_event_stream(spark, src, max_files_per_trigger=3)
-    out = user_ewma_stream(ev)
-    sink = _drain_to_memory(out, "stream_ewma", output_mode="update")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        sink.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", "n_events", "ewma")
+    return latest_per_key(spark.table(q.name), "user_id", "n_events").select(
+        "user_id", "n_events", "ewma"
     )
 
 
@@ -399,8 +396,8 @@ def _update_twap(
         area = int(area_str)
     else:
         n, t_first, t_prev, v_prev, area = 0, 0, 0, 0, 0
-    # concat-then-sort-once (ADVICE r08; see _update_ewma): per-chunk
-    # sorting diverges if one key's batch rows span interleaving
+    # concat-then-sort-once (see _update_ewma): per-chunk sorting
+    # diverges if one key's batch rows span interleaving
     # Arrow chunks
     chunks = [pdf for pdf in pdfs if len(pdf)]
     for pdf in [pd.concat(chunks)] if chunks else []:
@@ -441,8 +438,6 @@ def user_twap_stream(events: DataFrame) -> DataFrame:
 
 
 def _twap_stream_projection(ev: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return ev.select(
         "user_id",
         F.unix_micros("ts").alias("t_us"),
@@ -452,8 +447,6 @@ def _twap_stream_projection(ev: DataFrame) -> DataFrame:
 
 
 def _twap_final_projection(sink: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return sink.where(F.col("span_us") > 0).select(
         "user_id",
         "n_events",
@@ -469,8 +462,6 @@ def stream_twap_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started applyInPandasWithState plan behind q_stream_twap for
     the analysis tools — same final projection as the real query (the
     max-n_events dedup is a drain detail the memory sink owns)."""
-    from .events import read_event_stream_auto
-
     return _twap_final_projection(
         user_twap_stream(
             _twap_stream_projection(read_event_stream_auto(spark, sf_dir))
@@ -482,9 +473,9 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract streaming TWAP: the per-user time-weighted
     average computed through applyInPandasWithState's per-key
     interval state over the events table staged as three time-ordered
-    files drained in one availableNow trigger (r14 — see the note
-    below), update-mode memory sink, final state = max-``n_events``
-    row per user.
+    files drained in one availableNow trigger (see
+    ``_staged_stream``), update-mode memory sink, final state =
+    max-``n_events`` row per user.
 
     HASH-VERIFIED against the BATCH oracle (the same DuckDB SQL as
     twap): holding intervals are exact integer microseconds × exact
@@ -492,44 +483,14 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (stringified through the state schema, decimal(38,0) on the
     way out), and the final division is the identical double
     expression — so the incremental fold equals the batch lead()-
-    window aggregation bit-for-bit. This is the r07 verdict's ask #5:
-    proof that the TWAP decomposition is genuinely incremental (O(1)
-    state per key), not just window-expressible.
-
-    Trigger sizing (r14, VERDICT r13 ask #3; guide §2/§6 amortize
-    per-batch fixed cost): the staged files drain in ONE availableNow
-    trigger (maxFilesPerTrigger = n_files) — each micro-batch of a
-    NoTimeout update-mode recurrence pays a full state-store commit
-    cycle + a Python worker round per state partition, which at
-    contract state sizes is 3× pure fixed cost for the same rows
-    (measured interleaved at sf0.1: 4.9 → 2.1 s, output
-    bit-identical; 2-batch drains measured 4.8 s — the win needs one
-    trigger). The CROSS-batch state handoff this row previously also
-    exercised stays pinned by the seeded-continuation pytest suite
-    (tests/test_stateful_streaming.py) and by the restart contracts
-    (stream_event_recovery / stream_foreach_upsert), whose multi-batch
-    arrival sequences are semantic and untouched."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .events import (
-        _drain_to_memory,
-        read_staged_event_stream,
-        stage_event_files,
+    window aggregation bit-for-bit: the TWAP decomposition is
+    genuinely incremental (O(1) state per key), not just
+    window-expressible."""
+    ev = _twap_stream_projection(_staged_stream(spark, sf_dir))
+    q = drain_to_memory(user_twap_stream(ev), "stream_twap", "update")
+    return _twap_final_projection(
+        latest_per_key(spark.table(q.name), "user_id", "n_events")
     )
-
-    src = stage_event_files(spark, sf_dir, n_files=3)
-    ev = _twap_stream_projection(
-        read_staged_event_stream(spark, src, max_files_per_trigger=3)
-    )
-    sink = _drain_to_memory(
-        user_twap_stream(ev), "stream_twap", output_mode="update"
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = sink.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    )
-    return _twap_final_projection(final.drop("rn"))
 
 
 # --- streaming CUSUM drift (exact-integer recurrence state) -----------------
@@ -565,7 +526,7 @@ def _update_cusum(
     else:
         n_seen, p, mprev, cmax = 0, 0, None, None
     n_total = 0
-    # concat-then-sort-once (ADVICE r08; see _update_ewma)
+    # concat-then-sort-once (see _update_ewma)
     chunks = [pdf for pdf in pdfs if len(pdf)]
     for pdf in [pd.concat(chunks)] if chunks else []:
         pdf = pdf.sort_values(["ts", "event_id"])
@@ -620,10 +581,6 @@ def type_cusum_stream(events_with_stats: DataFrame) -> DataFrame:
 
 
 def _cusum_static_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.catalog import load_table
-
     return (
         load_table(spark, sf_dir, "events")
         .select(
@@ -636,8 +593,6 @@ def _cusum_static_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cusum_stream_projection(ev: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return ev.select(
         "event_type",
         "ts",
@@ -647,8 +602,6 @@ def _cusum_stream_projection(ev: DataFrame) -> DataFrame:
 
 
 def _cusum_final_projection(sink: DataFrame) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return sink.select(
         "event_type",
         F.col("n_total").alias("n_events"),
@@ -663,10 +616,6 @@ def stream_cusum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started plan behind q_stream_cusum for the analysis tools
     (stream-static join + applyInPandasWithState), same final
     projection as the real query."""
-    from pyspark.sql import functions as F
-
-    from .events import read_event_stream_auto
-
     ev = _cusum_stream_projection(read_event_stream_auto(spark, sf_dir))
     return _cusum_final_projection(
         type_cusum_stream(
@@ -682,7 +631,7 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift computed INCREMENTALLY — baseline (n, S) from a static batch
     aggregate (the calibration pass a production drift monitor runs
     first), then the events stream staged as three time-ordered
-    micro-batches flows through a stream-static broadcast join into
+    files flows through a stream-static broadcast join into
     the O(1)-state recurrence, update-mode memory sink, final state =
     max-``n_seen`` row per type.
 
@@ -692,33 +641,15 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final normalization is the identical double expression — so
     the incremental recurrence equals the batch three-window plan
     bit-for-bit, proving the window-algebra decomposition is genuinely
-    streaming-compatible (r07 verdict ask #5: cusum is the change-point
-    detector a monitoring pipeline runs incrementally)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from .events import (
-        _drain_to_memory,
-        read_staged_event_stream,
-        stage_event_files,
-    )
-
-    # one availableNow trigger (r14): see q_stream_twap's note — the
-    # per-batch state-commit + Python-round fixed cost is the wall at
-    # contract state sizes; fold order within the single batch is the
-    # same (ts, event_id) sort, so the recurrence is bit-identical.
-    src = stage_event_files(spark, sf_dir, n_files=3)
-    ev = _cusum_stream_projection(
-        read_staged_event_stream(spark, src, max_files_per_trigger=3)
-    )
+    streaming-compatible (cusum is the change-point detector a
+    monitoring pipeline runs incrementally). One availableNow trigger
+    (see ``_staged_stream``): fold order within the single batch is the
+    same (ts, event_id) sort, so the recurrence is bit-identical."""
+    ev = _cusum_stream_projection(_staged_stream(spark, sf_dir))
     joined = ev.join(
         F.broadcast(_cusum_static_stats(spark, sf_dir)), "event_type"
     )
-    sink = _drain_to_memory(
-        type_cusum_stream(joined), "stream_cusum", output_mode="update"
+    q = drain_to_memory(type_cusum_stream(joined), "stream_cusum", "update")
+    return _cusum_final_projection(
+        latest_per_key(spark.table(q.name), "event_type", "n_seen")
     )
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_seen"))
-    final = sink.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") == 1
-    )
-    return _cusum_final_projection(final)

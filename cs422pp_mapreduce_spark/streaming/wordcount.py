@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.wordcount import wordcount_df
+from ..sources.catalog import TABLE_SCHEMAS
+from .events import drain_to_memory, stage_document_files
 
 
 def read_text_stream(spark: SparkSession, path: str,
@@ -34,8 +36,6 @@ def stream_wordcount(lines: DataFrame) -> DataFrame:
 def stream_wordcount_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Un-started streaming plan behind q_stream_wordcount (the same
     aggregation over the catalog documents file) for analysis tooling."""
-    from ..sources.catalog import TABLE_SCHEMAS
-
     raw = (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("pathGlobFilter", "documents.parquet")
@@ -62,40 +62,10 @@ def q_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-batch map-side partials shuffle O(distinct words), and
     state is O(vocabulary) — the streaming wordcount every ingest
     pipeline runs as its arrival monitor."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from ..sources.catalog import TABLE_SCHEMAS, load_table
-    from .events import _drain_to_memory
-
-    base = tempfile.mkdtemp(prefix="stream_wc_")
-    parts, src = os.path.join(base, "parts"), os.path.join(base, "src")
-    os.makedirs(src)
-    docs = load_table(spark, sf_dir, "documents")
-    sliced = docs.withColumn(
-        "_slice", F.ntile(2).over(Window.orderBy("doc_id"))
-    )
-    now = _time.time()
-    for i in (1, 2):
-        d = f"{parts}/s{i}"
-        sliced.where(F.col("_slice") == i).drop("_slice").coalesce(
-            1
-        ).write.parquet(d)
-        f = next(n for n in os.listdir(d) if n.endswith(".parquet"))
-        dst = os.path.join(src, f"slice{i}.parquet")
-        shutil.copy(os.path.join(d, f), dst)
-        os.utime(dst, (now + i * 10, now + i * 10))
-    shutil.rmtree(parts)
-
     raw = (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])
         .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+        .parquet(stage_document_files(spark, sf_dir, n_files=2))
     )
-    counts = wordcount_df(raw, "text")
-    return _drain_to_memory(counts, "stream_wordcount").orderBy("word")
+    q = drain_to_memory(wordcount_df(raw, "text"), "stream_wordcount")
+    return spark.table(q.name).orderBy("word")

@@ -12,9 +12,10 @@ import pytest
 
 from cs422pp_mapreduce_spark.operators import events as EV
 from cs422pp_mapreduce_spark.streaming.events import (
+    _session_agg,
+    _tumbling_agg,
+    drain_to_memory,
     read_event_stream,
-    run_stream_to_memory,
-    stream_tumbling_counts,
 )
 from cs422pp_mapreduce_spark.sources.catalog import load_table
 
@@ -64,16 +65,10 @@ def stream_dir(spark, sf_dir):
 def test_stream_sessions_equal_batch(spark, sf_dir, stream_dir):
     import datetime
 
-    from cs422pp_mapreduce_spark.streaming.events import stream_session_windows
-
     stream = read_event_stream(spark, stream_dir)
-    run_stream_to_memory(
-        stream_session_windows(stream, gap="30 minutes", watermark="2 hours"),
-        "t_stream_sessions",
-        mode="append",
-    )
+    q = drain_to_memory(_session_agg(stream), "t_stream_sessions", "append")
     got = _key(
-        spark.table("t_stream_sessions").collect(),
+        spark.table(q.name).collect(),
         ["user_id", "session_start", "n_events"],
     )
     max_ts = load_table(spark, sf_dir, "events").agg({"ts": "max"}).collect()[0][0]
@@ -97,13 +92,9 @@ def test_stream_tumbling_equals_batch(spark, sf_dir, stream_dir):
 
     stream = read_event_stream(spark, stream_dir)
     assert stream.isStreaming
-    run_stream_to_memory(
-        stream_tumbling_counts(stream, watermark="2 hours"),
-        "t_stream_tumbling",
-        mode="append",
-    )
+    q = drain_to_memory(_tumbling_agg(stream), "t_stream_tumbling", "append")
     got = _key(
-        spark.table("t_stream_tumbling").collect(),
+        spark.table(q.name).collect(),
         ["win_start", "event_type", "n_events"],
     )
     # Append mode emits only windows finalized by the watermark
@@ -145,10 +136,8 @@ def test_stream_dedup_exactly_once(spark, sf_dir, dup_stream_dir):
     from cs422pp_mapreduce_spark.streaming.dedup import stream_dedup_events
 
     stream = read_event_stream(spark, dup_stream_dir)
-    run_stream_to_memory(
-        stream_dedup_events(stream), "t_stream_dedup", mode="append"
-    )
-    got = spark.table("t_stream_dedup")
+    q = drain_to_memory(stream_dedup_events(stream), "t_stream_dedup", "append")
+    got = spark.table(q.name)
     n = load_table(spark, sf_dir, "events").count()
     # doubled input, exactly-once output, no key seen twice
     assert got.count() == n

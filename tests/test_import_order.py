@@ -6,38 +6,30 @@ The operators↔oracles topology is deliberately cyclic at module scope
 home — while oracle builders import operator modules for plan
 constants). That cycle is safe only under an ordering discipline:
 constants used by operators must be defined in oracles.py BEFORE the
-first oracle builder that imports an operator module back. Two r07
+first oracle builder that imports an operator module back. Two past
 regressions (NEG_K, PCA_ROUNDS) broke direct `import textops` /
 `import similarity` while every aggregate entrypoint still worked —
-exactly the failure mode only a module-first import catches.
+exactly the failure mode only a module-first import catches. The
+module list is generated from the package, so a new module is guarded
+from the start.
 """
 
 from __future__ import annotations
 
+import pkgutil
 import subprocess
 import sys
 
 import pytest
 
-MODULES = [
-    "cs422pp_mapreduce_spark.oracles",
-    "cs422pp_mapreduce_spark.operators.relational",
-    "cs422pp_mapreduce_spark.operators.events",
-    "cs422pp_mapreduce_spark.operators.textops",
-    "cs422pp_mapreduce_spark.operators.similarity",
-    "cs422pp_mapreduce_spark.operators.dedup",
-    "cs422pp_mapreduce_spark.operators.multimodal",
-    "cs422pp_mapreduce_spark.operators.graph",
-    "cs422pp_mapreduce_spark.operators.maintenance",
-    "cs422pp_mapreduce_spark.operators.tokenize",
-    "cs422pp_mapreduce_spark.operators.tpch",
-    "cs422pp_mapreduce_spark.operators.corpus",
-    "cs422pp_mapreduce_spark.operators.asof",
-    "cs422pp_mapreduce_spark.operators.sqlsurface",
-    "cs422pp_mapreduce_spark.operators.wordcount",
-    "cs422pp_mapreduce_spark.streaming.events",
-    "cs422pp_mapreduce_spark.plans.analysis",
-]
+import cs422pp_mapreduce_spark
+
+MODULES = sorted(
+    m.name
+    for m in pkgutil.walk_packages(
+        cs422pp_mapreduce_spark.__path__, "cs422pp_mapreduce_spark."
+    )
+)
 
 
 @pytest.mark.parametrize("mod", MODULES)

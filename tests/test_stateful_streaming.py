@@ -7,8 +7,8 @@ import pytest
 
 from cs422pp_mapreduce_spark.sources.catalog import load_table
 from cs422pp_mapreduce_spark.streaming.events import (
+    drain_to_memory,
     read_event_stream,
-    run_stream_to_memory,
 )
 from cs422pp_mapreduce_spark.streaming.stateful import (
     user_activity_profile,
@@ -32,15 +32,13 @@ def stream_dir(spark, sf_dir, tmp_path):
 
 def test_stateful_profile_converges_to_batch(spark, sf_dir, stream_dir):
     stream = read_event_stream(spark, stream_dir, max_files_per_trigger=1)
-    q = run_stream_to_memory(
-        user_activity_profile(stream), "t_profiles", mode="update"
-    )
+    q = drain_to_memory(user_activity_profile(stream), "t_profiles", "update")
     # one micro-batch per staged file, so the second one folds into
     # state the first one left
     assert _batches_with_input(q) == 2
     # update mode emits one row per user per micro-batch; the final
     # state per user is the row with max n_events (monotone counters)
-    emitted = spark.table("t_profiles").toPandas()
+    emitted = spark.table(q.name).toPandas()
     batch = user_activity_profile_batch(
         load_table(spark, sf_dir, "events")
     ).toPandas()
@@ -90,22 +88,17 @@ def test_event_time_ttl_expires_idle_keys_under_skew(spark, tmp_path):
             "append"
         ).parquet(d)
 
-    from cs422pp_mapreduce_spark.streaming.events import (
-        read_event_stream,
-        run_stream_to_memory,
-    )
-
     stream = read_event_stream(spark, d, max_files_per_trigger=1)
-    q = run_stream_to_memory(
+    q = drain_to_memory(
         user_activity_profile(stream, ttl_minutes=60, event_time=True),
         "t_profiles_ettl",
-        mode="update",
+        "update",
     )
     # expiry needs the watermark carried across batches, not one drain
     assert _batches_with_input(q) == 4
     user1_counts = {
         r.n_events
-        for r in spark.table("t_profiles_ettl").where("user_id = 1").collect()
+        for r in spark.table(q.name).where("user_id = 1").collect()
     }
     # without expiry the return visit would emit n_events=3
     assert 1 in user1_counts and 2 in user1_counts

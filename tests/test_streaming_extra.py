@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from cs422pp_mapreduce_spark.operators.wordcount import wordcount_df
 from cs422pp_mapreduce_spark.sources.catalog import load_table
 from cs422pp_mapreduce_spark.streaming.events import (
+    drain_to_memory,
     read_event_stream,
-    run_stream_to_memory,
 )
 from cs422pp_mapreduce_spark.streaming.joins import enrich_stream, interval_join
 from cs422pp_mapreduce_spark.streaming.wordcount import (
@@ -66,9 +66,9 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir, event_stream_di
         F.col("event_type") == "purchase"
     )
     joined = interval_join(clicks, purchases, key="user_id", gap_minutes=30)
-    run_stream_to_memory(joined, "t_ssj", mode="append")
+    q = drain_to_memory(joined, "t_ssj", "append")
     got = {
-        (r["left_id"], r["right_id"]) for r in spark.table("t_ssj").collect()
+        (r["left_id"], r["right_id"]) for r in spark.table(q.name).collect()
     }
 
     ev = load_table(spark, sf_dir, "events")
@@ -102,9 +102,7 @@ def test_foreach_batch_sink_partitioned_parquet(spark, sf_dir, tmp_path):
     writer (write_parquet) into batch_id-partitioned output; the union
     of batches equals the input exactly once."""
     from cs422pp_mapreduce_spark.sources.sinks import write_parquet
-    from cs422pp_mapreduce_spark.streaming.events import (
-        run_stream_foreach_batch,
-    )
+    from cs422pp_mapreduce_spark.streaming.events import drain
 
     ev = load_table(spark, sf_dir, "events")
     src = str(tmp_path / "src")
@@ -123,8 +121,11 @@ def test_foreach_batch_sink_partitioned_parquet(spark, sf_dir, tmp_path):
         )
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    run_stream_foreach_batch(
-        stream, sink, checkpoint_dir=str(tmp_path / "ckpt")
+    drain(
+        stream.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", str(tmp_path / "ckpt")
+        ),
+        spark,
     )
     assert len(seen_batches) >= 2  # one per input file
     back = spark.read.parquet(f"{out}/batch_id=*")
@@ -149,8 +150,8 @@ def test_stream_static_enrichment_equals_batch(
         key="user_id",
         dim_key="c_custkey",
     ).select("event_id", "user_id", "c_name", "c_mktsegment")
-    run_stream_to_memory(enriched, "t_enrich", mode="append")
-    got = {tuple(r) for r in spark.table("t_enrich").collect()}
+    q = drain_to_memory(enriched, "t_enrich", "append")
+    got = {tuple(r) for r in spark.table(q.name).collect()}
 
     ev = load_table(spark, sf_dir, "events")
     want = {

@@ -77,8 +77,12 @@ def test_recovery_contract_query_processes_only_delta(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from cs422pp_mapreduce_spark.sources.catalog import TABLE_SCHEMAS, load_table
-    from cs422pp_mapreduce_spark.streaming.events import _tumbling_agg
+    from cs422pp_mapreduce_spark.sources.catalog import load_table
+    from cs422pp_mapreduce_spark.streaming.events import (
+        _tumbling_agg,
+        drain_to_memory,
+        read_event_stream,
+    )
 
     base = tempfile.mkdtemp(prefix="recovery_delta_")
     stage, src, ckpt = (os.path.join(base, d) for d in ("stage", "src", "ckpt"))
@@ -95,24 +99,12 @@ def test_recovery_contract_query_processes_only_delta(spark, sf_dir):
         shutil.copy(os.path.join(d, f), os.path.join(src, f"s{i}.parquet"))
 
     def run(table):
-        raw = (
-            spark.readStream.schema(TABLE_SCHEMAS["events"])
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        q = drain_to_memory(
+            _tumbling_agg(read_event_stream(spark, src)),
+            table,
+            checkpoint_dir=ckpt,
         )
-        q = (
-            _tumbling_agg(raw)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        rows_read = sum(p["numInputRows"] for p in q.recentProgress)
-        q.stop()
-        return rows_read
+        return q.name, sum(p["numInputRows"] for p in q.recentProgress)
 
     land(0)
     land(1)
@@ -121,10 +113,10 @@ def test_recovery_contract_query_processes_only_delta(spark, sf_dir):
     land(3)
     delta = ev.where(F.col("event_id") % 4 >= 2).count()
     total = ev.count()
-    rows_read = run("t_rec_phase2")
+    table, rows_read = run("t_rec_phase2")
     assert rows_read == delta, (rows_read, delta)
     # state recovered: final counts cover ALL events, not just the delta
-    final = spark.table("t_rec_phase2").agg(F.sum("n_events")).collect()[0][0]
+    final = spark.table(table).agg(F.sum("n_events")).collect()[0][0]
     assert final == total, (final, total)
 
 
