@@ -13,11 +13,15 @@ allocation is amortized.
 Streaming inputs go one step further: their slices are a pure function
 of the fixture, so ``build_once`` writes them once per (application,
 tag), and ``land_files`` copies them into a per-call source directory
-in arrival order.
+in arrival order. Per-call run dirs (a restart sequence's source,
+checkpoint and target) come from ``scratch_dir``, inside one staging
+dir, so every directory the engine stages has one home: the dirs
+``_STAGING`` records are removed at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -48,6 +52,22 @@ def session_staging_dir(spark: SparkSession, tag: str) -> str:
         return path
 
 
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A new directory for one call, inside this application's
+    ``scratch`` staging dir."""
+    return tempfile.mkdtemp(prefix=prefix, dir=session_staging_dir(spark, "scratch"))
+
+
+@atexit.register
+def remove_staging_dirs() -> None:
+    """Remove every staging dir this process recorded, and forget them."""
+    with _LOCK:
+        paths = list(_STAGING.values())
+        _STAGING.clear()
+    for path in paths:
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def tag_lock(spark: SparkSession, tag: str) -> threading.Lock:
     """One lock per (Spark application, tag), for callers that must
     serialize a build-once/reuse-later section over a shared staging
@@ -61,26 +81,42 @@ def tag_lock(spark: SparkSession, tag: str) -> threading.Lock:
         return lk
 
 
-def build_once(
-    spark: SparkSession, tag: str, slices: Callable[[], list[DataFrame]]
-) -> list[str]:
-    """Write each frame of ``slices()`` as ONE parquet file, once per
-    (Spark application, tag), and return the files in slice order.
+def write_once(
+    spark: SparkSession, tag: str, write: Callable[[str], None]
+) -> str:
+    """Run ``write(dir)`` into the staging dir of (this Spark
+    application, tag) once, and return the dir.
 
-    Later calls skip the build and return the same paths. The marker
-    check and the build run under the tag's lock: two concurrent
-    first callers must not interleave overwrite writes into the same
-    slice dirs, and the second must not read a half-written set."""
+    Later calls skip the write; one whose dir was removed writes again.
+    The marker check and the write run under the tag's lock: two
+    concurrent first callers must not interleave overwrite writes into
+    the same dir, and the second must not read a half-written one. The
+    ``_COMPLETE`` marker is written last; Spark's readers skip files
+    whose names start with ``_``."""
     base = session_staging_dir(spark, tag)
     marker = os.path.join(base, "_COMPLETE")
     with tag_lock(spark, tag):
         if not os.path.isfile(marker):
-            for i, frame in enumerate(slices(), start=1):
-                frame.coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(base, f"s{i}")
-                )
+            write(base)
             with open(marker, "w") as fh:
                 fh.write("ok")
+    return base
+
+
+def build_once(
+    spark: SparkSession, tag: str, slices: Callable[[], list[DataFrame]]
+) -> list[str]:
+    """Write each frame of ``slices()`` as ONE parquet file, once per
+    (Spark application, tag) (``write_once``), and return the files in
+    slice order."""
+
+    def write(base: str) -> None:
+        for i, frame in enumerate(slices(), start=1):
+            frame.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(base, f"s{i}")
+            )
+
+    base = write_once(spark, tag, write)
     dirs = sorted(
         (d for d in os.listdir(base) if d.startswith("s")),
         key=lambda d: int(d[1:]),

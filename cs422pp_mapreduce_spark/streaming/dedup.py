@@ -22,6 +22,7 @@ from .events import (
     drain_to_memory,
     read_event_stream,
     read_event_stream_auto,
+    sink_frame,
     stage_event_files,
 )
 
@@ -74,4 +75,4 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_event_stream(spark, src), watermark="90 days"
     ).select("event_id", "user_id", "event_type", "ts", "value")
     q = drain_to_memory(deduped, "stream_dedup", "append")
-    return spark.table(q.name)
+    return sink_frame(spark, q)

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import itertools
 import os
-import tempfile
+import shutil
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,7 +44,13 @@ from pyspark.sql.window import Window
 from ..functions.numeric import exact_sum
 from ..session import scoped_conf, stream_state_partitions
 from ..sources.catalog import TABLE_SCHEMAS, load_table, table_path
-from ..sources.staging import build_once, land_files, session_staging_dir, sf_tag
+from ..sources.staging import (
+    build_once,
+    land_files,
+    scratch_dir,
+    session_staging_dir,
+    sf_tag,
+)
 
 
 @contextmanager
@@ -116,9 +122,10 @@ def drain_to_memory(
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """``drain`` a streaming DataFrame into an in-memory sink and return
-    the stopped query; the sink is the table ``spark.table(q.name)``.
-    Each call gets its own sink name (``prefix`` plus a sequence
-    number), so repeated or concurrent runs never share a table."""
+    the stopped query; the sink is the temp view ``q.name`` until
+    ``sink_frame`` takes it. Each call gets its own sink name
+    (``prefix`` plus a sequence number), so repeated or concurrent runs
+    never share a table."""
     writer = (
         agg.writeStream.format("memory")
         .queryName(f"{prefix}_{next(_MEMSINK_SEQ)}")
@@ -127,6 +134,16 @@ def drain_to_memory(
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return drain(writer, agg.sparkSession)
+
+
+def sink_frame(spark: SparkSession, q: StreamingQuery) -> DataFrame:
+    """The memory sink of the stopped query ``q`` as a batch frame, with
+    its temp view dropped. The frame's analyzed plan holds the sink
+    itself, so its rows stay in the driver as long as the frame does,
+    not for the rest of the application."""
+    frame = spark.table(q.name)
+    spark.catalog.dropTempView(q.name)
+    return frame
 
 
 def read_event_stream_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,7 +359,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental form (per-micro-batch partials into windowed state,
     shuffle O(windows), watermark bounds state size)."""
     q = drain_to_memory(stream_sliding_plan(spark, sf_dir), "stream_sliding")
-    return spark.table(q.name)
+    return sink_frame(spark, q)
 
 
 def stream_event_tumbling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,7 +396,7 @@ def q_stream_event_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = drain_to_memory(
         stream_event_tumbling_plan(spark, sf_dir), "stream_event_tumbling"
     )
-    return spark.table(q.name)
+    return sink_frame(spark, q)
 
 
 def stream_event_session_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,7 +423,7 @@ def q_stream_event_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = drain_to_memory(
         stream_event_session_plan(spark, sf_dir), "stream_event_session"
     )
-    return spark.table(q.name)
+    return sink_frame(spark, q)
 
 
 def q_stream_event_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,33 +445,37 @@ def q_stream_event_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: the input halves are fixed slices (event_id % 4), the
     aggregation is the decimal-routed tumbling window (accumulation-
     order-independent), and complete mode re-emits converged state at
-    the final trigger. Temp source/checkpoint dirs are per-call (this
+    the final trigger. Source/checkpoint dirs are per-call (this
     query IS the restart sequence; memoizing THOSE would skip the
-    thing being verified) — but the slices themselves are a pure
-    function of the fixture and come from the session-memoized
-    staged_slice_parts, so repeat invocations pay file copies, not a
-    re-slicing job. At scale this is the operational contract that
+    thing being verified) and removed when it returns — but the slices
+    themselves are a pure function of the fixture and come from the
+    session-memoized staged_slice_parts, so repeat invocations pay
+    file copies, not a re-slicing job. At scale this is the operational contract that
     matters most: a 1000-executor streaming job WILL be restarted —
     deploys, spot loss — and correctness across that boundary is what
     the checkpoint buys."""
-    base = tempfile.mkdtemp(prefix="stream_recovery_")
+    base = scratch_dir(spark, "stream_recovery_")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(src)
 
     parts = staged_slice_parts(spark, sf_dir, 4, by="hash")
 
-    def run(prefix: str) -> StreamingQuery:
+    def run(prefix: str) -> DataFrame:
         agg = _tumbling_agg(read_event_stream(spark, src))
-        return drain_to_memory(agg, prefix, checkpoint_dir=ckpt)
+        return sink_frame(spark, drain_to_memory(agg, prefix, checkpoint_dir=ckpt))
 
-    # phase 1: half the input, run to completion, query stops
-    land_files(src, parts[:2])
-    run("stream_recovery_phase1")
-    # the rest lands while NO query is running
-    land_files(src, parts[2:])
-    # phase 2: a NEW query on the same checkpoint resumes exactly
-    return spark.table(run("stream_event_recovery").name)
+    try:
+        # phase 1: half the input, run to completion, query stops
+        land_files(src, parts[:2])
+        run("stream_recovery_phase1")
+        # the rest lands while NO query is running
+        land_files(src, parts[2:])
+        # phase 2: a NEW query on the same checkpoint resumes exactly
+        return run("stream_event_recovery")
+    finally:
+        # the result lives in the memory sink; no file of the run is read again
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def table_versions(tdir: str) -> list[int]:
@@ -541,7 +562,7 @@ def q_stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     could slice arbitrarily, this one cannot) are the session-memoized
     staged_slice_parts, so repeat invocations pay file copies, not a
     re-slicing job."""
-    base = tempfile.mkdtemp(prefix="stream_upsert_")
+    base = scratch_dir(spark, "stream_upsert_")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     tdir = os.path.join(base, "target")
@@ -761,5 +782,5 @@ def q_stream_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = spark.read.schema(TABLE_SCHEMAS["events"]).parquet(src)
     return _late_audit_report(
         staged.select("event_id", "ts", "event_type", "value"),
-        spark.table(q.name),
+        sink_frame(spark, q),
     )

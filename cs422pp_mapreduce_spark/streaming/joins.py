@@ -28,6 +28,7 @@ from .events import (
     drain_to_memory,
     read_event_stream,
     read_event_stream_auto,
+    sink_frame,
     stage_event_files,
 )
 
@@ -112,7 +113,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_event_files(spark, sf_dir, n_files=2)
     joined = _view_purchase_join(lambda: read_event_stream(spark, src))
     q = drain_to_memory(joined, "stream_interval_join", "append")
-    return spark.table(q.name)
+    return sink_frame(spark, q)
 
 
 def enrich_stream(
@@ -175,4 +176,4 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = stage_event_files(spark, sf_dir, n_files=2)
     out = _type_count_enrich(spark, sf_dir, read_event_stream(spark, src))
     q = drain_to_memory(out, "stream_enrich", "append")
-    return spark.table(q.name)
+    return sink_frame(spark, q)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import TABLE_SCHEMAS, load_table
-from .events import drain_to_memory, stage_document_files
+from .events import drain_to_memory, sink_frame, stage_document_files
 
 
 def _stream_feats(sdocs: DataFrame) -> DataFrame:
@@ -136,7 +136,7 @@ def q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gated = stream_quality_gate_frame(sdocs, m["w"], bias, thr)
     q = drain_to_memory(gated, "stream_quality_gate", "update")
-    return spark.table(q.name)
+    return sink_frame(spark, q)
 
 
 def stream_quality_gate_plan(

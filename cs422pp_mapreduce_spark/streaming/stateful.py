@@ -40,6 +40,7 @@ from .events import (
     drain_to_memory,
     read_event_stream,
     read_event_stream_auto,
+    sink_frame,
     stage_event_files,
 )
 
@@ -220,7 +221,7 @@ def q_stream_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = drain_to_memory(user_activity_profile(ev), "stream_profile", "update")
     return (
-        latest_per_key(spark.table(q.name), "user_id", "n_events")
+        latest_per_key(sink_frame(spark, q), "user_id", "n_events")
         .select(
             "user_id",
             "n_events",
@@ -356,7 +357,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = drain_to_memory(
         user_ewma_stream(_staged_stream(spark, sf_dir)), "stream_ewma", "update"
     )
-    return latest_per_key(spark.table(q.name), "user_id", "n_events").select(
+    return latest_per_key(sink_frame(spark, q), "user_id", "n_events").select(
         "user_id", "n_events", "ewma"
     )
 
@@ -489,7 +490,7 @@ def q_stream_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _twap_stream_projection(_staged_stream(spark, sf_dir))
     q = drain_to_memory(user_twap_stream(ev), "stream_twap", "update")
     return _twap_final_projection(
-        latest_per_key(spark.table(q.name), "user_id", "n_events")
+        latest_per_key(sink_frame(spark, q), "user_id", "n_events")
     )
 
 
@@ -651,5 +652,5 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = drain_to_memory(type_cusum_stream(joined), "stream_cusum", "update")
     return _cusum_final_projection(
-        latest_per_key(spark.table(q.name), "event_type", "n_seen")
+        latest_per_key(sink_frame(spark, q), "event_type", "n_seen")
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.wordcount import wordcount_df
 from ..sources.catalog import TABLE_SCHEMAS
-from .events import drain_to_memory, stage_document_files
+from .events import drain_to_memory, sink_frame, stage_document_files
 
 
 def read_text_stream(spark: SparkSession, path: str,
@@ -68,4 +68,4 @@ def q_stream_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage_document_files(spark, sf_dir, n_files=2))
     )
     q = drain_to_memory(wordcount_df(raw, "text"), "stream_wordcount")
-    return spark.table(q.name).orderBy("word")
+    return sink_frame(spark, q).orderBy("word")

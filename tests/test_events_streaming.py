@@ -174,6 +174,23 @@ def test_q_stream_event_tumbling_equals_batch(spark, sf_dir):
     assert len(got) > 0
 
 
+def test_q_stream_memory_sinks_leave_no_views(spark, sf_dir):
+    """A contract query drops its memory-sink view once its frame holds
+    the sink: repeated calls leave no view behind, and every frame
+    still collects the sink's rows."""
+    from cs422pp_mapreduce_spark.streaming.events import (
+        q_stream_event_tumbling,
+    )
+
+    cols = ["win_start", "event_type", "n_events", "sum_value"]
+    frames = [q_stream_event_tumbling(spark, sf_dir) for _ in range(3)]
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("stream_event_tumbling_")]
+    rows = [_key(f.collect(), cols) for f in frames]
+    assert rows[0] == rows[1] == rows[2]
+    assert len(rows[0]) > 0
+
+
 def test_q_stream_event_session_equals_batch_native(spark, sf_dir):
     """Complete-mode session-window streaming equals the batch
     session_window aggregation exactly (merging session state

@@ -4,11 +4,13 @@ queries' staged inputs (sources/staging.py)."""
 from __future__ import annotations
 
 import os
+import tempfile
 import threading
 import time
 
 import pyarrow.parquet as pq
 
+from cs422pp_mapreduce_spark.sources import staging
 from cs422pp_mapreduce_spark.sources.staging import build_once, sf_tag
 
 
@@ -87,3 +89,35 @@ def test_build_once_builds_once_under_concurrency(spark):
     # a later call reuses the files without building
     assert build_once(spark, "build_once_race", slices) == got[0]
     assert len(calls) == 1
+
+
+def test_per_call_dirs_live_in_staging_and_go_at_cleanup(
+    spark, sf_dir, monkeypatch
+):
+    """The per-call run dirs of the restart contracts and the
+    date-partitioned events copy live inside this process's staging
+    dirs, which the exit-time cleanup removes; none is left in the
+    temp dir. The registry is swapped for an empty one, so the cleanup
+    here removes only what these calls staged."""
+    from cs422pp_mapreduce_spark.operators.events import q_events_partitioned
+    from cs422pp_mapreduce_spark.streaming.events import (
+        q_stream_event_recovery,
+        q_stream_foreach_upsert,
+    )
+
+    monkeypatch.setattr(staging, "_STAGING", {})
+    prefixes = ("stream_recovery_", "stream_upsert_", "events_by_date_")
+
+    def left() -> set[str]:
+        tmp = tempfile.gettempdir()
+        return {n for n in os.listdir(tmp) if n.startswith(prefixes)}
+
+    before = left()
+    assert q_stream_event_recovery(spark, sf_dir).count() > 0
+    assert q_stream_foreach_upsert(spark, sf_dir).count() > 0
+    assert q_events_partitioned(spark, sf_dir).count() > 0
+    staged = list(staging._STAGING.values())
+    assert staged and all(os.path.isdir(p) for p in staged)
+    staging.remove_staging_dirs()
+    assert not [p for p in staged if os.path.exists(p)]
+    assert left() - before == set()
