@@ -21,7 +21,7 @@ from ..functions.text import (
     quality_score_cols,
     token_count_bpe,
 )
-from ..session import default_parallelism
+from ..session import default_parallelism, scratch_persist
 from ..sources.catalog import load_table
 
 MIN_QUALITY = 0.5
@@ -200,17 +200,21 @@ def q_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     q = quality_score_cols("text")
-    base = docs.select(
-        "doc_id",
-        "source",
-        fingerprint_md5("text").alias("fp"),
-        q["n_tokens"].alias("n_tokens"),
-        q["quality_score"].alias("quality_score"),
-    ).persist()  # 4 consumers (dup_fps, per_source, exact_dup, span);
-    # the cache populates on first materialization WITHIN the returned
-    # plan's execution — no unpersist here, which would unmark it
-    # before any action ran (the caller/session owns cache lifetime,
-    # as with q_dedup_minhash)
+    # 4 consumers (dup_fps, per_source, exact_dup, span); the cache
+    # populates on first materialization WITHIN the returned plan's
+    # execution — no unpersist here, which would unmark it before any
+    # action ran (session.evict_scratch releases it, as with
+    # q_dedup_minhash)
+    base = scratch_persist(
+        docs.select(
+            "doc_id",
+            "source",
+            fingerprint_md5("text").alias("fp"),
+            q["n_tokens"].alias("n_tokens"),
+            q["quality_score"].alias("quality_score"),
+        ),
+        "MEMORY_AND_DISK_DESER",
+    )
     # fingerprints held by >1 doc
     dup_fps = (
         base.groupBy("fp")

@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import (
     comoment,
@@ -36,6 +35,7 @@ from ..functions.numeric import (
     fixed_long,
     long_dec,
 )
+from ..session import scratch_persist
 from ..sources.catalog import load_table
 from ..sources.staging import sf_tag, write_once
 from .relational import HLL_BOUND_REL
@@ -174,9 +174,9 @@ def q_rolling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter over the O(types × days) SKETCH table (fan-out ≤ 7, never
     touching raw events again); hll_union_agg merges per anchor day.
 
-    HASH-VERIFIED bound contract since r09 (VERDICT r08 ask #2):
-    sketch estimates are engine-specific (the OLD approx_users_7d
-    shape was rows-only), so the driver row ships the EXACT trailing
+    HASH-VERIFIED bound contract: sketch estimates are engine-specific
+    (the OLD approx_users_7d shape was rows-only), so the driver row
+    ships the EXACT trailing
     distinct next to ``within_bound`` = |merged-sketch estimate −
     exact| ≤ 5% of exact (3σ at lgConfigK=12 ≈ 4.9%; the per-window
     sets here are small enough that the sketch is usually in exact
@@ -320,13 +320,12 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     users × hours-span; at 100 TB the span is what you'd partition the
     output by anyway."""
     ev = load_table(spark, sf_dir, "events")
-    hourly = (
+    hourly = scratch_persist(
         ev.groupBy("user_id", F.date_trunc("hour", "ts").alias("hr"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             exact_sum("value", 2, "sum_value"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     grid = (
         hourly.groupBy("user_id")
@@ -458,7 +457,7 @@ def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-pruning contract query (VERDICT r04 ask #8): scan the
+    """Partition-pruning contract query: scan the
     date-partitioned events copy with a static one-week date predicate
     and aggregate per (event_date, event_type).
 
@@ -573,9 +572,9 @@ def max_concurrent_per_day(ev: DataFrame, interval_min: int) -> DataFrame:
         .orderBy("t", "delta", "event_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = ranged.withColumn(
+    local = scratch_persist(ranged.withColumn(
         "local_run", F.sum("delta").over(local_w)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     offsets = (
         local.groupBy("pid")
         .agg(F.sum("delta").alias("part_sum"))

@@ -26,10 +26,9 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import quantized
-from ..session import scoped_conf
+from ..session import scoped_conf, scratch_persist
 from ..sources.catalog import load_table
 
 DAMPING = 0.85
@@ -133,9 +132,9 @@ def pagerank(
     partition sizing on top). Values are identical for any interval
     and either eagerness — checkpointing never changes arithmetic —
     so the NumPy replica test stays exact."""
-    edges_sym = edges_sym.persist(StorageLevel.MEMORY_AND_DISK)
+    edges_sym = scratch_persist(edges_sym)
     deg = edges_sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    out_edges = edges_sym.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    out_edges = scratch_persist(edges_sym.join(deg, "src"))
     nodes = edges_sym.select(F.col("src").alias("node")).distinct()
     n_nodes = nodes.count()  # bounded driver action: one scalar
     ranks = nodes.select(
@@ -253,9 +252,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/mapreduce.cc:200) has no multi-round join surface;
     this extends the engine's graph family (pagerank, connected
     components) with the canonical non-iterative graph aggregate."""
-    edges = copurchase_edges(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    edges = scratch_persist(copurchase_edges(spark, sf_dir))
     n_nodes, n_edges, n_tri = _edge_iterator_counts(
         edges, big_graph=_is_big_graph(sf_dir)
     )
@@ -275,8 +272,8 @@ def _is_big_graph(sf_dir: str, sample_denom: int = 1) -> bool:
     optimizer would, from table stats. Lineitem rows ∝ co-purchase
     edges (×2 measured at every sf).
 
-    ``sample_denom`` scales the threshold for sparsified callers
-    (ADVICE r09): the DOULION estimator keeps only ~1/denom of the
+    ``sample_denom`` scales the threshold for sparsified callers:
+    the DOULION estimator keeps only ~1/denom of the
     edges (TRI_SAMPLE_DENOM = 4 ⇒ a 4×-sparser edge set; the 1/p³ =
     64 factor is the triangle-count rescale, not the edge ratio), so
     its adjacency table crosses the broadcast limit denom× later —
@@ -285,8 +282,8 @@ def _is_big_graph(sf_dir: str, sample_denom: int = 1) -> bool:
 
     A failed probe falls back to the default planner path, LOUDLY
     (stderr note from _lineitem_row_count): silence here would
-    re-open the 12×-at-3×-data sort-spill cliff the sf3 tier caught
-    (ADVICE r09 — no bare except)."""
+    re-open the 12×-at-3×-data sort-spill cliff the sf3 tier caught,
+    so no bare except."""
     rows = _lineitem_row_count(sf_dir)
     if rows is None:
         return False
@@ -322,14 +319,14 @@ def _edge_iterator_counts(edges: DataFrame, big_graph: bool = False):
             ),
         )
     )
-    oriented = keyed.select(
+    oriented = scratch_persist(keyed.select(
         F.when(F.col("key_u") < F.col("key_v"), F.col("u"))
         .otherwise(F.col("v"))
         .alias("src"),
         F.when(F.col("key_u") < F.col("key_v"), F.col("v"))
         .otherwise(F.col("u"))
         .alias("dst"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     # EDGE-ITERATOR close (replaces the r05 wedge join): each triangle
     # {a→b, a→c, b→c} is counted exactly once at its (a, b) edge as
     # |N⁺(a) ∩ N⁺(b)|. Degree orientation bounds every out-adjacency
@@ -423,9 +420,7 @@ def q_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         16,
         10,
     ).cast("long")
-    sampled = edges.where(h % TRI_SAMPLE_DENOM == 0).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sampled = scratch_persist(edges.where(h % TRI_SAMPLE_DENOM == 0))
     n_nodes, n_edges, n_tri = _edge_iterator_counts(
         sampled, big_graph=_is_big_graph(sf_dir, sample_denom=TRI_SAMPLE_DENOM)
     )
@@ -475,7 +470,7 @@ def bfs_hops(
     empty checkpointed frames (near-zero stages inside the same job),
     and the result is identical either way. Frontier and visited
     frames are node-id wide, never edge-sized."""
-    edges_sym = edges_sym.persist(StorageLevel.MEMORY_AND_DISK)
+    edges_sym = scratch_persist(edges_sym)
     frontier = sources.select("node").distinct().withColumn(
         "hop", F.lit(0).cast("long")
     ).localCheckpoint(eager=False)
@@ -561,11 +556,11 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     than a fixpoint. localCheckpoint keeps lineage O(1) per round as
     in pagerank."""
     ew = weighted_edges(spark, sf_dir)
-    sym = ew.select(
+    sym = scratch_persist(ew.select(
         F.col("cust").alias("src"), F.col("supp").alias("dst"), "w"
     ).unionAll(
         ew.select(F.col("supp").alias("src"), F.col("cust").alias("dst"), "w")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
 
     source = ew.agg(F.min("cust").alias("node")).select(
         "node", F.lit(0).cast("long").alias("dist")

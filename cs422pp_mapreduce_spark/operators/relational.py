@@ -39,7 +39,7 @@ from ..functions.numeric import (
     long_dec,
     rate_long,
 )
-from ..session import default_parallelism
+from ..session import default_parallelism, scratch_persist
 from ..sources.catalog import load_table
 
 
@@ -463,8 +463,8 @@ def q_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must see the SAME range boundaries — re-executing the range
     # exchange re-samples them (RangePartitioner seeds per RDD
     # instance), which would misalign offsets against local ranks
-    local = ranged.withColumn("local_rn", F.row_number().over(local_w)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    local = scratch_persist(
+        ranged.withColumn("local_rn", F.row_number().over(local_w))
     )
     offsets = (
         local.groupBy("pid")
@@ -583,9 +583,9 @@ def q_approx_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (approx_count_distinct) and GK quantile summaries
     (percentile_approx).
 
-    HASH-VERIFIED bound contract since r09 (VERDICT r08 ask #2, the
-    q_hll_bound pattern): sketch values are engine-specific — which is
-    why the OLD (approx_parts, approx_median_price) shape was
+    HASH-VERIFIED bound contract (the q_hll_bound pattern): sketch
+    values are engine-specific — which is why the OLD (approx_parts,
+    approx_median_price) shape was
     rows-only — so the driver row ships what SQL replays exactly:
     per l_returnflag, n_rows, the EXACT distinct part count, and two
     contract booleans. ``distinct_within_bound`` = |HLL++ estimate −
@@ -970,9 +970,9 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     answers any rollup (per-type here, plus the __all__ union row) by
     merging kilobyte sketches instead of rescanning raw data.
 
-    HASH-VERIFIED bound contract since r09 (VERDICT r08 ask #2 — the
-    q_hll_bound pattern): the sketch estimates stay in-engine (sketch
-    internals are engine-specific, which is why the OLD shape was
+    HASH-VERIFIED bound contract (the q_hll_bound pattern): the sketch
+    estimates stay in-engine (sketch internals are engine-specific,
+    which is why the OLD shape was
     rows-only), and the driver row ships what SQL can replay —
     n_rows, within_bound = |estimate − exact| ≤ 5% of exact (3σ for
     lgConfigK=12 ≈ 4.9%), and merge_exact. Where q_hll_bound proves
@@ -1131,7 +1131,7 @@ def q_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-exchange machinery of quality_deciles — per-shard O(log n)
     sketch state replaces both).
 
-    HASH-VERIFIED bound contract since r09 (VERDICT r08 ask #2): KLL
+    HASH-VERIFIED bound contract: KLL
     compaction is RANDOMIZED (run-specific values), which is why the
     OLD quantile-value shape was rows-only. The driver row now ships,
     per order priority AND for the kll_merge_agg ``__all__`` row
@@ -1257,9 +1257,9 @@ def skyline_2d(points: DataFrame, x: str, y: str) -> DataFrame:
     )
     # persist BEFORE branching: the offsets branch and the final join
     # must see the same sampled range boundaries (q_global_rank rule).
-    local = ranged.withColumn(
+    local = scratch_persist(ranged.withColumn(
         "lmin", F.min("ymin").over(local_w)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     part_mins = (
         local.groupBy("pid")
         .agg(F.min("ymin").alias("pmin"))
@@ -1674,9 +1674,9 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies the BLOOM ITSELF (every bit position and every probe),
     not just the final join.
 
-    Bounded collect: the bitmap is FOLDED JVM-SIDE (VERDICT r09 ask
-    #6) — groupBy(pos >> 6) + bit_or word aggregate, with map-side
-    partial merge — so the driver collects at most M/64 = 16384
+    Bounded collect: the bitmap is FOLDED JVM-SIDE — groupBy(pos >> 6) +
+    bit_or word aggregate, with map-side partial merge — so the driver
+    collects at most M/64 = 16384
     (word, bits) rows (~256 KiB) instead of up to M = 2^20 distinct
     positions. Driver-resident BY DESIGN, like the IVF centroids / PQ
     codebooks: a bloom filter IS bounded index metadata.

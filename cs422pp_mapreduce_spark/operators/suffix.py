@@ -1,4 +1,4 @@
-"""Distributed suffix-array substring dedup (VERDICT r10 ask #5).
+"""Distributed suffix-array substring dedup.
 
 The full Lee et al. 2022 path ("Deduplicating Training Data Makes
 Language Models Better"): find each position's LONGEST repeated
@@ -76,8 +76,8 @@ SUFFIX_CAP = 512
 # cost, while at 100 TB the same formula yields the thousands of
 # right-sized partitions the sort actually needs. Floor 1, no cap.
 RANK_PART_ROWS = 8_000_000
-# Vocab-broadcast guard (ADVICE r13 #3): below this bound the distinct
-# vocabulary is broadcast unconditionally (vocab ≤ positions, and a
+# Vocab-broadcast guard: below this bound the distinct vocabulary is
+# broadcast unconditionally (vocab ≤ positions, and a
 # ≤32M-row (tok, r) relation is well inside the 8 GB broadcast cap);
 # above it, the real vocabulary is counted first (one tiny bounded job
 # relative to a corpus this size) and the hint dropped if it exceeds
@@ -89,12 +89,36 @@ def _rank_partitions(n_rows: int) -> int:
     return max(1, (int(n_rows) + RANK_PART_ROWS - 1) // RANK_PART_ROWS)
 
 
+def _level_scratch():
+    """``(hold, release)`` for frames a checkpointed level needs only
+    until it materializes: ``hold`` persists a frame, ``release``
+    unpersists every frame held since the last release. Released per
+    level, because 9 resident n-row frames otherwise accumulate PER RUN
+    under the 8g local heap (the sf3 tier's superlinear signature)."""
+    held: list = []
+
+    def hold(frame: DataFrame) -> DataFrame:
+        frame = frame.persist(PySparkStorageLevel.MEMORY_AND_DISK)
+        held.append(frame)
+        return frame
+
+    def release() -> None:
+        for frame in held:
+            try:
+                frame.unpersist()
+            except Exception:  # noqa: BLE001
+                pass
+        held.clear()
+
+    return hold, release
+
+
 def _global_rank(
     df: DataFrame,
     cols: list[str],
     out: str,
     dense: bool,
-    locals_out: list | None = None,
+    persist=scratch_persist,
     n_parts: int | None = None,
 ) -> DataFrame:
     """Global (dense_)rank over ``cols`` without the single-partition
@@ -102,8 +126,9 @@ def _global_rank(
     broadcast per-partition offsets (the q_global_rank kernel,
     relational.py:437 — dense variant offsets by distinct-key counts;
     equal keys land in one range partition, so local dense ranks are
-    globally consistent). Persisted before branching so the offsets
-    and the final join see the SAME sampled range boundaries.
+    globally consistent). Persisted (by ``persist``) before branching
+    so the offsets and the final join see the SAME sampled range
+    boundaries.
     ``n_parts`` sizes the range exchange from the data (callers derive
     it via ``_rank_partitions``); default = one per core."""
     ranged = df.repartitionByRange(
@@ -111,18 +136,7 @@ def _global_rank(
     ).withColumn("pid", F.spark_partition_id())
     w = Window.partitionBy("pid").orderBy(*cols)
     rank_fn = F.dense_rank() if dense else F.row_number()
-    local = ranged.withColumn("_lr", rank_fn.over(w))
-    if locals_out is not None:
-        # checkpointing caller: it releases this persist as soon as
-        # the level materializes (9 resident n-row frames otherwise
-        # accumulate PER RUN under the 8g local heap — the sf3 tier's
-        # superlinear signature)
-        from pyspark.storagelevel import StorageLevel
-
-        local = local.persist(StorageLevel.MEMORY_AND_DISK)
-        locals_out.append(local)
-    else:
-        local = scratch_persist(local)
+    local = persist(ranged.withColumn("_lr", rank_fn.over(w)))
     per_part = (
         F.countDistinct(*cols) if dense else F.count(F.lit(1))
     ).alias("n")
@@ -206,6 +220,9 @@ def suffix_rank_tables(
       of its global rank, so the range-exchange's boundary-sampling
       pass does not recompute the join (released with the level's
       other scratch frames)."""
+    hold, release = _level_scratch()
+    persist = hold if checkpoint else scratch_persist
+
     def _ckpt(df: DataFrame) -> DataFrame:
         # checkpoint=False is the ANALYSIS-TWIN mode (plans/analysis):
         # fully lazy, shallow because the twin runs a single level
@@ -214,26 +231,18 @@ def suffix_rank_tables(
         out = df.localCheckpoint(
             eager=True, storageLevel=PySparkStorageLevel.DISK_ONLY
         )
-        for fr in _locals:
-            try:
-                fr.unpersist()
-            except Exception:  # noqa: BLE001
-                pass
-        _locals.clear()
+        release()
         return out
 
-    _locals: list = []
-
     base = n_positions + 2
-    lo = _locals if checkpoint else None
     n_parts = _rank_partitions(n_positions)
     vocab = pos.select("tok").distinct()
     vocab_rank = _global_rank(
-        vocab, ["tok"], "r", dense=True, locals_out=lo,
+        vocab, ["tok"], "r", dense=True, persist=persist,
         n_parts=min(n_parts, default_parallelism()),
     ).select("tok", "r")
-    # Broadcast guard (ADVICE r13 #3): |vocab| ≤ n_positions, so small
-    # corpora broadcast unconditionally; a corpus big enough to carry a
+    # Broadcast guard: |vocab| ≤ n_positions, so small corpora
+    # broadcast unconditionally; a corpus big enough to carry a
     # driver-threatening vocabulary pays one bounded count job to
     # decide, and falls back to a shuffle join (same values — the
     # dense-rank class ids don't depend on the join strategy).
@@ -281,19 +290,15 @@ def suffix_rank_tables(
             # (checkpointed) even level below — shallow plan, same
             # storage-tier residency, one less sequential job.
             ranks[k] = scratch_persist(
-                lvl,
-                PySparkStorageLevel.DISK_ONLY if checkpoint else None,
+                lvl, "DISK_ONLY" if checkpoint else "MEMORY_AND_DISK"
             )
         else:
             if checkpoint:
                 # released by _ckpt below; saves the range-exchange
                 # sampler recomputing the pairing join
-                paired = paired.persist(
-                    PySparkStorageLevel.MEMORY_AND_DISK
-                )
-                _locals.append(paired)
+                paired = hold(paired)
             lvl = _global_rank(
-                paired, ["r1", "r2"], "r", dense=True, locals_out=lo,
+                paired, ["r1", "r2"], "r", dense=True, persist=persist,
                 n_parts=n_parts,
             ).select("doc_id", "pos", "r")
             ranks[k] = _ckpt(lvl)
@@ -396,24 +401,20 @@ def suffix_report(
     with build_conf:
         ranks = suffix_rank_tables(pos, levels, n_positions, checkpoint)
 
-        sa_locals: list = []
+        hold, release = _level_scratch()
         sa = _global_rank(
             ranks[levels],
             ["r", "doc_id", "pos"],
             "sa",
             dense=False,
-            locals_out=sa_locals if checkpoint else None,
+            persist=hold if checkpoint else scratch_persist,
             n_parts=_rank_partitions(n_positions),
         ).select("doc_id", "pos", "sa")
         if checkpoint:
             sa = sa.localCheckpoint(
                 eager=True, storageLevel=PySparkStorageLevel.DISK_ONLY
             )
-            for fr in sa_locals:
-                try:
-                    fr.unpersist()
-                except Exception:  # noqa: BLE001
-                    pass
+            release()
         else:
             sa = scratch_persist(sa)
     nxt = sa.select(  # noqa: E306 — lazy from here except the pairs cut

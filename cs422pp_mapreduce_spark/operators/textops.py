@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import exact_int, fixed_long, long_dec
 from ..functions.text import (
@@ -174,10 +173,9 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(nonempty_tokens("text")).alias("token")
     )
-    tf = (
+    tf = scratch_persist(
         toks.groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.groupBy().agg(F.count(F.lit(1)).alias("n_docs"))
@@ -263,9 +261,9 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     local_w = Window.partitionBy("pid").orderBy("q", "doc_id")
     # persisted BEFORE branching (q_global_rank note): offsets and the
     # final join must see the same sampled range boundaries
-    local = ranged.withColumn(
+    local = scratch_persist(ranged.withColumn(
         "local_rn", F.row_number().over(local_w)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     counts = local.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
     offsets = counts.withColumn(
         "offset",
@@ -457,10 +455,10 @@ def pack_sequences(chunks: DataFrame) -> DataFrame:
     )
     # persisted BEFORE branching: the offsets branch and the final join
     # must see the SAME sampled range boundaries (q_global_rank note).
-    local = ranged.withColumn(
+    local = scratch_persist(ranged.withColumn(
         "local_start",
         F.coalesce(F.sum("n_chunk_tokens").over(local_w), F.lit(0)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     offsets = (
         local.groupBy("pid")
         .agg(F.sum("n_chunk_tokens").alias("toks"))
@@ -534,9 +532,9 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local = ranged.withColumn(
+    local = scratch_persist(ranged.withColumn(
         "local_before", F.coalesce(F.sum("w").over(local_w), F.lit(0))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     offsets = (
         local.groupBy("pid")
         .agg(F.sum("w").alias("toks"))
@@ -808,12 +806,11 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc sum, so the result is partition-order independent and
     bit-identical to the DuckDB oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    tf = (
+    tf = scratch_persist(
         docs.select("doc_id", nonempty_tokens("text").alias("toks"))
         .select("doc_id", F.explode("toks").alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     freq = tf.groupBy("token").agg(F.sum("tf").alias("cnt"))
     tot = freq.agg(F.sum("cnt").alias("total"))
@@ -871,22 +868,21 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRANSITION and decimal-routed for the per-doc sum (the
     unigram_logprob convention), partition-order independent."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
+    toks = scratch_persist(docs.select(
         "doc_id", nonempty_tokens("text").alias("toks")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     # ^ read by the transition matrix AND the unigram backoff counts.
     bg = F.zip_with(
         F.slice("toks", 1, F.size("toks") - 1),
         F.slice("toks", 2, F.size("toks") - 1),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
-    tf = (
+    tf = scratch_persist(
         toks.where(F.size("toks") >= 2)
         .select("doc_id", F.explode(bg).alias("b"))
         .select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     # ^ the model tables below are aggregates of this matrix; persisting
     # it keeps the tokenize/explode pass single-execution.
@@ -933,7 +929,7 @@ KN_DISCOUNT = 0.75
 
 def q_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser–Ney TRIGRAM LM quality proxy — the next
-    KenLM rung above q_bigram_logprob (VERDICT r11 ask #5): real
+    KenLM rung above q_bigram_logprob: real
     curation pipelines filter on ≥trigram perplexity; the KN
     continuation counts are what make low-order backoff estimate "how
     many contexts does this word complete" instead of raw frequency
@@ -1176,11 +1172,11 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "long"
         )
 
-    base = toks.select(
+    base = scratch_persist(toks.select(
         "doc_id",
         F.size("toks").cast("long").alias("dl"),
         *[tf_of(t).alias(f"tf_{t}") for t in BM25_TERMS],
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -1351,10 +1347,9 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rollup, per-source totals) — persist so the tokenize+count pass
     # runs once, the same materialize-once move as dedup_ngram's
     # shingle table.
-    src_tok = (
+    src_tok = scratch_persist(
         toks.groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("cnt_s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     corpus_tok = src_tok.groupBy("token").agg(F.sum("cnt_s").alias("cnt_c"))
     src_tot = src_tok.groupBy("source").agg(F.sum("cnt_s").alias("n_s"))
@@ -1416,10 +1411,9 @@ def cms_topgram_frames(
     from .dedup import _doc_shingles
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = (
+    grams = scratch_persist(
         _doc_shingles(docs)
         .select(F.explode("shingles").alias("gram"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     cells = (
         grams.select(
@@ -1547,11 +1541,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
-    ss = (
+    ss = scratch_persist(
         shingle_frame(docs, 3, "source")
         .select("source", F.explode("shingles").alias("shingle"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )  # both sides of the intersection join + the size aggregate
     sizes = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = ss.alias("a")
@@ -1609,7 +1602,7 @@ def q_seq_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Column has no floordiv; counts are non-negative so double-div +
     # long cast IS floor division. Tokenization is token_count_ws
     # (\s+ runs collapse) to match the oracle's regexp_split_to_array
-    # convention on any whitespace, not just single spaces (ADVICE r07).
+    # convention on any whitespace, not just single spaces.
     lens = docs.select(token_count_ws("text").alias("n_tokens")).select(
         (F.col("n_tokens") / 16).cast("long").alias("bucket"), "n_tokens"
     )
@@ -1699,12 +1692,12 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     key = F.md5(F.col("doc_id").cast("string"))
     w = Window.partitionBy("lang").orderBy(key, "doc_id")
-    ranked = docs.select(
+    ranked = scratch_persist(docs.select(
         "doc_id",
         "lang",
         F.row_number().over(w).alias("r"),
         F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("n"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     offsets = F.explode(
         F.array(*[F.lit(i) for i in range(1, NEG_K + 1)])
     ).alias("i")

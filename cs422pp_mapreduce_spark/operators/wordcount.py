@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table, read_text_lines
+from ..sources.catalog import load_table
 
 
 def tokens(col: Column, sep: str = " ") -> Column:
@@ -55,12 +55,6 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's ordered sink contract)."""
     docs = load_table(spark, sf_dir, "documents")
     return wordcount_df(docs, "text").orderBy("word")
-
-
-def wordcount_text_file(spark: SparkSession, path: str) -> DataFrame:
-    """Word count over a plain text file — the reference's exact input
-    format (FIXTURES.md §A1)."""
-    return wordcount_df(read_text_lines(spark, path)).orderBy("word")
 
 
 def wordcount_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,8 +24,11 @@ import threading
 import weakref
 from contextlib import contextmanager
 
+from py4j.java_gateway import JavaObject
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.storagelevel import StorageLevel
 
 # Runtime-settable session confs applied even when the caller (e.g. the
 # verification driver) hands us an already-built SparkSession.
@@ -165,10 +168,10 @@ def apply_runtime_confs(spark: SparkSession, force: bool = False) -> SparkSessio
     ``scoped_conf``, which restores them, so first-application
     semantics are identical.
 
-    CONTRACT CHANGE vs pre-r13 (ADVICE r13 #4): the memo means an
-    external caller that mutates a RUNTIME_CONFS key mid-session is no
-    longer self-healed on the next query build. Callers that need the
-    old always-reapply behavior pass ``force=True``."""
+    Because of the memo, an external caller that mutates a
+    RUNTIME_CONFS key mid-session is not self-healed on the next query
+    build; a caller that needs the confs re-applied passes
+    ``force=True``."""
     if not force and spark in _CONFS_APPLIED:
         return spark
     for k, v in RUNTIME_CONFS.items():
@@ -405,43 +408,107 @@ def driver_paced_build_conf(spark: SparkSession):
         yield
 
 
-# --- scratch-persist registry (ADVICE r10) ----------------------------------
-# Queries that persist branch-shared intermediates (containment's
-# inverted index, the recall report's scored pass) return a LAZY
-# DataFrame, so there is no natural in-query point to unpersist. The
-# benchmark's per-query isolation (perfbench/harness.py) already
-# calls clearCache(); this registry gives NON-harness callers
-# the same explicit hook the index memos have (evict_index_caches /
-# evict_cluster_cache): long-lived sessions call evict_scratch(spark)
-# between queries, otherwise MEMORY_AND_DISK blocks accumulate until
-# spark.catalog.clearCache().
-# The bucket stores the py4j Dataset handles (df._jdf), NOT the Python
-# DataFrame wrappers: a wrapper references .sparkSession, so a bucket
-# of DataFrames would keep the session strongly reachable from this
-# module-level dict and the weakref.finalize below could never fire
-# (ADVICE r11). The JVM handle is all unpersist() needs, and it does
-# not reference the Python session, so a dropped session becomes
-# weakly reachable and the finalizer prunes its registry entry.
-_SCRATCH: dict[int, list] = {}
+# --- per-session engine state ----------------------------------------------
+# Frames that outlive the function that built them (a query's shared
+# intermediate, an index build's persisted table) and the build-once
+# memos over them (the IVF and PQ indexes, cluster labels) are held
+# here, per session, and released by one call: evict_scratch. Queries
+# that persist branch-shared intermediates return a LAZY DataFrame, so
+# there is no in-query point to unpersist them; a long-lived session
+# calls evict_scratch between queries (the benchmark's isolate() does),
+# or MEMORY_AND_DISK blocks accumulate until clearCache().
+#
+# The registry holds JVM handles (``df._jdf``) and plain data, never a
+# Python DataFrame: a DataFrame references its session, so a weakly
+# keyed entry holding one would keep its own key alive and the session
+# could never be collected. A collected session's finalizer makes no
+# py4j call (it may run inside any thread's garbage collection); it
+# queues the session's handles, and the next registry call unpersists
+# them.
 
 
-def scratch_persist(df, level=None):
-    """persist(MEMORY_AND_DISK) + register for evict_scratch."""
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    out = df.persist(level or StorageLevel.MEMORY_AND_DISK)
-    bucket = _SCRATCH.setdefault(id(spark), [])
-    bucket.append(out._jdf)
-    if len(bucket) == 1:
-        weakref.finalize(spark, _SCRATCH.pop, id(spark), None)
-    return out
+# session → (registered frame handles, {memo key: held value})
+_STATE: "weakref.WeakKeyDictionary[SparkSession, tuple]" = (
+    weakref.WeakKeyDictionary()
+)
+_STATE_LOCK = threading.Lock()
+# handles of collected sessions, unpersisted by the next registry call
+_RELEASED: list = []
+_MISS = object()
 
 
-def evict_scratch(spark: SparkSession) -> None:
-    """Unpersist every scratch frame this session registered."""
-    for jdf in _SCRATCH.pop(id(spark), []):
+def _unpersist(handles) -> None:
+    for jdf in handles:
         try:
             jdf.unpersist(False)
         except Exception:  # noqa: BLE001 — already-stopped session/JVM
             pass
+
+
+def _state(spark: SparkSession) -> tuple:
+    with _STATE_LOCK:  # finalizers only append, so pop under the lock
+        released = [_RELEASED.pop() for _ in range(len(_RELEASED))]
+        st = _STATE.get(spark)
+        if st is None:
+            st = _STATE[spark] = ([], {})
+            weakref.finalize(spark, _RELEASED.extend, st[0])
+    _unpersist(released)
+    return st
+
+
+def _hold(value):
+    """A memo value (plain data, a DataFrame, or a tuple of them) with
+    its frames swapped for their JVM handles."""
+    if isinstance(value, tuple):
+        return tuple(map(_hold, value))
+    return value._jdf if isinstance(value, DataFrame) else value
+
+
+def _wrap(value, spark: SparkSession):
+    """Inverse of _hold: the classic DataFrame constructor re-wraps a
+    handle without a py4j call."""
+    if isinstance(value, tuple):
+        return tuple(_wrap(v, spark) for v in value)
+    return ClassicDataFrame(value, spark) if isinstance(value, JavaObject) else value
+
+
+def scratch_persist(df: DataFrame, level: str = "MEMORY_AND_DISK") -> DataFrame:
+    """Persist ``df`` at the ``StorageLevel`` named ``level`` and
+    register it for evict_scratch: the one persist for a frame that
+    outlives its builder. A frame persisted and unpersisted inside one
+    function stays a plain local pair."""
+    out = df.persist(getattr(StorageLevel, level))
+    frames, _ = _state(df.sparkSession)
+    with _STATE_LOCK:
+        frames.append(out._jdf)
+    return out
+
+
+def session_memo(spark: SparkSession, key, build):
+    """``build()`` once per (session, key), until evict_scratch.
+
+    The value is plain data, a DataFrame, or a tuple of them; its
+    frames come from scratch_persist, so evict_scratch releases them.
+    A hit re-wraps the held handles and makes no py4j call. The lock
+    covers only the dict, so distinct keys build on concurrent
+    threads; two threads that miss one key both build, and the first
+    to finish wins."""
+    _, memos = _state(spark)
+    with _STATE_LOCK:
+        held = memos.get(key, _MISS)
+    if held is _MISS:
+        value = _hold(build())
+        with _STATE_LOCK:
+            held = memos.setdefault(key, value)
+    return _wrap(held, spark)
+
+
+def evict_scratch(spark: SparkSession) -> None:
+    """Unpersist every frame this session registered and drop its
+    memos; also releases what collected sessions left behind."""
+    frames, memos = _state(spark)
+    with _STATE_LOCK:
+        held = frames[:]
+        frames.clear()
+        memos.clear()
+    _unpersist(held)

@@ -139,9 +139,9 @@ def load_table(
     harness protocol re-builds every query three times — a fixed cost
     with no information content, since the fixture files are immutable
     for the life of a session. The cached object is the LAZY scan
-    plan, never data: every execution still reads the parquet files
-    (DataFrames are immutable, so handing the same instance out is
-    safe). Session-weak like ``_REGISTERED``.
+    plan, never data: every execution still reads the parquet files.
+    Session-weak like ``_REGISTERED``; ``session.evict_scratch`` leaves
+    it alone, since evicting a scan would only re-read its footer.
     """
     if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(TABLE_SCHEMAS)}")
@@ -149,8 +149,13 @@ def load_table(
     if bucket is None:
         bucket = _TABLE_CACHE[spark] = {}
     key = (os.path.normpath(sf_dir), name)
-    df = bucket.get(key)
-    if df is None:
+    jdf = bucket.get(key)
+    if jdf is not None:
+        # the classic constructor re-wraps a handle without a py4j call
+        from pyspark.sql.classic.dataframe import DataFrame as Classic
+
+        df = Classic(jdf, spark)
+    else:
         df = spark.read.parquet(table_path(sf_dir, name))
         ts_dtype = dict(df.dtypes).get("ts") if name == "events" else None
         if ts_dtype == "bigint":
@@ -171,11 +176,9 @@ def load_table(
             from pyspark.sql import functions as F
 
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        bucket[key] = df
+        bucket[key] = df._jdf
     if validate:
-        # Runs on cache hits too (ADVICE r13 #1): the check is a pure
-        # driver-side schema comparison on the already-built frame, so
-        # a hit costs nothing — and a validate=True caller must never
+        # Runs on cache hits too: a validate=True caller must never
         # silently lose its drift check to another caller's earlier
         # non-validating load.
         expected = {f.name: f.dataType for f in TABLE_SCHEMAS[name].fields}
@@ -199,7 +202,9 @@ _REGISTERED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary()
 )
 
-# (sf_dir, name) → lazy scan DataFrame, per session (see load_table).
+# (sf_dir, name) → JVM handle of the lazy scan, per session (see
+# load_table). A handle, not the DataFrame: a DataFrame references its
+# session, which would keep this weak key alive forever.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )

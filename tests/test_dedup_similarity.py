@@ -340,13 +340,13 @@ def test_bloom_novelty_one_sided_vs_exact(spark, sf_dir):
 
 def test_cluster_labels_memoized_and_reused(spark, sf_dir):
     """cluster_labels builds once per (session, dataset): the second
-    call returns the SAME persisted DataFrame object, dedup_keep equals
-    the uncached formulation, and eviction resets the memo."""
+    call returns the SAME persisted frame (in a new wrapper), dedup_keep
+    equals the uncached formulation, and eviction resets the memo."""
     from cs422pp_mapreduce_spark.operators import dedup as D
 
     D.evict_cluster_cache(spark)
     first = D.cluster_labels(spark, sf_dir)
-    assert D.cluster_labels(spark, sf_dir) is first
+    assert D.cluster_labels(spark, sf_dir)._jdf is first._jdf
     assert first.storageLevel.useMemory or first.storageLevel.useDisk
 
     keep = sorted(
@@ -368,7 +368,7 @@ def test_cluster_labels_memoized_and_reused(spark, sf_dir):
     assert keep == sorted(all_ids - drop)
 
     D.evict_cluster_cache(spark)
-    assert D.cluster_labels(spark, sf_dir) is not first
+    assert D.cluster_labels(spark, sf_dir)._jdf is not first._jdf
     D.evict_cluster_cache(spark)
 
 

@@ -1,44 +1,16 @@
-"""Round-12 regression tests: ADVICE r11 closures."""
+"""Regression tests: scratch eviction, the late-audit watermark constant,
+trigram Kneser–Ney, and the suffix comparison cap."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
-from pyspark.sql import DataFrame
 
 
 class TestScratchRegistry:
-    """ADVICE r11 #1: the scratch registry must not strongly reference
-    the SparkSession (a bucket of DataFrame wrappers reaches the
-    session via .sparkSession, so the weakref.finalize cleanup could
-    never fire)."""
-
-    def test_bucket_holds_no_dataframe_wrappers(self, spark):
-        from cs422pp_mapreduce_spark.session import (
-            _SCRATCH,
-            evict_scratch,
-            scratch_persist,
-        )
-
-        evict_scratch(spark)  # clean slate
-        df = scratch_persist(spark.range(10))
-        try:
-            bucket = _SCRATCH[id(spark)]
-            assert bucket, "scratch_persist must register"
-            for obj in bucket:
-                # py4j Dataset handles only — never the Python wrapper
-                # (which transitively pins the session via .sparkSession;
-                # a JavaObject holds only the gateway client)
-                assert not isinstance(obj, DataFrame)
-            assert df.storageLevel.useMemory or df.storageLevel.useDisk
-        finally:
-            evict_scratch(spark)
-        assert id(spark) not in _SCRATCH
-        # the jdf handle unpersisted the frame JVM-side (df.is_cached is
-        # a stale Python-side flag; storageLevel queries the JVM)
-        lvl = df.storageLevel
-        assert not (lvl.useMemory or lvl.useDisk)
+    """evict_scratch on a session with nothing registered is a no-op
+    (the release checks live in tests/test_session_state.py)."""
 
     def test_evict_is_idempotent(self, spark):
         from cs422pp_mapreduce_spark.session import evict_scratch
@@ -48,7 +20,7 @@ class TestScratchRegistry:
 
 
 class TestLateAuditWatermarkConstant:
-    """ADVICE r11 #2: the 2h delay derives from ONE constant on all
+    """The 2h delay derives from ONE constant on all
     three sites (stream watermark string, report cutoff, oracle SQL)."""
 
     def test_wm_string_derives_from_hours(self):
@@ -74,7 +46,7 @@ class TestLateAuditWatermarkConstant:
 
 
 class TestTrigramKNLogprob:
-    """q_trigram_logprob (VERDICT r11 ask #5): exact interpolated
+    """q_trigram_logprob: exact interpolated
     Kneser–Ney against an independent pure-Python replica, plus the
     self-normalization property the KN construction guarantees."""
 
@@ -219,7 +191,7 @@ class TestTrigramKNLogprob:
 
 
 class TestSuffixOracleCmpFloor:
-    """ADVICE r11 #3: the oracle's cmp-cap arithmetic literally mirrors
+    """The oracle's cmp-cap arithmetic literally mirrors
     the Spark side's levels = max(1, ceil(log2(min(maxlen, cap))))."""
 
     def test_oracle_has_greatest_floor(self):
