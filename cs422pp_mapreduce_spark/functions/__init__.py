@@ -13,6 +13,8 @@ from .text import (
     token_count_bpe,
     fingerprint_md5,
     lang_id_expr,
+    md5_bucket,
+    md5_int,
     quality_score_cols,
 )
 
@@ -30,5 +32,7 @@ __all__ = [
     "token_count_bpe",
     "fingerprint_md5",
     "lang_id_expr",
+    "md5_bucket",
+    "md5_int",
     "quality_score_cols",
 ]

@@ -58,6 +58,24 @@ def fingerprint_md5(col: Column | str) -> Column:
     return F.md5(F.lower(F.trim(c)))
 
 
+def md5_int(col: Column | str, hex_chars: int) -> Column:
+    """The engine's cross-engine string hash: the first ``hex_chars``
+    hex digits of md5(col) as a BIGINT (15 digits = 60 bits stays
+    non-negative). DuckDB replays it as
+    ('0x' || substr(md5(x), 1, k))::BIGINT, so hash-derived ids,
+    buckets and positions verify bit for bit (xxhash64 is
+    engine-private)."""
+    return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("long")
+
+
+def md5_bucket(key: Column | str, buckets: int) -> Column:
+    """Deterministic bucket in [0, buckets) of any key: ``md5_int`` of
+    its string form at 6 hex digits, mod ``buckets`` — the hash-mod
+    membership behind samples, eval/train splits and changesets."""
+    c = F.col(key) if isinstance(key, str) else key
+    return md5_int(c.cast("string"), 6) % buckets
+
+
 def _stopword_hits(tokens: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda x: x.isin(*words)))
 

@@ -18,6 +18,8 @@ from ..functions.numeric import fine_sum
 from ..functions.text import (
     fingerprint_md5,
     lang_id_expr,
+    md5_bucket,
+    md5_int,
     quality_score_cols,
     token_count_bpe,
 )
@@ -122,24 +124,14 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang_pred",
         "quality_score",
     )
-    split_bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col("doc_id").cast("string"),
-                        F.col("chunk_id").cast("string"),
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    split_bucket = md5_int(
+        F.concat_ws(
+            ":",
+            F.col("doc_id").cast("string"),
+            F.col("chunk_id").cast("string"),
+        ),
+        6,
+    ) % 100
     return chunks.select(
         "doc_id",
         "chunk_id",
@@ -165,7 +157,7 @@ def q_corpus_to_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a single-partition window). Every stage is a previously
     oracle-verified operator; the composed oracle chains the same
     CTEs."""
-    from .dedup import EVAL_PCT, contamination_stats, eval_bucket
+    from .dedup import EVAL_PCT, contamination_stats
     from .textops import chunk_docs, pack_sequences
 
     docs = load_table(spark, sf_dir, "documents")
@@ -175,7 +167,7 @@ def q_corpus_to_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # representative doc is flagged or is itself in the eval slice
     flagged = contamination_stats(docs).select("doc_id")
     clean = (
-        deduped.where(eval_bucket("doc_id") >= EVAL_PCT)
+        deduped.where(md5_bucket("doc_id", 100) >= EVAL_PCT)
         .join(F.broadcast(flagged), "doc_id", "left_anti")
         .select("doc_id", "text")
     )
@@ -327,9 +319,7 @@ def q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
-    shard = (
-        F.conv(F.substring(h, 1, 6), 16, 10).cast("bigint") % N_SHARDS
-    )
+    shard = md5_bucket("doc_id", N_SHARDS)
     base = docs.select(
         "doc_id",
         "lang",

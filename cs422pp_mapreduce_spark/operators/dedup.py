@@ -27,10 +27,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.text import fingerprint_md5, nonempty_tokens
+from ..functions.text import (
+    fingerprint_md5,
+    md5_bucket,
+    md5_int,
+    nonempty_tokens,
+)
 from ..session import (
     default_parallelism,
     evict_scratch,
+    release_checkpoint,
     scratch_persist,
     session_memo,
 )
@@ -463,21 +469,10 @@ EVAL_PCT = 2  # deterministic md5-bucket slice held out as the "benchmark"
 DECONTAM_K = 8
 
 
-def eval_bucket(col: str = "doc_id") -> Column:
-    """Deterministic 0-99 bucket for eval-slice membership — same
-    hash-mod convention as q_deterministic_sample."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.col(col).cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 100
-    )
-
-
 def contamination_stats(docs: DataFrame) -> DataFrame:
     """Per-train-doc eval overlap over any (doc_id, text) frame; see
     q_decontaminate for semantics and the plan-shape rationale."""
-    tagged = docs.withColumn("is_eval", eval_bucket() < EVAL_PCT)
+    tagged = docs.withColumn("is_eval", md5_bucket("doc_id", 100) < EVAL_PCT)
     # persisted: both branches (train inverted index, eval stats) read
     # it, and the cache boundary stops InferFiltersFromGenerate's
     # size()>0 pre-filter from being pushed below the projections with
@@ -562,7 +557,7 @@ def q_decontaminate_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sh = scratch_persist(_doc_shingles(docs))
     # ^ read by both band builds AND both sides of the verify join
-    is_eval = eval_bucket() < EVAL_PCT
+    is_eval = md5_bucket("doc_id", 100) < EVAL_PCT
     bands = lsh_band_buckets(minhash_signatures(sh))
     eval_bands = bands.where(is_eval)
     train_bands = bands.where(~is_eval)
@@ -641,10 +636,7 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
     function tiny and constant-size in N_MINHASHES, and map-side
     partial min-aggregation collapses the ×N_MINHASHES row blowup to
     N_MINHASHES rows per doc before the shuffle."""
-    base = (
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-        % MINHASH_P
-    )
+    base = md5_int("shingle", 15) % MINHASH_P
     perm = (
         (F.lit(MINHASH_A_MULT) * (F.col("i") + 1)) % MINHASH_P * F.col("hb")
         + (F.lit(MINHASH_B_MULT) * (F.col("i") + 1)) % MINHASH_P
@@ -765,9 +757,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
         .select("doc_id", F.explode(nonempty_tokens("text")).alias("tok"))
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10)
-            .cast("bigint")
-            .alias("h"),
+            md5_int("tok", 15).alias("h"),
         )
     )
     votes = (
@@ -907,7 +897,9 @@ def connected_components_star(
 
     Per-round localCheckpoint keeps lineage O(1); convergence = the
     edge set reaching a fixed point (count equal + no new edges, two
-    cheap actions on checkpointed frames)."""
+    cheap actions on checkpointed frames). Each round's checkpoint is
+    released once the next round's has materialized and been checked;
+    the last one backs the returned labels and stays."""
     e = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -922,6 +914,7 @@ def connected_components_star(
         rounds += 1
         n_new = new_e.count()
         converged = n_new == n_prev and new_e.exceptAll(e).isEmpty()
+        release_checkpoint(e)
         e = new_e
         n_prev = n_new
         if converged:
@@ -950,7 +943,10 @@ def connected_components(
     long chains). Both paths share the engine's iterative-algorithm
     conventions: an action per round to test convergence and
     `localCheckpoint()` so lineage (and thus plan size) stays O(1) in
-    the iteration count instead of compounding.
+    the iteration count instead of compounding. A superseded round's
+    checkpoint is released as soon as the next round has materialized
+    and been checked; the last one backs the returned labels and
+    stays.
     """
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     if edges.limit(CC_STAR_EDGE_THRESHOLD + 1).count() > CC_STAR_EDGE_THRESHOLD:
@@ -961,7 +957,7 @@ def connected_components(
         F.col("src").alias("a"), F.col("dst").alias("b")
     ).union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
     sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    labels = (
+    labels = ckpt = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("comp"))
@@ -986,6 +982,8 @@ def connected_components(
             # the same size as round 1's
         )
         changed = new_labels.where("changed").limit(1).count()
+        release_checkpoint(ckpt)
+        ckpt = new_labels
         labels = new_labels.select("node", "comp")
         if changed == 0:
             break
@@ -1753,14 +1751,7 @@ def seeded_hash_positions(
     return F.array(
         *[
             F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(col, F.lit(f":{i}"))), 1, 15
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(m),
+                md5_int(F.concat(col, F.lit(f":{i}")), 15), F.lit(m)
             ).alias(f"{prefix}{i}")
             for i in range(k)
         ]

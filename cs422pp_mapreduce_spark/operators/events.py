@@ -35,6 +35,7 @@ from ..functions.numeric import (
     fixed_long,
     long_dec,
 )
+from ..functions.scan import prefix_scan
 from ..session import scratch_persist
 from ..sources.catalog import load_table
 from ..sources.staging import sf_tag, write_once
@@ -550,8 +551,6 @@ def max_concurrent_per_day(ev: DataFrame, interval_min: int) -> DataFrame:
     frame. Factored out of q_max_concurrency so boundary semantics
     (an interval ending exactly when another starts does NOT overlap
     it) can be pinned on hand-built frames in pytest."""
-    from ..session import default_parallelism
-
     bounds = ev.select(
         F.col("ts").alias("t"), F.lit(1).alias("delta"), "event_id"
     ).unionByName(
@@ -563,38 +562,9 @@ def max_concurrent_per_day(ev: DataFrame, interval_min: int) -> DataFrame:
             "event_id",
         )
     )
-    n_part = default_parallelism()
-    ranged = bounds.repartitionByRange(
-        n_part, "t", "delta", "event_id"
-    ).withColumn("pid", F.spark_partition_id())
-    local_w = (
-        Window.partitionBy("pid")
-        .orderBy("t", "delta", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = scratch_persist(ranged.withColumn(
-        "local_run", F.sum("delta").over(local_w)
-    ))
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.sum("delta").alias("part_sum"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("part_sum").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
-    running = local.join(F.broadcast(offsets), "pid").select(
-        "t",
-        "delta",
-        (F.col("local_run") + F.col("offset")).cast("long").alias("open_now"),
+    run = prefix_scan(bounds, ["t", "delta", "event_id"], "sum", "delta")
+    running = run.frame.select(
+        "t", "delta", run.value.cast("long").alias("open_now")
     )
     return (
         running.where(F.col("delta") == 1)
@@ -621,12 +591,10 @@ def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Concurrency peaks only at +1 boundaries, so the per-day max is
     over start boundaries' running values.
 
-    Scale shape: the running sum is the engine's range-exchange prefix
-    -sum kernel (repartitionByRange on the sort key, per-partition
-    ROWS-frame window, O(#partitions) offset frame broadcast back) —
-    NEVER an unpartitioned data-sized window. One range exchange + one
-    day aggregate; boundary rows are 2× events but only (t, delta)
-    wide."""
+    Scale shape: the running sum is the range-exchange prefix scan
+    (``functions.scan.prefix_scan``), NEVER an unpartitioned
+    data-sized window. One range exchange + one day aggregate;
+    boundary rows are 2× events but only (t, delta) wide."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts")
     return max_concurrent_per_day(ev, CONCURRENCY_INTERVAL_MIN)
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import quantized
+from ..functions.text import md5_int
 from ..session import scoped_conf, scratch_persist
 from ..sources.catalog import load_table
 
@@ -409,17 +410,10 @@ def q_triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     tighter at real edge counts — the pin is deliberately loose
     because small graphs are the estimator's worst case)."""
     edges = copurchase_edges(spark, sf_dir)
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(":", F.col("u").cast("string"), F.col("v").cast("string"))
-            ),
-            1,
-            6,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int(
+        F.concat_ws(":", F.col("u").cast("string"), F.col("v").cast("string")),
+        6,
+    )
     sampled = scratch_persist(edges.where(h % TRI_SAMPLE_DENOM == 0))
     n_nodes, n_edges, n_tri = _edge_iterator_counts(
         sampled, big_graph=_is_big_graph(sf_dir, sample_denom=TRI_SAMPLE_DENOM)

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import md5_bucket
 from ..sources.catalog import load_table
 
 # Deterministic changeset: ~10% of orders (hash-mod bucket 0) get
@@ -25,19 +26,10 @@ from ..sources.catalog import load_table
 _NEW_KEY_OFFSET = 10_000_000
 
 
-def _bucket(key):
-    return (
-        F.conv(F.substring(F.md5(key.cast("string")), 1, 6), 16, 10).cast(
-            "bigint"
-        )
-        % 10
-    )
-
-
 def changeset(orders: DataFrame) -> DataFrame:
     """(o_orderkey, …, merge_action) updates + inserts derived from the
     target itself — stands in for a CDC feed."""
-    sampled = orders.where(_bucket(F.col("o_orderkey")) == 0)
+    sampled = orders.where(md5_bucket("o_orderkey", 10) == 0)
     updates = sampled.select(
         "o_orderkey",
         "o_custkey",
@@ -91,7 +83,7 @@ def q_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"
     )
-    changed = _bucket(F.col("c_custkey")) == 0
+    changed = md5_bucket("c_custkey", 10) == 0
     eff = F.lit(_SCD2_EFFECTIVE).cast("timestamp")
     base_from = F.lit("1990-01-01").cast("timestamp")
     old_rows = cust.select(

@@ -39,7 +39,8 @@ from ..functions.numeric import (
     long_dec,
     rate_long,
 )
-from ..session import default_parallelism, scratch_persist
+from ..functions.scan import prefix_scan
+from ..functions.text import md5_int
 from ..sources.catalog import load_table
 
 
@@ -444,54 +445,18 @@ def q_global_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window anti-pattern.
 
     An unpartitioned ``row_number()`` funnels every row through one
-    task — the classic 100 TB killer. The scalable plan implemented
-    here: range-repartition on the sort key (parallel range exchange),
-    rank locally per partition, then add per-partition row-count
-    offsets (a tiny O(partitions) aggregate, cumulative-summed and
-    broadcast back). Output is identical to the naive global window —
-    the oracle IS the naive formulation — and independent of where the
-    sampled range boundaries land, because offset + local rank is
-    invariant under any contiguous split of a total order."""
+    task — the classic 100 TB killer. The rank is the range-exchange
+    prefix scan (``functions.scan.prefix_scan``); output is identical
+    to the naive global window, which is what the oracle computes."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
-    ranged = orders.repartitionByRange(
-        default_parallelism(), "o_orderdate", "o_orderkey"
-    ).withColumn("pid", F.spark_partition_id())
-    local_w = Window.partitionBy("pid").orderBy("o_orderdate", "o_orderkey")
-    # persisted BEFORE branching: the offsets branch and the final join
-    # must see the SAME range boundaries — re-executing the range
-    # exchange re-samples them (RangePartitioner seeds per RDD
-    # instance), which would misalign offsets against local ranks
-    local = scratch_persist(
-        ranged.withColumn("local_rn", F.row_number().over(local_w))
-    )
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("n").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "o_orderkey",
-            F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
-            "o_totalprice",
-            (F.col("local_rn") + F.col("offset")).cast("long").alias(
-                "global_rn"
-            ),
-        )
+    ranked = prefix_scan(orders, ["o_orderdate", "o_orderkey"], "row_number")
+    return ranked.frame.select(
+        "o_orderkey",
+        F.col("o_orderdate").cast("timestamp").alias("o_orderdate"),
+        "o_totalprice",
+        ranked.value.cast("long").alias("global_rn"),
     )
 
 
@@ -1239,44 +1204,13 @@ def skyline_2d(points: DataFrame, x: str, y: str) -> DataFrame:
     After collapsing to per-x minima (distinct x), a point is on the
     frontier iff its y is strictly below the prefix-minimum of every
     smaller x. A naive unpartitioned running-min window funnels the
-    distinct-x table through one task, so this reuses q_global_rank's
-    range-exchange pattern: range partition on x, per-partition prefix
-    minima, then O(partitions) partition-minima cumulative-combined
-    and broadcast back — identical to the naive window and
-    boundaries-invariant (min is associative over any contiguous split
-    of a total order). F.least's null semantics (smallest NON-null)
-    make the empty-prefix edge type-generic with no sentinel."""
+    distinct-x table through one task, so the prefix minimum is the
+    range-exchange prefix scan (``functions.scan.prefix_scan``); the
+    empty prefix (null) keeps the smallest x with no sentinel."""
     g = points.groupBy(F.col(x).alias("x")).agg(F.min(y).alias("ymin"))
-    ranged = g.repartitionByRange(default_parallelism(), "x").withColumn(
-        "pid", F.spark_partition_id()
-    )
-    local_w = (
-        Window.partitionBy("pid")
-        .orderBy("x")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # persist BEFORE branching: the offsets branch and the final join
-    # must see the same sampled range boundaries (q_global_rank rule).
-    local = scratch_persist(ranged.withColumn(
-        "lmin", F.min("ymin").over(local_w)
-    ))
-    part_mins = (
-        local.groupBy("pid")
-        .agg(F.min("ymin").alias("pmin"))
-        .withColumn(
-            "prev_pmin",
-            F.min("pmin").over(
-                Window.orderBy("pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-        )
-        .select("pid", "prev_pmin")
-    )
-    prefix = F.least(F.col("lmin"), F.col("prev_pmin"))
+    pm = prefix_scan(g, ["x"], "min", "ymin", exclusive=True)
     return (
-        local.join(F.broadcast(part_mins), "pid")
-        .where(prefix.isNull() | (F.col("ymin") < prefix))
+        pm.frame.where(pm.value.isNull() | (F.col("ymin") < pm.value))
         .select(F.col("x").alias(x), F.col("ymin").alias(y))
     )
 
@@ -1594,16 +1528,7 @@ def _bloom_pos(key, i: int):
     """Probe position i for a join key — the repo's md5-prefix integer
     convention (15 hex chars < 2^60, always non-negative), replayable
     in the oracle as ('0x' || substr(md5(...), 1, 15))::BIGINT % M."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(key.cast("string"), F.lit(f":{i}"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % BLOOM_M
-    )
+    return md5_int(F.concat(key.cast("string"), F.lit(f":{i}")), 15) % BLOOM_M
 
 
 def bloom_probe_report(

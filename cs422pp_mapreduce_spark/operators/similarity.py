@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import comoment, fine_sum, long_dec, quantized
+from ..functions.text import md5_bucket
 from ..session import (
     driver_paced_build_conf,
     evict_scratch,
@@ -1565,8 +1566,8 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition of existing kernels, so the tier adds no new kernel
     for the oracle to replay: the eval
     split is the deterministic md5-bucket < EVAL_PCT % convention
-    (dedup.eval_bucket — reproducible across engines); signatures come
-    from the map-only integer sign-LSH matmul kernel
+    (``functions.text.md5_bucket`` — reproducible across engines);
+    signatures come from the map-only integer sign-LSH matmul kernel
     (sign_band_buckets); and the join SHAPE is decontaminate_near's
     broadcast-eval-index posture — the eval side's (vec_id, band,
     bucket) table is the tiny BROADCAST index (real benchmark suites
@@ -1596,13 +1597,13 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval item — (vec_id, n_eval_candidates, n_eval_near, contaminated
     = any verified semantic near-dup). Clean train items pass through
     unflagged (the affected-docs convention)."""
-    from .dedup import EVAL_PCT, eval_bucket
+    from .dedup import EVAL_PCT
 
     emb = load_table(spark, sf_dir, "embeddings")
     raw = emb.select(
         "vec_id",
         _as_double("embedding").alias("vec"),
-        (eval_bucket("vec_id") < EVAL_PCT).alias("is_eval"),
+        (md5_bucket("vec_id", 100) < EVAL_PCT).alias("is_eval"),
     )
     twins = raw.where("is_eval").select(
         (F.col("vec_id") + PLANT_OFFSET).alias("vec_id"),

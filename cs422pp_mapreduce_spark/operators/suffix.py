@@ -14,8 +14,7 @@ ops — the "log n range-exchange sorts" form:
   rank_{k-1}[p + 2^(k-1)]) — one positional self-join (the range
   exchange) plus one distributed dense rank per level, K =
   ceil(log2(min(max_doc_tokens, SUFFIX_CAP))) levels total;
-* every global rank uses the q_global_rank kernel (range-repartition →
-  per-partition rank → tiny per-partition offset broadcast), never a
+* every global rank is ``functions.scan.prefix_scan``, never a
   single-partition window;
 * the suffix ARRAY is the row_number of (rank_K, doc_id, pos);
   adjacent SA entries' LCP is computed by DIRECT capped token-prefix
@@ -52,6 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel as PySparkStorageLevel
 
+from ..functions.scan import prefix_scan
 from ..functions.text import nonempty_tokens
 from ..session import (
     default_parallelism,
@@ -111,56 +111,6 @@ def _level_scratch():
         held.clear()
 
     return hold, release
-
-
-def _global_rank(
-    df: DataFrame,
-    cols: list[str],
-    out: str,
-    dense: bool,
-    persist=scratch_persist,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """Global (dense_)rank over ``cols`` without the single-partition
-    window: range-repartition on the keys, rank per partition, add the
-    broadcast per-partition offsets (the q_global_rank kernel,
-    relational.py:437 — dense variant offsets by distinct-key counts;
-    equal keys land in one range partition, so local dense ranks are
-    globally consistent). Persisted (by ``persist``) before branching
-    so the offsets and the final join see the SAME sampled range
-    boundaries.
-    ``n_parts`` sizes the range exchange from the data (callers derive
-    it via ``_rank_partitions``); default = one per core."""
-    ranged = df.repartitionByRange(
-        n_parts or default_parallelism(), *[F.col(c) for c in cols]
-    ).withColumn("pid", F.spark_partition_id())
-    w = Window.partitionBy("pid").orderBy(*cols)
-    rank_fn = F.dense_rank() if dense else F.row_number()
-    local = persist(ranged.withColumn("_lr", rank_fn.over(w)))
-    per_part = (
-        F.countDistinct(*cols) if dense else F.count(F.lit(1))
-    ).alias("n")
-    offsets = (
-        local.groupBy("pid")
-        .agg(per_part)
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("n").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .withColumn(out, (F.col("_lr") + F.col("_off")).cast("long"))
-        .drop("pid", "_lr", "_off")
-    )
 
 
 def suffix_rank_tables(
@@ -237,10 +187,13 @@ def suffix_rank_tables(
     base = n_positions + 2
     n_parts = _rank_partitions(n_positions)
     vocab = pos.select("tok").distinct()
-    vocab_rank = _global_rank(
-        vocab, ["tok"], "r", dense=True, persist=persist,
-        n_parts=min(n_parts, default_parallelism()),
-    ).select("tok", "r")
+    vocab_scan = prefix_scan(
+        vocab, ["tok"], "dense_rank",
+        n_parts=min(n_parts, default_parallelism()), persist=persist,
+    )
+    vocab_rank = vocab_scan.frame.select(
+        "tok", vocab_scan.value.cast("long").alias("r")
+    )
     # Broadcast guard: |vocab| ≤ n_positions, so small corpora
     # broadcast unconditionally; a corpus big enough to carry a
     # driver-threatening vocabulary pays one bounded count job to
@@ -297,10 +250,13 @@ def suffix_rank_tables(
                 # released by _ckpt below; saves the range-exchange
                 # sampler recomputing the pairing join
                 paired = hold(paired)
-            lvl = _global_rank(
-                paired, ["r1", "r2"], "r", dense=True, persist=persist,
-                n_parts=n_parts,
-            ).select("doc_id", "pos", "r")
+            lvl_scan = prefix_scan(
+                paired, ["r1", "r2"], "dense_rank",
+                n_parts=n_parts, persist=persist,
+            )
+            lvl = lvl_scan.frame.select(
+                "doc_id", "pos", lvl_scan.value.cast("long").alias("r")
+            )
             ranks[k] = _ckpt(lvl)
     return ranks
 
@@ -402,14 +358,16 @@ def suffix_report(
         ranks = suffix_rank_tables(pos, levels, n_positions, checkpoint)
 
         hold, release = _level_scratch()
-        sa = _global_rank(
+        sa_scan = prefix_scan(
             ranks[levels],
             ["r", "doc_id", "pos"],
-            "sa",
-            dense=False,
-            persist=hold if checkpoint else scratch_persist,
+            "row_number",
             n_parts=_rank_partitions(n_positions),
-        ).select("doc_id", "pos", "sa")
+            persist=hold if checkpoint else scratch_persist,
+        )
+        sa = sa_scan.frame.select(
+            "doc_id", "pos", sa_scan.value.cast("long").alias("sa")
+        )
         if checkpoint:
             sa = sa.localCheckpoint(
                 eager=True, storageLevel=PySparkStorageLevel.DISK_ONLY

@@ -14,9 +14,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import exact_int, fixed_long, long_dec
+from ..functions.scan import prefix_scan
 from ..functions.text import (
     fingerprint_md5,
     lang_id_expr,
+    md5_bucket,
+    md5_int,
     nonempty_tokens,
     quality_score_cols,
     token_count_bpe,
@@ -88,13 +91,9 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     toks = docs.select("doc_id", nonempty_tokens("text").alias("t")).where(
         F.size("t") >= WINNOW_K
     )
-    shingle_hash = lambda i: F.conv(  # noqa: E731
-        F.substring(
-            F.md5(F.array_join(F.slice("t", i, WINNOW_K), " ")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    shingle_hash = lambda i: md5_int(  # noqa: E731
+        F.array_join(F.slice("t", i, WINNOW_K), " "), 15
+    )
     hashes = F.transform(
         F.sequence(F.lit(1), F.size("t") - (WINNOW_K - 1)), shingle_hash
     )
@@ -143,12 +142,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-layouts — which is what makes held-out splits and A/B corpus
     slices auditable. Pure codegen'd expressions, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_bucket("doc_id", 100)
     return docs.select(
         "doc_id", "lang", "source", "n_chars", bucket.alias("sample_bucket")
     ).where(F.col("sample_bucket") < 10)
@@ -243,53 +237,19 @@ def q_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     report per-decile size and score range.
 
     The global rank is NOT an unpartitioned window (ntile() would
-    funnel the corpus through one task): same range-exchange +
-    offset-merge shape as q_global_rank, with the total count joined
-    back as a broadcast single-row frame instead of a driver collect.
+    funnel the corpus through one task): it is the range-exchange
+    prefix scan (``functions.scan.prefix_scan``) with its grand total.
     decile = floor(10·(rank−1)/n), bit-equal to the naive-window
     oracle."""
-    from pyspark.sql.window import Window
-
-    from ..session import default_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     q = quality_score_cols("text")["quality_score"]
     scored = docs.select("doc_id", q.alias("q"))
-    ranged = scored.repartitionByRange(
-        default_parallelism(), "q", "doc_id"
-    ).withColumn("pid", F.spark_partition_id())
-    local_w = Window.partitionBy("pid").orderBy("q", "doc_id")
-    # persisted BEFORE branching (q_global_rank note): offsets and the
-    # final join must see the same sampled range boundaries
-    local = scratch_persist(ranged.withColumn(
-        "local_rn", F.row_number().over(local_w)
-    ))
-    counts = local.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    offsets = counts.withColumn(
-        "offset",
-        F.coalesce(
-            F.sum("cnt").over(
-                Window.orderBy("pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
+    rk = prefix_scan(scored, ["q", "doc_id"], "row_number", total=True)
+    ranked = rk.frame.select(
+        "q",
+        F.floor(F.lit(10) * (rk.value - 1) / rk.total).cast("long").alias(
+            "decile"
         ),
-    ).select("pid", "offset")
-    total = counts.agg(F.sum("cnt").alias("n"))
-    ranked = (
-        local.join(F.broadcast(offsets), "pid")
-        .join(F.broadcast(total))
-        .select(
-            "q",
-            (
-                F.floor(
-                    F.lit(10)
-                    * (F.col("local_rn") + F.col("offset") - 1)
-                    / F.col("n")
-                )
-            ).cast("long").alias("decile"),
-        )
     )
     return ranked.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -434,54 +394,19 @@ def pack_sequences(chunks: DataFrame) -> DataFrame:
     chunks are assigned once, deterministically).
 
     The global running token total is NOT an unpartitioned window (the
-    one-task 100 TB killer). Same shape as q_global_rank
-    (relational.py): range-repartition on the order key, per-partition
-    running sums, then add per-partition token-total offsets (tiny
-    O(partitions) aggregate, cumulative-summed, broadcast back).
-    Result is identical to the naive single-window formulation — the
-    oracle IS that formulation — because offset + local prefix sum is
-    invariant under any contiguous split of a total order."""
-    from pyspark.sql.window import Window
-
-    from ..session import default_parallelism
-
-    ranged = chunks.repartitionByRange(
-        default_parallelism(), "doc_id", "chunk_id"
-    ).withColumn("pid", F.spark_partition_id())
-    local_w = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id", "chunk_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    one-task 100 TB killer): it is the range-exchange prefix scan
+    (``functions.scan.prefix_scan``), identical to the naive
+    single-window formulation the oracle computes."""
+    cum = prefix_scan(
+        chunks, ["doc_id", "chunk_id"], "sum", "n_chunk_tokens",
+        exclusive=True,
     )
-    # persisted BEFORE branching: the offsets branch and the final join
-    # must see the SAME sampled range boundaries (q_global_rank note).
-    local = scratch_persist(ranged.withColumn(
-        "local_start",
-        F.coalesce(F.sum("n_chunk_tokens").over(local_w), F.lit(0)),
-    ))
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.sum("n_chunk_tokens").alias("toks"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("toks").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
-    start = F.col("local_start") + F.col("offset")
-    return local.join(F.broadcast(offsets), "pid").select(
+    return cum.frame.select(
         "doc_id",
         "chunk_id",
         "n_chunk_tokens",
-        F.floor(start / SEQ_LEN).cast("long").alias("seq_id"),
-        (start % SEQ_LEN).cast("long").alias("seq_off"),
+        F.floor(cum.value / SEQ_LEN).cast("long").alias("seq_id"),
+        (cum.value % SEQ_LEN).cast("long").alias("seq_off"),
     )
 
 
@@ -511,58 +436,23 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical across engines, partitionings, and reruns: hash-verified,
     not rows-only.
 
-    The cumulative weight is the range-exchange prefix sum
-    (pack_sequences / q_global_rank pattern — never an unpartitioned
-    window); the grid total is a 1-row broadcast. n_picks =
-    (before+w) div step − before div step (a heavy doc spanning
-    several grid points is multiply-selected, the PPS-with-replacement
-    bookkeeping). All-integer arithmetic end to end."""
-    from pyspark.sql.window import Window
-
-    from ..session import default_parallelism
-
+    The cumulative weight and the grand total are the range-exchange
+    prefix scan (``functions.scan.prefix_scan``), never an
+    unpartitioned window. n_picks = (before+w) div step − before div
+    step (a heavy doc spanning several grid points is
+    multiply-selected, the PPS-with-replacement bookkeeping).
+    All-integer arithmetic end to end."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("w")
     )
-    ranged = docs.repartitionByRange(
-        default_parallelism(), "doc_id"
-    ).withColumn("pid", F.spark_partition_id())
-    local_w = (
-        Window.partitionBy("pid")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    local = scratch_persist(ranged.withColumn(
-        "local_before", F.coalesce(F.sum("w").over(local_w), F.lit(0))
-    ))
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.sum("w").alias("toks"))
-        .withColumn(
-            "offset",
-            F.coalesce(
-                F.sum("toks").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "offset")
-    )
-    total = docs.agg(F.sum("w").alias("total_w"))
-    cum = (
-        local.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "doc_id",
-            "w",
-            (F.col("local_before") + F.col("offset")).alias("before"),
-            F.greatest(
-                F.expr(f"total_w div {PPS_K}"), F.lit(1)
-            ).alias("step"),
-        )
+    ws = prefix_scan(docs, ["doc_id"], "sum", "w", exclusive=True, total=True)
+    cum = ws.frame.select(
+        "doc_id",
+        "w",
+        ws.value.alias("before"),
+        F.greatest(
+            F.call_function("div", ws.total, F.lit(PPS_K)), F.lit(1)
+        ).alias("step"),
     )
     return cum.select(
         "doc_id",
@@ -613,12 +503,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is reproducible across engines and re-layouts. Pure codegen'd
     expressions, no shuffle, no Python."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_bucket("doc_id", 100)
     rate = F.lit(None).cast("int")
     expr = None
     for lang, pct in STRATA_PCT.items():
@@ -718,16 +603,6 @@ TARGET_MIX = {"en": 0.30, "de": 0.175, "es": 0.175, "fr": 0.175, "zh": 0.175}
 MIX_BP = 10_000  # basis-point resolution of the hash-bucket membership
 
 
-def _bucket_bp(key: Column | str = "doc_id") -> Column:
-    """md5-bucket in [0, MIX_BP) — deterministic_sample's hash-mod
-    membership at basis-point resolution."""
-    c = F.col(key) if isinstance(key, str) else key
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 6), 16, 10).cast("bigint")
-        % MIX_BP
-    )
-
-
 def q_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data mixing: downsample each language to hit TARGET_MIX token
     shares — the mixture-rebalancing pass a pretraining pipeline runs
@@ -752,7 +627,7 @@ def q_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         token_count_ws("text").alias("n_tok"),
-        _bucket_bp("doc_id").alias("bucket_bp"),
+        md5_bucket("doc_id", MIX_BP).alias("bucket_bp"),
     )
     share = None
     for lang, s in TARGET_MIX.items():
@@ -1063,66 +938,28 @@ def q_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile, so the cut is bit-deterministic cross-engine.
 
     Shape: the per-doc score table is corpus-sized, so the global
-    rank uses the range-exchange kernel (q_global_rank,
-    relational.py:437 — range-repartition on (score, doc_id), local
-    row_number, broadcast per-partition offsets), never an
-    unpartitioned window; n arrives as the allowlisted 1-row
-    broadcast. Ranking on doubles is safe here because the engine's
+    rank and the scored-doc count are the range-exchange prefix scan
+    (``functions.scan.prefix_scan``), never an unpartitioned window.
+    Ranking on doubles is safe here because the engine's
     NLL convention makes every mean_nll_trigram bit-identical in
     Spark and DuckDB (same fixed-order IEEE expression, 6-decimal
     per-type rounding, decimal-routed sums).
 
     Output: (doc_id, mean_nll_trigram, n_transitions, nll_rank,
     kept) for every scored doc (≥ 3 tokens)."""
-    from ..session import default_parallelism
-
+    # read by the range exchange and again by its boundary sampler
     scored = scratch_persist(q_trigram_logprob(spark, sf_dir))
-    # ^ read by the range exchange AND (via offsets/total) twice more
-    ranged = scored.repartitionByRange(
-        default_parallelism(), "mean_nll_trigram", "doc_id"
-    ).withColumn("pid", F.spark_partition_id())
-    local = scratch_persist(
-        ranged.withColumn(
-            "lr",
-            F.row_number().over(
-                Window.partitionBy("pid").orderBy(
-                    "mean_nll_trigram", "doc_id"
-                )
-            ),
-        )
+    rk = prefix_scan(
+        scored, ["mean_nll_trigram", "doc_id"], "row_number", total=True
     )
-    # ^ persisted BEFORE branching: offsets + the final join must see
-    # the SAME sampled range boundaries (the q_global_rank rule)
-    offsets = (
-        local.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "off",
-            F.coalesce(
-                F.sum("n").over(
-                    Window.orderBy("pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("pid", "off")
-    )
-    tot = local.agg(F.count(F.lit(1)).alias("n_scored"))
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(tot))  # 1-row scored-doc total
-        .select(
-            "doc_id",
-            "mean_nll_trigram",
-            "n_transitions",
-            (F.col("lr") + F.col("off")).cast("long").alias("nll_rank"),
-            (
-                (F.col("lr") + F.col("off")) * F.lit(PPL_KEEP_DEN)
-                <= F.col("n_scored") * F.lit(PPL_KEEP_NUM)
-            ).alias("kept"),
-        )
+    return rk.frame.select(
+        "doc_id",
+        "mean_nll_trigram",
+        "n_transitions",
+        rk.value.cast("long").alias("nll_rank"),
+        (
+            rk.value * F.lit(PPL_KEEP_DEN) <= rk.total * F.lit(PPL_KEEP_NUM)
+        ).alias("kept"),
     )
 
 
@@ -1809,25 +1646,11 @@ QC_DIM = QC_BUCKETS + QC_LEN_BUCKETS
 QC_TRAIN_PCT = 50
 
 
-def _qc_bucket(col: Column | str = "doc_id") -> Column:
-    """Deterministic 0-99 labeled-slice bucket (md5-prefix mod 100)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.conv(F.substring(F.md5(c.cast("string")), 1, 6), 16, 10).cast(
-            "bigint"
-        )
-        % 100
-    )
-
-
 def _qc_feat(gram: Column) -> Column:
     """Feature id: md5-prefix 60-bit integer mod QC_BUCKETS — the
     engine's cross-engine string-hash convention (dedup_minhash's hs
     chain), so DuckDB derives the identical bucket ids."""
-    return (
-        F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("bigint")
-        % QC_BUCKETS
-    )
+    return md5_int(gram, 15) % QC_BUCKETS
 
 
 def qc_feature_tf(docs: DataFrame) -> DataFrame:
@@ -1892,7 +1715,7 @@ def qc_fit(spark: SparkSession, docs: DataFrame) -> dict:
     lab = scratch_persist(
         docs.select(
             "doc_id",
-            (_qc_bucket() < QC_TRAIN_PCT).alias("is_train"),
+            (md5_bucket("doc_id", 100) < QC_TRAIN_PCT).alias("is_train"),
             (qcols["quality_score"] >= F.lit(QC_LABEL_CUT)).alias(
                 "label_hi"
             ),

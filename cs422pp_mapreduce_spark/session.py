@@ -512,3 +512,12 @@ def evict_scratch(spark: SparkSession) -> None:
         frames.clear()
         memos.clear()
     _unpersist(held)
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of ``df``, a ``localCheckpoint`` frame, at once
+    (they are RDD blocks, not cache-manager entries, so neither
+    evict_scratch nor clearCache reaches them). Only for a checkpoint
+    no later plan reads: reading a released one fails with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

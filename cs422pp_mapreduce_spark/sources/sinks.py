@@ -181,7 +181,8 @@ def write_sorted_parquet(
 
     Unlike ``orderBy().write`` this never funnels data through one
     task: the range exchange samples split points and each partition
-    sorts locally — same shape as q_global_rank's rank path."""
+    sorts locally — the first step of ``functions.scan.prefix_scan``,
+    with no offsets to compute."""
     from ..session import default_parallelism
 
     n = n_files or default_parallelism()

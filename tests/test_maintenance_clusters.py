@@ -55,6 +55,30 @@ def test_cc_star_long_chain_in_log_rounds(spark):
     assert stats["rounds"] <= 12
 
 
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_cc_releases_superseded_round_checkpoints(spark):
+    """Each round's localCheckpoint is freed once the next round has
+    materialized and been checked, on both paths: one build leaves at
+    most the last round's checkpoint (which backs the labels) behind,
+    instead of one per round, and the labels are unchanged."""
+    chain = [(i, i + 1) for i in range(1, 8)]  # propagation: 7 rounds
+    want = {(i, 1) for i in range(1, 9)}
+    before = _persistent_rdds(spark)
+    assert _cc(spark, chain) == want
+    assert _persistent_rdds(spark) - before <= 1
+
+    stats = {}
+    before = _persistent_rdds(spark)
+    assert _cc_star(spark, [(i, i + 1) for i in range(1, 64)], stats) == {
+        (i, 1) for i in range(1, 65)
+    }
+    assert stats["rounds"] >= 3
+    assert _persistent_rdds(spark) - before <= 1
+
+
 def test_cc_star_matches_propagation_on_random_graphs(spark):
     import random
 

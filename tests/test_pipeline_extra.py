@@ -374,9 +374,9 @@ def test_decontaminate_near_tier(spark):
     the fixture exercises both the candidate and the verify tier."""
     from pyspark.sql import functions as F
 
+    from cs422pp_mapreduce_spark.functions.text import md5_bucket
     from cs422pp_mapreduce_spark.operators.dedup import (
         EVAL_PCT,
-        eval_bucket,
         q_decontaminate_near,
         q_dedup_minhash,
     )
@@ -394,7 +394,7 @@ def test_decontaminate_near_tier(spark):
     eval_ids = {
         r["doc_id"]
         for r in load_table(spark, sf, "documents")
-        .where(eval_bucket() < EVAL_PCT)
+        .where(md5_bucket("doc_id", 100) < EVAL_PCT)
         .select("doc_id")
         .collect()
     }

@@ -108,10 +108,8 @@ def test_suffix_vocab_rank0_equals_positional_dense_rank(spark):
     """rank_0 via the distinct-vocabulary broadcast join must equal the
     dense rank computed directly over positions — the bit-identity the
     r13 restructuring claims."""
-    from cs422pp_mapreduce_spark.operators.suffix import (
-        _global_rank,
-        suffix_rank_tables,
-    )
+    from cs422pp_mapreduce_spark.functions.scan import prefix_scan
+    from cs422pp_mapreduce_spark.operators.suffix import suffix_rank_tables
 
     pos = spark.createDataFrame(
         [
@@ -128,9 +126,12 @@ def test_suffix_vocab_rank0_equals_positional_dense_rank(spark):
         (r["doc_id"], r["pos"]): r["r"]
         for r in ranks[0].collect()
     }
+    dense = prefix_scan(pos, ["tok"], "dense_rank")
     ref = {
         (r["doc_id"], r["pos"]): r["r"]
-        for r in _global_rank(pos, ["tok"], "r", dense=True).collect()
+        for r in dense.frame.select(
+            "doc_id", "pos", dense.value.alias("r")
+        ).collect()
     }
     assert got == ref == {
         (1, 1): 2,
