@@ -62,7 +62,6 @@ def prefix_scan(
     exclusive: bool = False,
     total: bool = False,
     n_parts: int | None = None,
-    persist=scratch_persist,
 ) -> Scan:
     """Global ``scan`` of ``df`` in ``order`` (a total order, except
     for ``dense_rank``, which ranks the distinct keys):
@@ -75,8 +74,7 @@ def prefix_scan(
     ``total`` adds the grand total (row count, distinct-key count,
     sum or min), read from the per-partition aggregate and joined back
     as a 1-row broadcast. ``n_parts`` sizes the range exchange
-    (default one partition per core); ``persist`` holds the local
-    frame across both branches."""
+    (default one partition per core)."""
     w = Window.partitionBy(_PID).orderBy(*order)
     if scan == "row_number":
         local, part = F.row_number().over(w), F.count(F.lit(1))
@@ -93,7 +91,7 @@ def prefix_scan(
     ranged = df.repartitionByRange(
         n_parts or default_parallelism(), *[F.col(c) for c in order]
     ).withColumn(_PID, F.spark_partition_id())
-    local_df = persist(ranged.withColumn(_LOCAL, local))
+    local_df = scratch_persist(ranged.withColumn(_LOCAL, local))
     parts = local_df.groupBy(_PID).agg(part.alias(_PART))
     before = fold(_PART).over(
         Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)

@@ -5594,13 +5594,16 @@ ORACLES["stream_late_audit"] = _stream_late_audit_sql()
 # Suffix-array substring dedup (r11, VERDICT r10 ask #5): brute-force
 # twin of operators/suffix.q_dedup_suffix. Materialize every doc-local
 # suffix (token lists — DuckDB's native list comparison IS
-# lexicographic with shorter-prefix-first, exactly the -1-padded rank
-# order the Spark side builds), sort with the same (doc_id, pos)
+# lexicographic with shorter-prefix-first, exactly Spark's array order
+# on the capped token-slice keys), sort with the same (doc_id, pos)
 # tiebreak, LCP adjacent pairs elementwise, take each position's max
 # over its two neighbors, then the same >=SUFFIX_MIN_TOKENS coverage
-# and gaps-and-islands merge. Comparison cap replays the Spark
-# arithmetic (2^ceil(log2(least(max_len, SUFFIX_CAP)))) — vacuous on
-# every fixture, but the contract if a corpus exceeds it.
+# and gaps-and-islands merge. Comparison cap keeps its own arithmetic
+# (2^max(1, ceil(log2(least(max_len, SUFFIX_CAP))))), which slices the
+# same suffixes as the Spark side's fixed SUFFIX_CAP (both are the
+# whole suffix unless max_len > SUFFIX_CAP, and then both are
+# SUFFIX_CAP) — vacuous on every fixture, an independent check of the
+# cap otherwise.
 def _dedup_suffix_sql() -> str:
     from .operators.suffix import SUFFIX_CAP, SUFFIX_MIN_TOKENS
 
@@ -5613,11 +5616,8 @@ def _dedup_suffix_sql() -> str:
         SELECT doc_id, t, len(t) AS n FROM toks WHERE len(t) >= 1
     ), params AS (
         -- cmp = 2^levels with levels = max(1, ceil(log2(min(maxlen,
-        -- cap)))) — the GREATEST(1, ...) floor mirrors the Spark
-        -- side's max(1, ...) literally (ADVICE r11: at maxlen=1 Spark
-        -- used levels=1 ⇒ cmp=2 while the oracle computed cmp=1;
-        -- vacuous for any real fixture but the declared
-        -- same-arithmetic contract now holds for all inputs).
+        -- cap)))): cmp >= min(maxlen, cap) and cmp <= cap, so the
+        -- slices equal the Spark side's fixed-cap keys.
         SELECT CAST(POWER(2, GREATEST(1, CEIL(LOG2(LEAST(MAX(n),
                     {SUFFIX_CAP}))))) AS BIGINT) AS cmp
         FROM toks2

@@ -7,8 +7,9 @@ it. Two classes of queries break that assumption:
 
 * streaming contract queries — calling them runs a real streaming job
   and returns a memory-sink scan that hides the aggregation plan;
-* driver-paced iterative queries (order_stat) — calling them pays the
-  real scans eagerly and returns a trivial ``LocalTableScan``.
+* queries that run bounded driver jobs while building (order_stat,
+  bloom_semi_join, pca_power) — calling them pays real scans eagerly,
+  and order_stat returns a trivial ``LocalTableScan``.
 
 ``analysis_plan_builders()`` maps each such query to a lazy builder that
 (a) has the exact output schema of the real query (the dtype sweep
@@ -114,41 +115,13 @@ def pca_power_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s.*")
 
 
-def dedup_suffix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy twin of ``q_dedup_suffix`` (which is driver-paced: the
-    real query collects the 1-row corpus bounds, then materializes
-    each prefix-doubling level with localCheckpoint — the bpe_train
-    lineage-truncation class). The twin runs the SAME suffix_report
-    tail with ONE doubling level, a fixed combine base, and
-    checkpoint=False (scratch persists): exact output schema, the
-    representative range-exchange/dense-rank/descent/island plan, no
-    build-time jobs."""
-    from ..functions.text import nonempty_tokens
-    from ..operators.suffix import suffix_report
-    from ..sources.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", nonempty_tokens("text").alias("t")
-    ).where(F.size("t") >= 1)
-    lens = toks.select(
-        "doc_id", F.size("t").cast("long").alias("n_tokens")
-    )
-    pos = toks.select("doc_id", F.posexplode("t")).select(
-        "doc_id",
-        (F.col("pos") + 1).alias("pos"),
-        F.col("col").alias("tok"),
-    )
-    return suffix_report(
-        pos, lens, levels=1, n_positions=1 << 30, checkpoint=False,
-        toks=toks,
-    )
-
-
 def analysis_plan_builders() -> dict:
     """Full name → lazy-builder map for the analysis tools: one twin
     per streaming contract query (every ``stream_*`` query, checked by
-    tests/test_plan_twins.py) plus the driver-paced twins."""
+    tests/test_plan_twins.py) plus one per query that runs driver jobs
+    while building (``order_stat``, ``bloom_semi_join``, ``pca_power``).
+    A query that builds lazily needs no twin: the tools read its own
+    plan."""
     from ..streaming.dedup import stream_dedup_plan
     from ..streaming.events import (
         stream_event_session_plan,
@@ -187,7 +160,6 @@ def analysis_plan_builders() -> dict:
         "stream_wordcount": stream_wordcount_plan,
         "stream_quality_gate": stream_quality_gate_plan,
         "order_stat": order_stat_plan,
-        "dedup_suffix": dedup_suffix_plan,
         "bloom_semi_join": bloom_semi_join_plan,
         "pca_power": pca_power_plan,
     }

@@ -391,9 +391,8 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
 
 @contextmanager
 def driver_paced_build_conf(spark: SparkSession):
-    """Disable AQE for a bounded driver-paced build sequence (Lloyd
-    fit collects, the suffix ladder's eager checkpoints), restoring
-    the session value after.
+    """Disable AQE for a bounded driver-paced build sequence (the
+    IVF and PQ Lloyd fit collects), restoring the session value after.
 
     Under AQE every exchange of every bounded collect/materialization
     becomes its own stage-materialization job so the plan can be
@@ -401,8 +400,7 @@ def driver_paced_build_conf(spark: SparkSession):
     TINY driver-paced queries over persisted inputs whose plans carry
     nothing AQE can improve (explicit partition counts or broadcast
     hints, kilobyte aggregates), so the extra jobs are pure driver
-    pacing — measured 66 → 16 jobs on the dedup_suffix ladder at
-    sf0.1 (r14). Queries planned OUTSIDE the context (the returned
+    pacing. Queries planned OUTSIDE the context (the returned
     lazy frames forced by the harness) still plan under AQE."""
     with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         yield

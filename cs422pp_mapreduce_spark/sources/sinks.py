@@ -164,31 +164,3 @@ def compact_parquet_dir(
     out.write.mode(mode).parquet(dst)
     return n_files
 
-
-def write_sorted_parquet(
-    df: DataFrame,
-    path: str,
-    sort_cols: Sequence[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Globally-ordered parquet layout: range-partition on the sort
-    key, sort within each partition, write. File k's max key ≤ file
-    k+1's min key, so a reader filtering on the sort column skips
-    whole files via parquet min/max stats — the manual form of
-    data-skipping clustering (what table formats call OPTIMIZE ...
-    ZORDER on one dimension).
-
-    Unlike ``orderBy().write`` this never funnels data through one
-    task: the range exchange samples split points and each partition
-    sorts locally — the first step of ``functions.scan.prefix_scan``,
-    with no offsets to compute."""
-    from ..session import default_parallelism
-
-    n = n_files or default_parallelism()
-    (
-        df.repartitionByRange(n, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -11,10 +11,7 @@ query hash after the changes):
 * streaming drain conf — state partitions pinned during the drain and
   the batch setting restored afterwards, including on error;
 * versioned upsert sink — an empty micro-batch writes NO new version
-  (the no-data-batch skip), a non-empty one still merges idempotently;
-* suffix rank tables — the vocab-ranked level 0 equals the dense rank
-  of positions by construction (explicit equality check on the smoke
-  fixture).
+  (the no-data-batch skip), a non-empty one still merges idempotently.
 """
 
 from __future__ import annotations
@@ -102,41 +99,3 @@ def test_upsert_versioned_skips_empty_batch(spark, tmp_path):
     # idempotent replay of batch 2 overwrites its own version only
     upsert_versioned(tdir, upd, 2, "k")
     assert table_versions(tdir) == [0, 2]
-
-
-def test_suffix_vocab_rank0_equals_positional_dense_rank(spark):
-    """rank_0 via the distinct-vocabulary broadcast join must equal the
-    dense rank computed directly over positions — the bit-identity the
-    r13 restructuring claims."""
-    from cs422pp_mapreduce_spark.functions.scan import prefix_scan
-    from cs422pp_mapreduce_spark.operators.suffix import suffix_rank_tables
-
-    pos = spark.createDataFrame(
-        [
-            (1, 1, "b"),
-            (1, 2, "a"),
-            (1, 3, "c"),
-            (2, 1, "a"),
-            (2, 2, "b"),
-        ],
-        "doc_id long, pos long, tok string",
-    )
-    ranks = suffix_rank_tables(pos, levels=1, n_positions=5, checkpoint=False)
-    got = {
-        (r["doc_id"], r["pos"]): r["r"]
-        for r in ranks[0].collect()
-    }
-    dense = prefix_scan(pos, ["tok"], "dense_rank")
-    ref = {
-        (r["doc_id"], r["pos"]): r["r"]
-        for r in dense.frame.select(
-            "doc_id", "pos", dense.value.alias("r")
-        ).collect()
-    }
-    assert got == ref == {
-        (1, 1): 2,
-        (1, 2): 1,
-        (1, 3): 3,
-        (2, 1): 1,
-        (2, 2): 2,
-    }

@@ -103,15 +103,15 @@ def test_stream_late_audit_drops_exactly_the_planted_rows(spark, sf_dir):
     assert total_dropped == n_planted
 
 
-def _brute_suffix_report(texts: dict[int, str], min_tokens: int):
+def _brute_suffix_report(texts: dict[int, str], min_tokens: int, cap: int):
     """Pure-Python brute force of the dedup_suffix semantics: for every
     doc-local suffix, its longest common prefix with ANY other suffix
-    (overlaps and within-doc repeats allowed), then >=min coverage and
-    island merge."""
+    (overlaps and within-doc repeats allowed), both cut to their first
+    ``cap`` tokens, then >=min coverage and island merge."""
     toks = {d: [w for w in t.split(" ") if w] for d, t in texts.items()}
     toks = {d: t for d, t in toks.items() if t}
     sfx = [
-        (d, i + 1, tuple(t[i:])) for d, t in toks.items()
+        (d, i + 1, tuple(t[i:i + cap])) for d, t in toks.items()
         for i in range(len(t))
     ]
 
@@ -155,17 +155,45 @@ def _brute_suffix_report(texts: dict[int, str], min_tokens: int):
     return out
 
 
-def test_dedup_suffix_matches_brute_force(spark, tmp_path):
-    """Prefix-doubling ranks + descent LCP + island merge == the
-    quadratic brute force, on a corpus engineered with every edge:
-    an exact duplicate pair, a doc-in-doc passage, an OVERLAPPING
-    within-doc repeat, identical suffixes of different docs (tie
-    block), and unique filler."""
+SUFFIX_REPORT_SCHEMA = [
+    ("doc_id", "bigint"),
+    ("n_tokens", "bigint"),
+    ("lrs_len", "bigint"),
+    ("dup_tokens", "bigint"),
+    ("n_spans", "bigint"),
+]
+
+
+def _suffix_report_vs_brute(spark, tmp_path, texts: dict[int, str]):
+    """q_dedup_suffix over ``texts`` as a documents table: (got, want)."""
     from cs422pp_mapreduce_spark.operators.suffix import (
+        SUFFIX_CAP,
         SUFFIX_MIN_TOKENS,
         q_dedup_suffix,
     )
 
+    docs = spark.createDataFrame(
+        [(d, t, "src", 0) for d, t in texts.items()],
+        "doc_id long, text string, source string, label long",
+    )
+    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    out = q_dedup_suffix(spark, str(tmp_path))
+    assert out.dtypes == SUFFIX_REPORT_SCHEMA
+    got = {
+        r["doc_id"]: (
+            r["n_tokens"], r["lrs_len"], r["dup_tokens"], r["n_spans"]
+        )
+        for r in out.collect()
+    }
+    return got, _brute_suffix_report(texts, SUFFIX_MIN_TOKENS, SUFFIX_CAP)
+
+
+def test_dedup_suffix_matches_brute_force(spark, tmp_path):
+    """One-sort SA + key LCP + island merge == the quadratic brute
+    force, on a corpus engineered with every edge: an exact duplicate
+    pair, a doc-in-doc passage, an OVERLAPPING within-doc repeat,
+    identical suffixes of different docs (tie block), and unique
+    filler."""
     passage = "alpha beta gamma delta epsilon zeta eta theta"
     texts = {
         0: passage + " one two three",
@@ -176,21 +204,48 @@ def test_dedup_suffix_matches_brute_force(spark, tmp_path):
         5: "tail end shared run p q r s t u",
         6: "other start but tail shared run p q r s t u",
     }
-    docs = spark.createDataFrame(
-        [(d, t, "src", 0) for d, t in texts.items()],
-        "doc_id long, text string, source string, label long",
-    )
-    docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-
-    got = {
-        r["doc_id"]: (
-            r["n_tokens"], r["lrs_len"], r["dup_tokens"], r["n_spans"]
-        )
-        for r in q_dedup_suffix(spark, str(tmp_path)).collect()
-    }
-    want = _brute_suffix_report(texts, SUFFIX_MIN_TOKENS)
+    got, want = _suffix_report_vs_brute(spark, tmp_path, texts)
     assert got == want
     assert 0 in want and 3 in want  # the planted structure was found
+
+
+def test_dedup_suffix_past_the_cap_matches_brute_force(spark, tmp_path):
+    """Two docs longer than SUFFIX_CAP tokens that agree on their first
+    SUFFIX_CAP + 8 tokens: the only place the cap binds. Their suffixes
+    tie on the capped keys, and the reported repeat clamps to the cap."""
+    from cs422pp_mapreduce_spark.operators.suffix import SUFFIX_CAP
+
+    shared = " ".join(f"w{i}" for i in range(SUFFIX_CAP + 8))
+    texts = {0: shared + " end0", 1: shared + " end1"}
+    got, want = _suffix_report_vs_brute(spark, tmp_path, texts)
+    assert got == want
+    assert want[0][1] == SUFFIX_CAP  # lrs_len clamped, not SUFFIX_CAP + 8
+
+
+def test_dedup_suffix_empty_corpus(spark, tmp_path):
+    """An empty documents table flows through: 0 rows, same schema."""
+    got, want = _suffix_report_vs_brute(spark, tmp_path, {})
+    assert got == want == {}
+
+
+def test_dedup_suffix_builds_without_a_job(spark, sf_dir):
+    """The cap does not depend on the data, so building the query
+    plans only: no Spark job starts before the caller's action."""
+    from cs422pp_mapreduce_spark.operators.suffix import q_dedup_suffix
+    from cs422pp_mapreduce_spark.sources.catalog import load_table
+
+    # a table's first load reads its parquet footer in a job; the
+    # catalog memo serves every later build
+    load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    group = "dedup_suffix_build"
+    sc.setJobGroup(group, "build only")
+    try:
+        q_dedup_suffix(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_dedup_suffix_matches_duckdb_oracle(spark, sf_dir):

@@ -191,8 +191,12 @@ class TestTrigramKNLogprob:
 
 
 class TestSuffixOracleCmpFloor:
-    """The oracle's cmp-cap arithmetic literally mirrors
-    the Spark side's levels = max(1, ceil(log2(min(maxlen, cap))))."""
+    """The oracle keeps its own cmp-cap arithmetic,
+    cmp = 2^max(1, ceil(log2(min(maxlen, cap)))), while the Spark side
+    slices every key at the fixed SUFFIX_CAP. The two compare the same
+    suffixes exactly when min(maxlen, SUFFIX_CAP) <= cmp <= SUFFIX_CAP:
+    below maxlen both slices are the whole suffix, and at the cap both
+    cut at SUFFIX_CAP."""
 
     def test_oracle_has_greatest_floor(self):
         from cs422pp_mapreduce_spark.oracles import _dedup_suffix_sql
@@ -200,22 +204,19 @@ class TestSuffixOracleCmpFloor:
         sql = _dedup_suffix_sql()
         assert "GREATEST(1, CEIL(LOG2(" in sql
 
-    @pytest.mark.parametrize("maxlen", [1, 2, 3, 7, 8, 1000])
+    @pytest.mark.parametrize("maxlen", [1, 2, 3, 7, 8, 511, 512, 513, 1000])
     def test_same_arithmetic_all_inputs(self, maxlen):
-        """cmp = 2^max(1, ceil(log2(min(maxlen, cap)))) on both sides,
-        including the maxlen=1 corner the old oracle got wrong (cmp=1
-        vs Spark's 2)."""
+        """The equivalence condition holds for every corpus length,
+        including maxlen=1 (cmp=2) and both sides of the cap."""
         import duckdb
 
         from cs422pp_mapreduce_spark.operators.suffix import SUFFIX_CAP
 
-        levels = max(1, math.ceil(math.log2(min(maxlen, SUFFIX_CAP))))
-        spark_cmp = 1 << levels
         oracle_cmp = duckdb.sql(
             f"SELECT CAST(POWER(2, GREATEST(1, CEIL(LOG2(LEAST({maxlen},"
             f" {SUFFIX_CAP}))))) AS BIGINT)"
         ).fetchone()[0]
-        assert oracle_cmp == spark_cmp
+        assert min(maxlen, SUFFIX_CAP) <= oracle_cmp <= SUFFIX_CAP
 
 
 class TestPerplexityGate:

@@ -145,9 +145,7 @@ def _range_hits(tree):
 
 def test_range_exchange_lives_only_in_the_kernel():
     """A range exchange or a partition id outside functions/scan.py is
-    a new copy of the prefix-scan round. The one exception,
-    sources/sinks.write_sorted_parquet, range-partitions a sorted
-    write and computes no offsets."""
+    a new copy of the prefix-scan round."""
     package = pathlib.Path(__file__).resolve().parents[1] / (
         "cs422pp_mapreduce_spark"
     )
@@ -156,7 +154,4 @@ def test_range_exchange_lives_only_in_the_kernel():
         rel = path.relative_to(package).as_posix()
         for owner in _range_hits(ast.parse(path.read_text())):
             hits.add(rel if rel == "functions/scan.py" else f"{rel}::{owner}")
-    assert hits == {
-        "functions/scan.py",
-        "sources/sinks.py::write_sorted_parquet",
-    }
+    assert hits == {"functions/scan.py"}

@@ -201,5 +201,4 @@ def test_state_imports_stay_in_their_homes():
         "session.py",
         "operators/dedup.py",
         "operators/relational.py",
-        "operators/suffix.py",
     }

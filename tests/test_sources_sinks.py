@@ -204,38 +204,6 @@ def test_compact_parquet_dir_reduces_files(spark, sf_dir, tmp_path):
     assert a == b
 
 
-def test_write_sorted_parquet_global_order(spark, sf_dir, tmp_path):
-    import os
-
-    import pyarrow.parquet as pq
-
-    from cs422pp_mapreduce_spark.sources.catalog import load_table
-    from cs422pp_mapreduce_spark.sources.sinks import write_sorted_parquet
-
-    p = str(tmp_path / "sorted")
-    write_sorted_parquet(
-        load_table(spark, sf_dir, "orders"), p, ["o_totalprice"], n_files=4
-    )
-    files = sorted(
-        os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
-    )
-    assert len(files) >= 2
-    # per-file [min, max] ranges must not overlap across files → a
-    # predicate on the sort column can skip whole files
-    ranges = []
-    for f in files:
-        col = pq.read_table(f, columns=["o_totalprice"])["o_totalprice"]
-        vals = col.to_pylist()
-        assert vals == sorted(vals)  # sorted within file
-        ranges.append((min(vals), max(vals)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2
-    # nothing lost
-    total = sum(pq.read_metadata(f).num_rows for f in files)
-    assert total == load_table(spark, sf_dir, "orders").count()
-
-
 def test_events_ts_reads_as_ltz_for_every_physical_layout(spark, tmp_path):
     """The driver has shipped events.ts as int64-nanos AND as
     timestamp[us] (NTZ) across rounds; load_table must yield TIMESTAMP

@@ -174,8 +174,8 @@ ALLOW: dict[str, dict[str, str]] = {
 WINDOW_OK = {
     "global_rank": "offset frame is O(partitions) rows",
     "dedup_suffix": (
-        "offset frames are O(partitions) rows (one per prefix-"
-        "doubling dense-rank pass of the global_rank kernel)"
+        "offset frame is O(partitions) rows (the one row-number "
+        "pass of prefix_scan that builds the suffix array)"
     ),
     "quality_deciles": "offset frame is O(partitions) rows",
     "perplexity_gate": "offset frame is O(partitions) rows",
